@@ -49,17 +49,8 @@ DOUBLE_FIELDS = {"millis": "millis"}
 BOOL_FIELDS = {"is_collscan": "is_collscan"}
 
 
-def res(s=None, d=None, b=None, kind="missing") -> Column:
-    return F.struct(
-        (s if s is not None else F.lit(None).cast("string")).alias("s"),
-        (d if d is not None else F.lit(None).cast("double")).alias("d"),
-        (b if b is not None else F.lit(None).cast("boolean")).alias("b"),
-        F.lit(kind).alias("kind") if isinstance(kind, str) else kind.alias("kind"),
-    )
-
-
 def res_sql(s=None, d=None, b=None, kind="'missing'") -> str:
-    """SQL text of one typed struct<s,d,b,kind> (see :func:`res`)."""
+    """SQL text of one typed struct<s,d,b,kind>."""
     return (
         f"named_struct('s', {s or 'cast(null as string)'}, "
         f"'d', {d or 'cast(null as double)'}, "
@@ -141,14 +132,6 @@ def with_typed_fields(df: DataFrame) -> DataFrame:
 
     return df.withColumn(
         "fields_typed", memo_expr("fields.typed_fields", _typed_fields_expr)
-    )
-
-
-def resolve_field(name: Column) -> Column:
-    """Field name -> typed struct<s,d,b,kind> ('missing' when absent).
-    One map lookup; requires :func:`with_typed_fields` upstream."""
-    return F.coalesce(
-        F.element_at(F.col("fields_typed"), F.coalesce(name, F.lit(""))), res()
     )
 
 

@@ -218,22 +218,6 @@ def _mongo_slow_query_routes_sql() -> str:
     )
 
 
-def kvmeta_alert_routes() -> Column:
-    return F.expr(_kvmeta_alert_routes_sql())
-
-
-def process_metrics_routes() -> Column:
-    return F.expr(_process_metrics_routes_sql())
-
-
-def rds_slow_query_routes() -> Column:
-    return F.expr(_rds_slow_query_routes_sql())
-
-
-def mongo_slow_query_routes() -> Column:
-    return F.expr(_mongo_slow_query_routes_sql())
-
-
 def _mongo_field_exprs() -> dict[str, Column]:
     # guard first: CaseWhen/And short-circuit in codegen, so the regex
     # (and the extracts behind `matched`) never run on non-mongo lines

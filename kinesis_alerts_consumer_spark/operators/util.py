@@ -41,7 +41,7 @@ def run_overlapped(*thunks: Callable[[], Any]) -> list[Any]:
     (guide §2.6: actions are only sequential because driver code calls
     them sequentially) and return their results in argument order.
 
-    The r15 driver-gap profiles motivated this: the incremental-dedup
+    Driver-gap profiles motivated this: the incremental-dedup
     queries spend 60-65% of their wall in dead driver time between
     ~37 micro-jobs (llm40: 2.71 s wall = 0.98 s job-busy + 1.73 s
     gaps), and each independent action chain carries its own
@@ -78,14 +78,15 @@ def spread_for_compute(df: DataFrame, min_factor: int = 2) -> DataFrame:
     ``spark.graft.spreadForCompute=off`` to skip probe and shuffle
     entirely (inputs already arrive well-split).
 
-    KNOWN BLIND SPOT (r6 rehearsal): the probe counts SPLITS, but a
-    parquet scan parallelizes only down to row-group granularity — a
-    file with one giant row group yields many byte-range splits of
-    which all but one are empty, so the probe sees "plenty of
-    partitions" while one task does all the work. The durable fix is
-    at WRITE time (bound row_group_size so groups ≤ maxPartitionBytes
-    — scripts/make_scale_data.py does; ingest jobs at scale must
-    too); probing actual row distribution would cost a full pass.
+    KNOWN BLIND SPOT (seen in a scale rehearsal): the probe counts
+    SPLITS, but a parquet scan parallelizes only down to row-group
+    granularity — a file with one giant row group yields many
+    byte-range splits of which all but one are empty, so the probe
+    sees "plenty of partitions" while one task does all the work. The
+    durable fix is at WRITE time (bound row_group_size so groups ≤
+    maxPartitionBytes — scripts/make_scale_data.py does; ingest jobs
+    at scale must too); probing actual row distribution would cost a
+    full pass.
     """
     try:
         if df.sparkSession.conf.get("spark.graft.spreadForCompute", "auto") == "off":

@@ -134,12 +134,16 @@ def batch_log_volume(parsed_batch: DataFrame, batch_id: int = 0) -> DataFrame:
     )
 
 
-def max_delay_seconds(dd_points_df: DataFrame, now: Column | None = None) -> DataFrame:
-    """A2: one-row ``max(now - point_ts)`` in seconds, floored at 0
-    (delay.go:17-33 ignores zero timestamps; nulls drop here)."""
+def max_delay_agg(ts: Column, now: Column | None = None) -> Column:
+    """A2 aggregate ``max_log_delay``: ``max(now - ts)`` in epoch
+    seconds, floored at 0 (delay.go:17-33 ignores zero timestamps;
+    nulls drop here). ``now`` defaults to the query's current time."""
     now = now if now is not None else F.unix_timestamp(F.current_timestamp())
-    return dd_points_df.agg(
-        F.coalesce(
-            F.greatest(F.max(now - F.col("ts")), F.lit(0)), F.lit(0)
-        ).alias("max_log_delay")
-    )
+    return F.coalesce(
+        F.greatest(F.max(now - ts), F.lit(0)), F.lit(0)
+    ).alias("max_log_delay")
+
+
+def max_delay_seconds(dd_points_df: DataFrame, now: Column | None = None) -> DataFrame:
+    """A2: one-row :func:`max_delay_agg` over the points' ``ts``."""
+    return dd_points_df.agg(max_delay_agg(F.col("ts"), now))

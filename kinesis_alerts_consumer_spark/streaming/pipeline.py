@@ -15,10 +15,14 @@ dedicated metrics goroutine; A2 max-delay inside the sink).
 Dev/test sources: text-file directory stream and ``availableNow``
 bounded replay (used by the streaming-equivalence tests). The Kinesis
 connector is configuration, not code: any DataFrame-producing
-``readStream`` source slots in unchanged — at the 100 TB target the
-source parallelism (shards / partitions) maps 1:1 onto tasks and the
-pipeline itself stays shuffle-free up to the sink; only the A1 rollup
-shuffles, on (env, app, team) — low cardinality, bounded state.
+``readStream`` source slots in unchanged. A large micro-batch's source
+parallelism (shards / partitions / files) maps 1:1 onto tasks and the
+record pipeline runs shuffle-free up to the sink. A small micro-batch
+(at most half as many splits as cores) first gets a round-robin spread
+(:func:`..operators.util.spread_for_compute`), so the interpreted
+parse->route->project work runs on every core rather than one task per
+file. The A1 rollup shuffles on (env, app, team) — low cardinality,
+bounded state.
 
 Micro-batch bounds (reference batch=100 / 5 s, main.go:54-59) map to
 ``trigger(processingTime='5 seconds')`` + source rate options
@@ -30,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.util import spread_for_compute
 from ..pipeline import process_lines
 from .sinks import MetricsSink
 
@@ -66,7 +71,8 @@ def replay_lines(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         sink.process_batch(
-            process_lines(batch_df, "value", deploy_env), batch_id
+            process_lines(spread_for_compute(batch_df), "value", deploy_env),
+            batch_id,
         )
 
     return (

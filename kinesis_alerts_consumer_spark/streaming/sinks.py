@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import itertools
 import json
+import logging
 import os
 import re
 import time
@@ -36,14 +37,16 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_log = logging.getLogger(__name__)
+
 # CloudWatch PutMetricData accepts at most 20 data per call
 # (allowlist.go:6-7 pins the constraint; the reference keeps its
 # allowlist small enough to fit one call — the sink enforces it).
 CW_MAX_DATA_PER_CALL = 20
 
-# Driver-collect cap for the CW path: the collect is safe ONLY because
-# the allowlist bounds the row count; this cap enforces that premise
-# (≈500 calls' worth) instead of trusting it.
+# Driver-collect cap for injected CW transports: the collect is safe
+# ONLY because the allowlist bounds the row count; this cap enforces
+# that premise (≈500 calls' worth) instead of trusting it.
 _CW_COLLECT_BOUND = 10_000
 
 
@@ -96,13 +99,11 @@ class MetricsSink:
         # (shutil/os.path); on an object-store out_dir those deletes
         # silently no-op and stage dirs accumulate unbounded, and
         # exactly-once replay silently degrades (stale partitions
-        # survive). Enforce the assumption instead of documenting it
-        # (ADVICE r10): reject URI schemes the cleanup can't delete.
-        # Any scheme prefix counts (r11 review: the first `://`-only
-        # regex let the common Hadoop single-slash form `file:/path`,
-        # uppercase schemes, and `s3:/bucket` slip through to the
-        # exact silent-leak path the guard exists to close). Schemes
-        # are case-insensitive per RFC 3986.
+        # survive). Enforce the assumption instead of documenting it:
+        # reject URI schemes the cleanup can't delete. Any scheme
+        # prefix counts, not only `://` forms: the Hadoop single-slash
+        # form `file:/path`, uppercase schemes and `s3:/bucket` must
+        # not slip through. Schemes are case-insensitive per RFC 3986.
         m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):", self.out_dir)
         if m and m.group(1).lower() != "file":
             raise ValueError(
@@ -114,7 +115,7 @@ class MetricsSink:
                 "before enabling object-store output."
             )
         if m:  # file URI — resolve so os.path/shutil and Spark agree
-            # Percent-decode the path (ADVICE r11): Hadoop/Spark decode
+            # Percent-decode the path: Hadoop/Spark decode
             # URI escapes, so `file:///tmp/pct%20dir` writes under
             # `/tmp/pct dir` — an undecoded self.out_dir would point
             # shutil cleanup at a different directory, the exact silent
@@ -179,53 +180,51 @@ class MetricsSink:
         )
 
     def process_batch(self, projected: DataFrame, batch_id: int = 0) -> None:
-        from ..operators.project import cw_data, dd_points, quarantine
-
-        # The batch is consumed by FOUR actions (quarantine write,
-        # delay gauge, DD submit, CW chunks), so the expensive
-        # interpreted parse->route->project lineage must evaluate
-        # once — but in a parquet STAGING dir, not an executor-memory
-        # cache: persist() built 100+ MiB columnar batches per task
-        # concurrently across 32 threads and OOMed the 8g heap at the
-        # sf100 rehearsal (r9; 20M sampled events in one availableNow
-        # batch), the same grows-with-data-in-memory shape the
-        # st02-04 scratch-sink topology already bans. Parquet writers
-        # stream rows through bounded row-group buffers, and each
-        # downstream action re-reads columns it needs from disk. The
-        # explicit schema on the read-back keeps empty micro-batches
-        # working (no part files to infer from). Same one-batch blast
-        # radius as _write_idempotent on replay: a re-run batch
-        # rewrites its own stage dir first.
-        # Staging cleanup is LOCAL-FS-only (shutil/os.path), the same
-        # assumption _write_idempotent's stale-partition delete makes;
-        # __post_init__ REJECTS non-local out_dir schemes so this can
-        # never silently no-op on an object store (ADVICE r10). The
-        # staging write itself sits INSIDE the try (ADVICE r9): a
-        # failed write/read-back otherwise leaked its stage dir until
-        # the same batch_id happened to replay.
         import shutil
 
+        from pyspark.sql import Observation
+
+        from ..operators.project import cw_data, dd_points, quarantine
+        from ..operators.volume import max_delay_agg
+
+        # Three actions consume the batch: the quarantine write, the DD
+        # submit and the CW submit. The expensive interpreted
+        # parse->route->project lineage therefore evaluates once, into
+        # a parquet STAGING dir that each action re-reads, rather than
+        # into an executor-memory cache: persist() builds whole
+        # columnar batches per task and OOMed the 8g heap on a
+        # 20M-event availableNow batch, while parquet writers stream
+        # rows through bounded row-group buffers. The explicit schema
+        # on the read-back keeps empty micro-batches working (no part
+        # files to infer from). A replayed batch rewrites its own stage
+        # dir first, the same one-batch blast radius as
+        # _write_idempotent. The staging write sits inside the try, so
+        # a failed write does not leak its dir; cleanup is
+        # local-fs-only, which __post_init__ enforces.
+        #
+        # The A2 max-delay gauge (alerts_consumer.go:250-255) is an
+        # Observation on the staging write, not an action of its own:
+        # every DD point of a clean record carries the record's epoch
+        # ts, so the max over each record's point ts equals the max
+        # over dd_points.
         stage = self._path("stage", f"batch_id={int(batch_id)}")
         shutil.rmtree(stage, ignore_errors=True)
         schema = projected.schema
         spark = projected.sparkSession
+        delay = Observation()
         try:
-            projected.write.mode("overwrite").parquet(stage)
+            projected.observe(
+                delay, max_delay_agg(F.array_max(F.col("dd_metrics.ts")))
+            ).write.mode("overwrite").parquet(stage)
             projected = spark.read.schema(schema).parquet(stage)
-            dd = dd_points(projected)
-            cw = cw_data(projected)
-            quar = quarantine(projected)
 
-            self._write_idempotent(quar, batch_id, "quarantine")
+            self._write_idempotent(
+                quarantine(projected), batch_id, "quarantine"
+            )
 
-            # A2 max-delay gauge, computed from the batch's points
-            # (alerts_consumer.go:250-255), emitted like the
-            # reference's 15 s logMaxDelay (delay.go:35-39) — one
-            # whole file per batch_id so a replay overwrites its own
-            # prior attempt (same idempotence story as the parquet).
-            from ..operators.volume import max_delay_seconds
-
-            delay_row = max_delay_seconds(dd).collect()[0]
+            # Emitted like the reference's 15 s logMaxDelay
+            # (delay.go:35-39): one whole file per batch_id, so a
+            # replay overwrites its own prior attempt.
             os.makedirs(self._path("gauges"), exist_ok=True)
             with open(
                 self._path("gauges", f"batch-{int(batch_id):06d}.json"), "w"
@@ -235,12 +234,13 @@ class MetricsSink:
                         {
                             "batch_id": batch_id,
                             "gauge": "max_log_delay",
-                            "value": float(delay_row["max_log_delay"]),
+                            "value": float(delay.get["max_log_delay"]),
                         }
                     )
                     + "\n"
                 )
 
+            dd = dd_points(projected)
             submit = self.submit_dd or (
                 lambda df: self._write_idempotent(
                     df, batch_id, "dd", tag=True
@@ -263,55 +263,55 @@ class MetricsSink:
                 # PartialSendBatchError analogue: park the whole batch.
                 self._write_idempotent(dd, batch_id, "failed")
 
-            # CW: best-effort, only region-tagged data, never fails
-            # batch. One submit call per (tag, <=20-datum chunk) —
-            # each call maps to one PutMetricData against that
-            # region's API (alerts_consumer.go:272-278), which caps
-            # MetricData at 20 (allowlist.go:6-7).
-            #
-            # The CW side is bounded-small by construction (allowlisted
-            # series only, allowlist.go:8-10), so it is collected ONCE
-            # — a single Spark action per batch — and chunked
-            # client-side. Rows are sorted by a deterministic total key
-            # before chunking, so chunk membership is stable across
-            # recomputation (at-least-once replays re-send identical
-            # chunks rather than reshuffled ones).
+            # CW: best-effort, only region-tagged data; a failure is
+            # logged and never fails the batch (alerts_consumer.go:271-281).
             try:
-                cw_submit = self.submit_cw or (
-                    lambda df: df.write.mode("append")
-                    .partitionBy("tag")
-                    .parquet(self._path("cw"))
-                )
-                cw_regional = cw.filter(F.col("tag") != "default")
-                # Keep the driver-collect bound HONEST: the CW side is
-                # small only because the allowlist is small. take(N+1)
-                # caps driver memory even if the allowlist grows
-                # pathologically; the raise lands in the outer
-                # never-fail except (CW stays best-effort, the batch
-                # proceeds — alerts_consumer.go:271-281 logs and
-                # continues the same way).
-                cw_rows = cw_regional.take(_CW_COLLECT_BOUND + 1)
-                if len(cw_rows) > _CW_COLLECT_BOUND:
-                    raise RuntimeError(
-                        "CloudWatch side exceeded the allowlist-bounded "
-                        f"collect cap ({_CW_COLLECT_BOUND} rows/batch); "
-                        "shrink the allowlist or move CW submit "
-                        "executor-side like DatadogTransport"
+                cw = cw_data(projected).filter(F.col("tag") != "default")
+                if self.submit_cw is None:
+                    # The local stand-in has no per-call limit: one
+                    # partitioned append for the whole batch.
+                    cw.write.mode("append").partitionBy("tag").parquet(
+                        self._path("cw")
                     )
-                cw_rows.sort(key=lambda r: (r["tag"], str(tuple(r))))
-                spark = projected.sparkSession
-                schema = cw_regional.schema
-                for _tag, grouped in itertools.groupby(
-                    cw_rows, key=lambda r: r["tag"]
-                ):
-                    rows = list(grouped)
-                    for i in range(0, len(rows), CW_MAX_DATA_PER_CALL):
-                        cw_submit(
-                            spark.createDataFrame(
-                                rows[i : i + CW_MAX_DATA_PER_CALL], schema
-                            )
-                        )
-            except Exception:  # noqa: BLE001
-                pass
+                else:
+                    self._submit_cw_chunks(cw)
+            except Exception:  # noqa: BLE001 — best-effort, never fails
+                _log.warning(
+                    "CloudWatch submit failed for batch %d; continuing",
+                    batch_id,
+                    exc_info=True,
+                )
         finally:
             shutil.rmtree(stage, ignore_errors=True)
+
+    def _submit_cw_chunks(self, cw: DataFrame) -> None:
+        """One ``submit_cw`` call per (tag, <=20-datum chunk): each call
+        maps to one PutMetricData against that region's API
+        (alerts_consumer.go:272-278), which caps MetricData at 20
+        (allowlist.go:6-7).
+
+        The CW side is bounded-small by construction (allowlisted
+        series only, allowlist.go:8-10), so it is collected once and
+        chunked client-side. ``take(N+1)`` keeps that premise honest:
+        if the allowlist grows pathologically, the raise lands in the
+        caller's best-effort handler instead of exhausting driver
+        memory. Rows are sorted by a deterministic total key before
+        chunking, so at-least-once replays re-send identical chunks."""
+        rows = cw.take(_CW_COLLECT_BOUND + 1)
+        if len(rows) > _CW_COLLECT_BOUND:
+            raise RuntimeError(
+                "CloudWatch side exceeded the allowlist-bounded "
+                f"collect cap ({_CW_COLLECT_BOUND} rows/batch); "
+                "shrink the allowlist or move CW submit "
+                "executor-side like DatadogTransport"
+            )
+        rows.sort(key=lambda r: (r["tag"], str(tuple(r))))
+        spark = cw.sparkSession
+        for _tag, grouped in itertools.groupby(rows, key=lambda r: r["tag"]):
+            chunk = list(grouped)
+            for i in range(0, len(chunk), CW_MAX_DATA_PER_CALL):
+                self.submit_cw(
+                    spark.createDataFrame(
+                        chunk[i : i + CW_MAX_DATA_PER_CALL], cw.schema
+                    )
+                )

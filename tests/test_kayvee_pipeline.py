@@ -350,3 +350,113 @@ def test_cw_submit_chunks_at_20(spark, tmp_path):
     assert sorted(len(c) for c in calls) == [5, 20, 20]
     assert all(len({t for t, _ in c}) == 1 for c in calls)
     assert sum(len(c) for c in calls) == 45
+
+
+# --- MetricsSink per-batch work ---------------------------------------
+
+
+def cw_line(region, i=0, header=HEADER):
+    return header + body(
+        [alert_route(series="ContainerExitCount", dims=("dimension1",),
+                     rule="unexpected-stop")],
+        category="app_lifecycle", level="info", title=f"t{i}",
+        dimension1=f"dim-{i}", region=region, type="counter", value=1,
+    )
+
+
+def jobs_started(spark, fn):
+    """Number of Spark jobs ``fn`` starts, read from the status tracker
+    under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    group = f"jobs-started-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_metrics_sink_default_jobs_per_batch(spark, tmp_path):
+    """The default sink starts four jobs per batch: the staging write
+    (the delay gauge rides on it as an Observation), quarantine, DD,
+    and ONE CloudWatch write for all region tags — the same count for
+    three regions as for one."""
+    from kinesis_alerts_consumer_spark.streaming.sinks import MetricsSink
+
+    counts = {}
+    for name, regions in (("three", ["us-west-1", "us-east-1", "eu-west-1"]),
+                          ("one", ["us-west-1"] * 3)):
+        batch = run(spark, [cw_line(regions[i % 3], i) for i in range(9)]
+                    + ["garbage line"])
+        sink = MetricsSink(str(tmp_path / name))
+        counts[name] = jobs_started(spark, lambda: sink.process_batch(batch, 0))
+        cw = spark.read.parquet(str(tmp_path / name / "cw"))
+        assert cw.count() == 9
+        assert {r.tag for r in cw.select("tag").distinct().collect()} == set(
+            regions)
+    assert counts == {"three": 4, "one": 4}
+
+
+def test_metrics_sink_gauge_matches_max_delay_seconds(
+    spark, tmp_path, monkeypatch
+):
+    """The gauge written through the staging write's Observation equals
+    ``max_delay_seconds(dd_points(...))`` under the same fixed ``now``:
+    quarantined and ignored records (stamped 1970 here) do not count."""
+    from kinesis_alerts_consumer_spark.operators import volume
+    from kinesis_alerts_consumer_spark.streaming.sinks import MetricsSink
+
+    now = F.lit(EPOCH + 100)
+    agg = volume.max_delay_agg
+    monkeypatch.setattr(volume, "max_delay_agg",
+                        lambda ts, _now=None: agg(ts, now))
+    earlier = HEADER.replace("18:39:07", "18:29:07")  # EPOCH - 600
+    lines = [
+        HEADER + body([alert_route()], value=1),
+        earlier + body([alert_route(stat="gauge")], value=2.5),
+        cw_line("us-west-1", header=earlier),
+        ZERO_HEADER + body([alert_route()], value="12345"),  # quarantined
+        ZERO_HEADER + json.dumps({"_kvmeta": {"routes": []}}),  # ignored
+    ]
+    out = run(spark, lines)
+    want = volume.max_delay_seconds(dd_points(out), now=now).first()[0]
+    assert want == 700
+
+    MetricsSink(str(tmp_path / "out")).process_batch(out, batch_id=5)
+    with open(tmp_path / "out" / "gauges" / "batch-000005.json") as fh:
+        gauge = json.loads(fh.read())
+    assert gauge == {"batch_id": 5, "gauge": "max_log_delay",
+                     "value": float(want)}
+
+
+def test_cw_failure_is_logged_and_never_fails_the_batch(
+    spark, tmp_path, caplog
+):
+    """CloudWatch stays best-effort (alerts_consumer.go:271-281): a
+    raising transport leaves DD and quarantine written and logs a
+    warning naming the batch."""
+    import logging
+
+    from kinesis_alerts_consumer_spark.streaming.sinks import MetricsSink
+
+    def broken(df):
+        raise RuntimeError("CloudWatch unreachable (test)")
+
+    out = run(spark, [cw_line("us-west-1", i) for i in range(3)]
+              + ["garbage line"])
+    sink = MetricsSink(str(tmp_path / "out"), submit_cw=broken)
+    with caplog.at_level(logging.WARNING,
+                         logger="kinesis_alerts_consumer_spark.streaming.sinks"):
+        sink.process_batch(out, batch_id=3)
+
+    assert spark.read.parquet(str(tmp_path / "out" / "dd")).count() == 3
+    assert spark.read.parquet(str(tmp_path / "out" / "quarantine")).count() == 1
+    warned = [r for r in caplog.records if "batch 3" in r.getMessage()]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "CloudWatch unreachable" in str(warned[0].exc_info[1])

@@ -103,6 +103,52 @@ def test_replay_matches_batch(spark, tmp_path):
     assert all(g["value"] >= 0 for g in gauges)
 
 
+def test_replay_spread_matches_unspread(spark, tmp_path):
+    """A 2-file micro-batch scans as two splits, so ``replay_lines``
+    spreads it over every core before the projection. The sink's
+    dd/quarantine/cw rows are identical with the spread on and with
+    ``spark.graft.spreadForCompute=off``."""
+    lines = make_lines(40) + [
+        H.format(i=i) + json.dumps({
+            "title": f"t{i}", "dimension1": f"dim-{i}", "value": 1,
+            "region": ("us-west-1", "eu-west-1")[i % 2],
+            "_kvmeta": {"team": "t", "routes": [{
+                "type": "alerts", "series": "ContainerExitCount",
+                "dimensions": ["dimension1"], "stat_type": "counter",
+                "value_field": "value", "rule": "unexpected-stop"}]},
+        })
+        for i in range(6)
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-0.txt").write_text("\n".join(lines[::2]) + "\n")
+    (src / "part-1.txt").write_text("\n".join(lines[1::2]) + "\n")
+    assert spark.read.text(str(src)).rdd.getNumPartitions() * 2 <= (
+        spark.sparkContext.defaultParallelism)
+
+    def replay(name):
+        out = str(tmp_path / name)
+        replay_lines(spark, str(src), out, str(tmp_path / f"ck-{name}"),
+                     deploy_env="test-env").awaitTermination(120)
+        return {
+            kind: sorted(
+                json.dumps(r.asDict(recursive=True), sort_keys=True,
+                           default=str)
+                for r in spark.read.parquet(os.path.join(out, kind)).collect()
+            )
+            for kind in ("dd", "quarantine", "cw")
+        }
+
+    spread = replay("spread")
+    spark.conf.set("spark.graft.spreadForCompute", "off")
+    try:
+        unspread = replay("unspread")
+    finally:
+        spark.conf.unset("spark.graft.spreadForCompute")
+    assert spread == unspread
+    assert [len(spread[k]) for k in ("dd", "quarantine", "cw")] == [46, 1, 6]
+
+
 def test_hourly_rollup_stream_matches_batch(spark, tmp_path):
     register_tables(spark, SF_SMOKE)
     q = (
