@@ -33,8 +33,18 @@ from .util import spread_for_compute
 
 # 60-bit integer hash from md5 — portable: Spark conv(hex,16,10),
 # DuckDB ('0x'||hex)::BIGINT. 15 hex chars keeps it positive signed.
+def _hex60(col: Column) -> Column:
+    """The first 15 lowercase hex characters of ``md5(col)``: fixed
+    width, so string order IS numeric order."""
+    return F.substring(F.md5(col), 1, 15)
+
+
+def _hex60_value(hex60: Column) -> Column:
+    return F.conv(hex60, 16, 10).cast("bigint")
+
+
 def _hash60(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+    return _hex60_value(_hex60(col))
 
 
 def _tokens(text: Column) -> Column:
@@ -88,11 +98,6 @@ def shingle_strings(text: Column, n: int) -> Column:
     return F.regexp_extract_all(norm, F.lit(pattern), F.lit(1))
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array column (empty if < n words)."""
-    return shingle_strings(text, n)
-
-
 def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup groups: one row per distinct text with the kept
     (minimum) doc_id and the duplicate count. Groups on md5(text) so
@@ -114,13 +119,22 @@ def minhash_signatures(
     min, NOT as array_min(transform(...)): higher-order lambdas are
     CodegenFallback, so the transform form evaluates md5+conv
     INTERPRETED per shingle per hash — measured 140x wall-clock at
-    100x rows (sf10 rehearsal, r6) with one straggler core pegged on
-    NumberConverter. The exploded form keeps the hash inside
-    whole-stage codegen (same device simhash16 uses) and the groupBy
-    ships only (doc_id, 4 longs) after map-side partial min — the
-    explode never hits the wire. explode_outer keeps shingle-less
-    docs as all-null signatures, exactly like array_min(transform)
-    over an empty array."""
+    100x rows (sf10 rehearsal) with one straggler core pegged on
+    NumberConverter. The exploded form keeps md5 inside whole-stage
+    codegen (same device simhash16 uses).
+
+    The min is taken over the 15-character hex prefixes
+    (:func:`_hex60`), and ``conv`` runs once per (doc, hash) on the
+    winner: fixed-width lowercase hex orders as its numeric value, so
+    ``conv(min(hex))`` equals ``min(_hash60(...))`` bit for bit, and
+    conv's cost no longer scales with the shingle count. A string min
+    has no fixed-width hash-aggregate buffer, so the aggregate plans as
+    a sort aggregate; it keeps its map-side partial min, and the
+    groupBy ships (doc_id, ``num_hashes`` 15-character strings) per
+    doc and task instead of (doc_id, longs) — the explode never hits
+    the wire. explode_outer keeps shingle-less docs as all-null
+    signatures (min over NULL, conv of NULL), exactly like
+    array_min(transform) over an empty array."""
     ex = (
         spread_for_compute(docs)
         .select(
@@ -130,9 +144,13 @@ def minhash_signatures(
     )
     return ex.groupBy("doc_id").agg(
         *[
-            F.min(_hash60(F.concat(F.lit(f"{j}:"), F.col("_s")))).alias(f"mh{j}")
+            F.min(_hex60(F.concat(F.lit(f"{j}:"), F.col("_s")))).alias(f"mh{j}")
             for j in range(num_hashes)
         ]
+    ).select(
+        "doc_id",
+        *[_hex60_value(F.col(f"mh{j}")).alias(f"mh{j}")
+          for j in range(num_hashes)],
     )
 
 
@@ -500,8 +518,8 @@ def suggest_lsh_sizing(
 
 
 def _overcap_light(over: DataFrame, size_col, stats: dict) -> None:
-    """Fill the shared over-cap warning light (r12 review: this block
-    was copy-pasted at four sites and had already drifted on the
+    """Fill the shared over-cap warning light (one definition: the
+    block was once copy-pasted at four sites and had drifted on the
     int() wrap): ``over`` is the slice of bucket rows ABOVE the cap,
     ``size_col`` its member-count column/expression. One narrow
     SEPARATE aggregate action; callers must keep it off the returned
@@ -522,15 +540,14 @@ def _zero_light(stats: dict) -> None:
 
 def _new_skew_light(new_idx: DataFrame, keys: list, stats: dict) -> None:
     """New-batch bucket-skew warning light for the incremental
-    operators (VERDICT r13 item 5): ``max_bucket`` caps OLD-side
-    membership only — per-bucket candidate volume is
-    ``old_members(<=cap) x new_members``, so a hot bucket in the
-    INGEST batch still multiplies every capped old bucket by the
-    whole batch. That is linear in batch size (not a scale-killer,
-    by design), but it was the one skew axis in the family without a
-    light. Reports the max new-side bucket occupancy among probed
-    keys (every new-side key IS probed — matched_keys are derived
-    from the batch). Same contract as :func:`_overcap_light`: one
+    operators: ``max_bucket`` caps OLD-side membership only —
+    per-bucket candidate volume is ``old_members(<=cap) x
+    new_members``, so a hot bucket in the INGEST batch still
+    multiplies every capped old bucket by the whole batch. That is
+    linear in batch size (not a scale-killer, by design), but it was
+    the one skew axis in the family without a light. Reports the max
+    new-side bucket occupancy among probed keys (every new-side key IS
+    probed — the semi filter's keys are the batch's own). Same contract as :func:`_overcap_light`: one
     narrow SEPARATE aggregate action off the (checkpointed, tiny)
     batch signature table; never touches the returned plan."""
     row = (
@@ -738,8 +755,7 @@ def _infer_embedding_dim(emb: DataFrame) -> int:
 
 def _spread_pairs(cands: DataFrame) -> DataFrame:
     """Hash-repartition an (a, b) candidate-pair frame across the
-    cluster's cores before the exact-cosine verify (r14 optimization
-    round).
+    cluster's cores before the verify.
 
     Why: everything downstream of the candidate exchange — the
     ``.distinct()``, the verify's broadcast joins, and the
@@ -766,7 +782,7 @@ def _spread_pairs(cands: DataFrame) -> DataFrame:
     64-deep Add chain ran ~2x slower than the interpreted HOF (JIT
     defeat), and the branch split doubled the stage count.
 
-    Deployment posture (r15, ADVICE r14): honors the same
+    Deployment posture: honors the same
     ``spark.graft.spreadForCompute=off`` kill-switch as
     :func:`~.util.spread_for_compute` (one conf disables every forced
     spread), and the partition count is
@@ -793,6 +809,70 @@ def _spread_pairs(cands: DataFrame) -> DataFrame:
         shuffle_n = 0
     n = max(spark.sparkContext.defaultParallelism, shuffle_n)
     return cands.repartition(n, "a", "b")
+
+
+def _probe_candidates(
+    old_idx: DataFrame,
+    new_idx: DataFrame,
+    keys: list,
+    id_col: str,
+    max_bucket: int | None,
+    stats: dict | None,
+) -> DataFrame:
+    """Distinct ``(a, b)`` candidates of a banded-index probe — ``a``
+    an old id, ``b`` a new id sharing a bucket ``keys`` value — the
+    core shared by :func:`lsh_incremental_pairs` and
+    :func:`hyperplane_incremental_pairs`.
+
+    The old index is scanned, never shuffled: a LEFT SEMI join against
+    the broadcast new-side keys keeps only the buckets the batch
+    probes (duplicate build keys are harmless in a semi join, so no
+    distinct). With ``max_bucket`` set, old membership per probed
+    bucket is counted with map-side partial counts (only (key, count)
+    rows shuffle) and over-cap buckets drop through a broadcast
+    anti-join. ``stats`` gets the new-side skew light and the over-cap
+    light, each a separate action that never touches the returned
+    plan.
+
+    The surviving old rows join the broadcast batch signatures, the
+    pairs spread over the cores (:func:`_spread_pairs`, whose exchange
+    becomes the distinct's own) and the result is ``localCheckpoint``-
+    ed once: the verify reads it three times (the pair join and both
+    id sets), and with the cap on it is bounded by cap x batch-bucket
+    size."""
+    if stats is not None:
+        _new_skew_light(new_idx, keys, stats)
+    old_matched = old_idx.join(
+        F.broadcast(new_idx.select(*keys)), keys, "left_semi")
+    if max_bucket is not None:
+        counts = old_matched.groupBy(*keys).agg(F.count("*").alias("_n"))
+        over = counts.filter(F.col("_n") > max_bucket)
+        if stats is not None:
+            _overcap_light(over, F.col("_n"), stats)
+        old_matched = old_matched.join(
+            F.broadcast(over.select(*keys)), keys, "left_anti")
+    elif stats is not None:
+        _zero_light(stats)
+    pairs = old_matched.join(
+        F.broadcast(new_idx.withColumnRenamed(id_col, "_new_id")), keys
+    ).select(F.col(id_col).alias("a"), F.col("_new_id").alias("b"))
+    return _spread_pairs(pairs).distinct().localCheckpoint(eager=True)
+
+
+def _suspected(rows: DataFrame, cand: DataFrame, side: str, id_col: str,
+               max_bucket: int | None) -> DataFrame:
+    """``rows`` pruned to the ids on ``side`` ("a" or "b") of the
+    checkpointed candidates, for the exact verify. The id set is
+    broadcast when the cap bounds it: left to AQE the semi join can
+    plan as a sort-merge and shuffle the WHOLE corpus on the id (the
+    plan audit caught exactly that after a checkpoint upstream shifted
+    the runtime stats). With ``max_bucket=None`` one hot bucket can
+    make the candidates O(corpus), so the hint would force an
+    unbounded broadcast — that case is left to AQE."""
+    ids = cand.select(F.col(side).alias(id_col))
+    if max_bucket is not None:
+        ids = F.broadcast(ids)
+    return rows.join(ids, id_col, "left_semi")
 
 
 def _exact_cos_verify(pairs: DataFrame, threshold: float) -> DataFrame:
@@ -1131,7 +1211,7 @@ def hyperplane_incremental_pairs(
     side served from the prebuilt :func:`hyperplane_build_index`
     table.
 
-    Geometry contract (the r13 PQ/lsh-index discipline): with
+    Geometry contract (the PQ/lsh-index discipline): with
     ``index=``, bands (``max(band)+1``) and bits_per_band
     (``length(bits)``) are read from the table in ONE memoized
     metadata aggregate (weak-keyed per index object — a
@@ -1141,22 +1221,23 @@ def hyperplane_incremental_pairs(
     on the probe side and quietly zero recall. Old/new id spaces must
     be disjoint (the verify distinguishes sides by id).
 
-    Physical shape: identical to :func:`lsh_incremental_pairs` — the
-    index is scanned, never shuffled (broadcast matched-keys semi
-    filter; map-side partial membership counts; broadcast anti-join
-    cap on OLD membership among PROBED buckets, output-identical to
-    the corpus-wide cap since unmatched buckets contribute nothing;
-    ``stats`` light reports probed-bucket drops plus
-    ``new_max_bucket``, the new-side skew light — the cap never
-    touches batch members, so a hot ingest bucket announces itself
-    instead of silently multiplying candidates); the exact-cosine
+    Physical shape: the candidate core is :func:`_probe_candidates`,
+    shared with :func:`lsh_incremental_pairs` — the index is scanned,
+    never shuffled (broadcast new-keys semi filter; map-side partial
+    membership counts; broadcast anti-join cap on OLD membership among
+    PROBED buckets, output-identical to the corpus-wide cap since
+    unmatched buckets contribute nothing; ``stats`` light reports
+    probed-bucket drops plus ``new_max_bucket``, the new-side skew
+    light — the cap never touches batch members, so a hot ingest
+    bucket announces itself instead of silently multiplying
+    candidates; one checkpointed candidate set); the exact-cosine
     verify joins embeddings left-semi-pruned to suspected ids, norms
     precomputed per vector (the llm39 device). As with
     :func:`lsh_incremental_pairs`, the no-``index`` form builds the
     old index in-line and its lineage re-computes per consumer —
     serve real traffic from a written (or persisted) index table.
 
-    ``new_index`` (r15) mirrors :func:`lsh_incremental_pairs`'s: the
+    ``new_index`` mirrors :func:`lsh_incremental_pairs`'s: the
     NEW batch's own precomputed (and persisted/checkpointed)
     :func:`hyperplane_build_index` table, skipping the batch
     signature pass here — the job-overlap callers compute it on a
@@ -1208,10 +1289,10 @@ def hyperplane_incremental_pairs(
         bands = 6 if bands is None else bands
         bits_per_band = 6 if bits_per_band is None else bits_per_band
         if dim is None:
-            # min over BOTH frames (r13 review): inferring from the
-            # old corpus alone would sign a narrower new vector over
-            # only its partial coordinates — different band bits, no
-            # shared bucket, the duplicate silently missed
+            # min over BOTH frames: inferring from the old corpus
+            # alone would sign a narrower new vector over only its
+            # partial coordinates — different band bits, no shared
+            # bucket, the duplicate silently missed
             dim = min(_infer_embedding_dim(emb_old),
                       _infer_embedding_dim(emb_new))
         old_idx = hyperplane_build_index(
@@ -1251,57 +1332,22 @@ def hyperplane_incremental_pairs(
             F.col("bucket.band").alias("band"),
             F.col("bucket.bits").alias("bits"),
         )
-        # the batch signature lineage feeds 2-3 consumers below — one
+        # the batch signature table feeds the candidate core's semi
+        # filter, its candidate join and the opt-in stats light — one
         # checkpoint, tiny table (the lsh_incremental_pairs rationale)
         new_idx = new_idx.localCheckpoint(eager=True)
-    if stats is not None:
-        _new_skew_light(new_idx, keys, stats)
 
-    matched_keys = new_idx.select(*keys).distinct()
-    old_matched = old_idx.join(F.broadcast(matched_keys), keys)
-
-    if max_bucket is not None:
-        counts = old_matched.groupBy(*keys).agg(F.count("*").alias("_n"))
-        over = counts.filter(F.col("_n") > max_bucket)
-        if stats is not None:
-            _overcap_light(over, F.col("_n"), stats)
-        old_matched = old_matched.join(
-            F.broadcast(over.select(*keys)), keys, "left_anti")
-    elif stats is not None:
-        _zero_light(stats)
-
-    # NOT spread (_spread_pairs) — batch-bounded candidate set with
-    # 3 consumers; see lsh_incremental_pairs for the measurement.
-    cand = (
-        old_matched.join(
-            F.broadcast(new_idx.withColumnRenamed(id_col, "_new_id")),
-            keys)
-        .select(F.col(id_col).alias("a"), F.col("_new_id").alias("b"))
-        .distinct()
-    )
+    cand = _probe_candidates(old_idx, new_idx, keys, id_col, max_bucket,
+                             stats)
 
     from .similarity import norm
 
-    # broadcast the suspected-id sets when the cap bounds them (the
-    # lsh_incremental_pairs lesson: an AQE-planned semi join can
-    # shuffle the whole corpus's embeddings on vec_id; with
-    # max_bucket=None the bound is gone and the hint would force an
-    # unbounded broadcast — leave that case to AQE, r13 review)
-    def _maybe_bcast(ids: DataFrame) -> DataFrame:
-        return F.broadcast(ids) if max_bucket is not None else ids
-
-    old_needed = emb_old.join(
-        _maybe_bcast(cand.select(F.col("a").alias(id_col)).distinct()),
-        id_col, "left_semi")
-    new_needed = emb_new.join(
-        _maybe_bcast(cand.select(F.col("b").alias(id_col)).distinct()),
-        id_col, "left_semi")
-    vecs_a = old_needed.select(
+    vecs_a = _suspected(emb_old, cand, "a", id_col, max_bucket).select(
         F.col(id_col).alias("a"),
         F.col("embedding").alias("_ea"),
         norm(F.col("embedding")).alias("_na"),
     )
-    vecs_b = new_needed.select(
+    vecs_b = _suspected(emb_new, cand, "b", id_col, max_bucket).select(
         F.col(id_col).alias("b"),
         F.col("embedding").alias("_eb"),
         norm(F.col("embedding")).alias("_nb"),
@@ -1320,7 +1366,10 @@ def jaccard_pairs(
     given — only sane for small n; the LSH path is the scale path).
 
     Jaccard computed set-wise: |A ∩ B| / |A ∪ B| over distinct
-    shingles, via array_intersect/array_union on deduped arrays.
+    shingles. Both sets are ``array_distinct``, so the union's size is
+    |A| + |B| - |A ∩ B| exactly and only the intersection is built.
+    A pair with an empty intersection scores 0.0, and so does a NULL
+    or empty text or one with fewer than ``shingle`` tokens.
     """
     sets = spread_for_compute(docs).select(
         "doc_id",
@@ -1348,8 +1397,10 @@ def jaccard_pairs(
             F.struct(F.col("r_doc_id").alias("doc_id"), F.col("r_s").alias("s")).alias("r"),
         )
     inter = F.size(F.array_intersect(F.col("l.s"), F.col("r.s")))
-    union = F.size(F.array_union(F.col("l.s"), F.col("r.s")))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    union = F.size(F.col("l.s")) + F.size(F.col("r.s")) - inter
+    # inter > 0 implies both sets are non-NULL and non-empty, whatever
+    # size(NULL) returns under the session's ANSI setting
+    jac = F.when(inter > 0, inter / union).otherwise(F.lit(0.0))
     return (
         pairs.select(
             F.col("l.doc_id").alias("a"),
@@ -1464,11 +1515,12 @@ def lsh_incremental_pairs(
     narrow aggregate on the tiny batch table); ``shingle`` alone is
     undetectable, as everywhere. When given, it is consumed as-is:
     persist or checkpoint it first, or its lineage recomputes per
-    consumer (it is read 2-3x below).
+    consumer (it feeds the semi filter, the candidate join and the
+    opt-in stats light).
 
     ``index`` accepts the prebuilt :func:`lsh_build_index` table and
     skips the old-corpus signature pass entirely — the scale API.
-    Following the r12/r13 PQ contract, index GEOMETRY is read from
+    Following the PQ contract, index GEOMETRY is read from
     the table, never trusted from the caller: ``rows_per_band`` from
     the ``r*`` schema columns (free), ``bands`` from ``max(band)+1``
     (one narrow metadata aggregate); an explicit argument that
@@ -1477,22 +1529,23 @@ def lsh_incremental_pairs(
     phantom buckets that never match). ``shingle`` cannot be read
     from the schema — the caller owns passing the build-time value,
     or the probe signatures hash different shingles and recall
-    silently dies (docstring contract, as with the index path's
-    ``sub_len`` in ``cosine_topk_pq`` before r12).
+    silently dies.
 
-    Physical shape at 100 TB — the old index is NEVER shuffled, only
-    scanned: the probe broadcasts the new batch's (tiny) distinct
-    bucket-key set into the index scan (a map-side semi filter — the
-    llm03 member-list groupBy would re-shuffle the whole index per
-    batch, the exact cost this operator exists to avoid), counts
-    old membership per MATCHED bucket with map-side partial counts
-    (only (key, count) rows cross the wire — a hot bucket shuffles
-    one partial per task, not its members), drops over-cap buckets
-    via a broadcast anti-join, and only then joins the new batch's
-    signatures to explode candidates. Unmatched over-cap buckets
-    produce no candidates anyway, so capping only matched buckets is
-    output-identical to the oracle's corpus-wide HAVING cap; the
-    ``stats`` light accordingly reports over-cap among PROBED
+    Physical shape at 100 TB (:func:`_probe_candidates`, shared with
+    :func:`hyperplane_incremental_pairs`) — the old index is NEVER
+    shuffled, only scanned: the probe broadcasts the new batch's
+    (tiny) bucket keys into the index scan (a map-side left-semi
+    filter — the llm03 member-list groupBy would re-shuffle the whole
+    index per batch, the exact cost this operator exists to avoid),
+    counts old membership per MATCHED bucket with map-side partial
+    counts (only (key, count) rows cross the wire — a hot bucket
+    shuffles one partial per task, not its members), drops over-cap
+    buckets via a broadcast anti-join, and only then joins the new
+    batch's signatures to explode candidates, which are spread over
+    the cores, made distinct and checkpointed once. Unmatched over-cap
+    buckets produce no candidates anyway, so capping only matched
+    buckets is output-identical to the oracle's corpus-wide HAVING
+    cap; the ``stats`` light accordingly reports over-cap among PROBED
     buckets (same separate-action contract as every other light).
     The cap applies to OLD-side membership only — a hot bucket in
     the corpus would explode EVERY future batch. The NEW side is
@@ -1500,11 +1553,11 @@ def lsh_incremental_pairs(
     skip dedup for them); ``stats`` instead carries
     ``new_max_bucket`` — the max new-side bucket occupancy — so a
     pathological ingest batch (candidate volume = cap x batch-bucket
-    size) announces itself (VERDICT r13 item 5). The exact-Jaccard
-    verify re-reads text ONLY for suspected ids — both sides are
-    left-semi-joined to the candidate id sets before
-    :func:`jaccard_pairs`, so the 100 TB text scan is pruned to the
-    candidate neighborhood (scan-side id pushdown), not the corpus.
+    size) announces itself. The exact-Jaccard verify re-reads text
+    ONLY for suspected ids — both sides are left-semi-joined to the
+    checkpointed candidates' id columns before :func:`jaccard_pairs`,
+    so the 100 TB text scan is pruned to the candidate neighborhood
+    (scan-side id pushdown), not the corpus.
 
     Contract: old and new doc_id spaces must be DISJOINT (the verify
     join distinguishes sides by id, the llm22 convention — new ids
@@ -1547,8 +1600,8 @@ def lsh_incremental_pairs(
     if new_index is not None:
         # full geometry check, same raise-on-mismatch contract as the
         # index= path: same-width columns built at a different bands
-        # split the minhashes differently and lose recall SILENTLY
-        # (r14 review). Geometry comes free from the build-site cache
+        # split the minhashes differently and lose recall SILENTLY.
+        # Geometry comes free from the build-site cache
         # when the caller passes the lsh_build_index result itself; a
         # checkpointed/read-back table pays one narrow aggregate on
         # the tiny batch table, memoized per object like the old side.
@@ -1564,69 +1617,22 @@ def lsh_incremental_pairs(
         new_idx = lsh_build_index(
             docs_new, bands=bands, rows_per_band=rows_per_band,
             shingle=shingle)
-        # the new batch's signature lineage is consumed 2-3x below
-        # (the matched-keys broadcast, the candidate-join broadcast,
-        # and the opt-in stats action) — checkpoint it once; it is
-        # tiny (batch rows x bands) and the llm03 counter-measurement
-        # (checkpoint defeating scan-side pruning) does not apply to
-        # a computed signature table with nothing left to prune
+        # the new batch's signature table feeds the candidate core's
+        # semi filter, its candidate join and the opt-in stats light —
+        # checkpoint it once; it is tiny (batch rows x bands) and the
+        # llm03 counter-measurement (checkpoint defeating scan-side
+        # pruning) does not apply to a computed signature table with
+        # nothing left to prune
         new_idx = new_idx.localCheckpoint(eager=True)
-    if stats is not None:
-        _new_skew_light(new_idx, keys, stats)
 
-    # map-side semi filter: keep only index rows in buckets the new
-    # batch actually probes (the index is scanned, never shuffled)
-    matched_keys = new_idx.select(*keys).distinct()
-    old_matched = old_idx.join(F.broadcast(matched_keys), keys)
-
-    if max_bucket is not None:
-        # old membership per MATCHED bucket: map-side partial counts,
-        # only (key, count) rows shuffle — a hot bucket costs one
-        # partial per task, not its member list
-        counts = old_matched.groupBy(*keys).agg(F.count("*").alias("_n"))
-        over = counts.filter(F.col("_n") > max_bucket)
-        if stats is not None:
-            _overcap_light(over, F.col("_n"), stats)
-        old_matched = old_matched.join(
-            F.broadcast(over.select(*keys)), keys, "left_anti")
-    elif stats is not None:
-        _zero_light(stats)
-
-    # candidate explosion: surviving old rows x the (broadcast) new
-    # batch signatures in the same bucket
-    # NOT spread (_spread_pairs) like the self-dedup family: the
-    # incremental candidate set is bounded by cap x batch-bucket size
-    # and consumed 3x below (verify + both id-set broadcasts), so the
-    # explicit repartition added 32-task micro-stages per consumer —
-    # measured +1.2 s on llm40 isolated vs the AQE-coalesced form.
-    cand = (
-        old_matched.join(
-            F.broadcast(new_idx.withColumnRenamed("doc_id", "_new_id")),
-            keys)
-        .select(F.col("doc_id").alias("a"), F.col("_new_id").alias("b"))
-        .distinct()
+    cand = _probe_candidates(old_idx, new_idx, keys, "doc_id", max_bucket,
+                             stats)
+    verify_docs = (
+        _suspected(docs_old, cand, "a", "doc_id", max_bucket)
+        .select("doc_id", "text")
+        .unionByName(_suspected(docs_new, cand, "b", "doc_id", max_bucket)
+                     .select("doc_id", "text"))
     )
-
-    # verify on text pruned to the SUSPECTED ids only. The id sets
-    # are explicitly BROADCAST when the cap is on: left to AQE the
-    # semi join can plan as a sort-merge and shuffle the WHOLE corpus
-    # text on doc_id (the r13 plan audit caught exactly that after
-    # the checkpoint change shifted the runtime stats) — the id set
-    # is bounded by the capped candidate volume, the corpus is not.
-    # With max_bucket=None the bound is gone (one hot bucket can make
-    # cand O(corpus)), so the hint would force an unbounded broadcast
-    # build — leave the uncapped case to AQE (r13 review).
-    def _maybe_bcast(ids: DataFrame) -> DataFrame:
-        return F.broadcast(ids) if max_bucket is not None else ids
-
-    old_needed = docs_old.join(
-        _maybe_bcast(cand.select(F.col("a").alias("doc_id")).distinct()),
-        "doc_id", "left_semi")
-    new_needed = docs_new.join(
-        _maybe_bcast(cand.select(F.col("b").alias("doc_id")).distinct()),
-        "doc_id", "left_semi")
-    verify_docs = old_needed.select("doc_id", "text").unionByName(
-        new_needed.select("doc_id", "text"))
     return jaccard_pairs(
         verify_docs, cand, shingle=shingle, threshold=threshold)
 
