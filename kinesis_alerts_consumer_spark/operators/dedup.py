@@ -569,7 +569,7 @@ _SIGNS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]]" 
     weakref.WeakKeyDictionary()
 )
 
-# lsh_incremental_pairs index geometry, weak-keyed on the index
+# probe index geometry, weak-keyed on the index
 # DataFrame OBJECT (same GC-aliasing rationale as _SIGNS_CACHE): a
 # caller probing the same prebuilt index every micro-batch (st09's
 # foreachBatch) pays the max(band) metadata aggregate ONCE, not once
@@ -607,6 +607,43 @@ def _minhash_index_geometry(index: DataFrame) -> tuple[int, int]:
         geom = (int(row["mb"]) + 1, len(r_cols))
         _INDEX_GEOM_CACHE[index] = geom
     return geom
+
+
+def _hyperplane_index_geometry(index: DataFrame) -> tuple[int, int]:
+    """(bands, bits_per_band) of a :func:`hyperplane_build_index`
+    table — ``max(band)+1`` and ``max(length(bits))`` in ONE narrow
+    metadata aggregate, memoized per DataFrame OBJECT via
+    ``_INDEX_GEOM_CACHE`` (free when the build site or
+    :func:`checkpoint_index` seeded it). Shared by ``index=`` and
+    ``new_index=`` on :func:`hyperplane_incremental_pairs`."""
+    if "band" not in index.columns or "bits" not in index.columns:
+        raise ValueError(
+            "prebuilt index must carry (vec_id, band, bits) — "
+            "build it with hyperplane_build_index")
+    geom = _INDEX_GEOM_CACHE.get(index)
+    if geom is None:
+        row = index.agg(
+            F.max("band").alias("mb"),
+            F.max(F.length("bits")).alias("lb"),
+        ).collect()[0]
+        if row["mb"] is None:
+            raise ValueError("prebuilt index is empty — no band rows")
+        geom = (int(row["mb"]) + 1, int(row["lb"]))
+        _INDEX_GEOM_CACHE[index] = geom
+    return geom
+
+
+def _geometry_arg(name: str, given: int | None, actual: int,
+                  unit: str) -> int:
+    """A geometry argument reconciled with the value read from the
+    index: ``None`` takes the index's value, a mismatch raises — a
+    probe banded differently from its index loses recall silently."""
+    if given is not None and given != actual:
+        raise ValueError(
+            f"{name}={given} does not match the prebuilt index's "
+            f"{actual} {unit} — omit it (it is read from the index) "
+            f"or pass {actual}")
+    return actual
 
 
 def _hyperplane_sign(band: int, bit: int, j: int) -> int:
@@ -1255,35 +1292,10 @@ def hyperplane_incremental_pairs(
                 "recoverable from the table — pass the dim the index "
                 "was built with (hyperplane_build_index records it in "
                 "its docstring contract)")
-        if "band" not in index.columns or "bits" not in index.columns:
-            raise ValueError(
-                "prebuilt index must carry (vec_id, band, bits) — "
-                "build it with hyperplane_build_index")
-        geom = _INDEX_GEOM_CACHE.get(index)
-        if geom is None:
-            row = index.agg(
-                F.max("band").alias("mb"),
-                F.max(F.length("bits")).alias("lb"),
-            ).collect()[0]
-            if row["mb"] is None:
-                raise ValueError("prebuilt index is empty — no band rows")
-            geom = (int(row["mb"]) + 1, int(row["lb"]))
-            _INDEX_GEOM_CACHE[index] = geom
-        b_idx, r_idx = geom
-        if bands is None:
-            bands = b_idx
-        elif bands != b_idx:
-            raise ValueError(
-                f"bands={bands} does not match the prebuilt index's "
-                f"{b_idx} bands — omit it (it is read from the index) "
-                f"or pass {b_idx}")
-        if bits_per_band is None:
-            bits_per_band = r_idx
-        elif bits_per_band != r_idx:
-            raise ValueError(
-                f"bits_per_band={bits_per_band} does not match the "
-                f"prebuilt index's {r_idx}-bit band values — omit it "
-                f"(it is read from the index) or pass {r_idx}")
+        b_idx, r_idx = _hyperplane_index_geometry(index)
+        bands = _geometry_arg("bands", bands, b_idx, "bands")
+        bits_per_band = _geometry_arg(
+            "bits_per_band", bits_per_band, r_idx, "bits per band")
         old_idx = index
     else:
         bands = 6 if bands is None else bands
@@ -1307,16 +1319,7 @@ def hyperplane_incremental_pairs(
         # same raise-on-mismatch contract as the lsh twin: same-width
         # bits built at a different bands split the hyperplanes
         # differently and lose recall SILENTLY
-        geom_n = _INDEX_GEOM_CACHE.get(new_index)
-        if geom_n is None:
-            row = new_index.agg(
-                F.max("band").alias("mb"),
-                F.max(F.length("bits")).alias("lb"),
-            ).collect()[0]
-            if row["mb"] is None:
-                raise ValueError("new_index is empty — no band rows")
-            geom_n = (int(row["mb"]) + 1, int(row["lb"]))
-            _INDEX_GEOM_CACHE[new_index] = geom_n
+        geom_n = _hyperplane_index_geometry(new_index)
         if geom_n != (bands, bits_per_band):
             raise ValueError(
                 f"new_index geometry {geom_n} does not match the probe "
@@ -1575,20 +1578,9 @@ def lsh_incremental_pairs(
     """
     if index is not None:
         b_idx, r_idx = _minhash_index_geometry(index)
-        if rows_per_band is None:
-            rows_per_band = r_idx
-        elif rows_per_band != r_idx:
-            raise ValueError(
-                f"rows_per_band={rows_per_band} does not match the "
-                f"prebuilt index's {r_idx} row columns — omit it (it "
-                f"is read from the index) or pass {r_idx}")
-        if bands is None:
-            bands = b_idx
-        elif bands != b_idx:
-            raise ValueError(
-                f"bands={bands} does not match the prebuilt index's "
-                f"{b_idx} bands — omit it (it is read from the index) "
-                f"or pass {b_idx}")
+        rows_per_band = _geometry_arg(
+            "rows_per_band", rows_per_band, r_idx, "row columns")
+        bands = _geometry_arg("bands", bands, b_idx, "bands")
         old_idx = index
     else:
         bands = 2 if bands is None else bands
@@ -1670,7 +1662,8 @@ def lsh_index_absorb(
     new ones: per-batch appends create one small file per band per
     batch, so compact periodically (rewrite one ``band=`` partition
     at a time — the partitioning makes compaction embarrassingly
-    parallel and probe-transparent), and the probe's ``max(band)``
+    parallel; a plain-parquet directory swap is not atomic, so run it
+    while no probe lists the index), and the probe's ``max(band)``
     geometry aggregate stays O(metadata). The corpus append is plain
     row data; the probe's verify only ever reads it pruned to
     suspected ids, so corpus file count affects listing, not scan.
@@ -1698,118 +1691,6 @@ def lsh_index_absorb(
         )
     else:
         rows.write.mode("append").partitionBy("band").parquet(index_path)
-
-
-def lsh_index_compact(
-    spark,
-    index_path: str,
-    bands: list[str] | None = None,
-    files_per_band: int = 1,
-) -> dict[str, tuple[int, int]]:
-    """Compact the absorbed index's small files — the maintenance op
-    the absorb lifecycle's file-growth math calls for
-    (:func:`lsh_index_absorb` adds one file per band per batch; the
-    5M rehearsal measured exactly +bands×batches). Each ``band=``
-    partition is compacted INDEPENDENTLY: read the partition dir
-    (the band value lives in the dir name, not the rows), coalesce
-    to ``files_per_band``, write to a staging dir next to it, then
-    swap the directory in two renames. Per-band independence is the
-    scale story: compaction is embarrassingly parallel across bands
-    and a maintenance window can do one band at a time.
-
-    NOT probe-concurrent: between the two renames the partition dir
-    is briefly ABSENT, so a probe listing the index in that instant
-    silently loses that band's candidates — run compaction when no
-    probe is running (the maintenance-window contract), or compact a
-    copy and switch paths. A deployment on object storage would use
-    a transactional table format's rewrite instead; this is the
-    plain-parquet form, matching the plain-parquet index.
-
-    Crash-SAFE, though: every intermediate state is self-repairing.
-    The staging (``_compacting_``) and retiring (``_retiring_``)
-    dirs are underscore-prefixed, which Spark's file listing ignores
-    — a crashed run never corrupts what a probe reads, it only
-    leaves repair work. On entry this function scans for leftovers
-    of a crashed run and completes or rolls back FIRST: retiring +
-    live partition present → finish deleting the retiring copy;
-    retiring + complete stage, no live partition (the mid-swap
-    crash) → promote the stage and delete the retiring copy;
-    retiring alone → restore it as the live partition; a stage
-    without a retiring dir → discard it (it may be half-written; the
-    live partition is still intact). (r14 review: the first cut
-    cleaned only the stage, so a mid-swap crash left the band's rows
-    stranded in a dir Spark ignores — silent recall loss with no
-    repair path.)
-
-    ``bands`` selects specific partition dir names (e.g.
-    ``["band=0"]``); None compacts all. Returns
-    ``{band_dir: (files_before, files_after)}`` for the partitions
-    actually rewritten; partitions already at or under
-    ``files_per_band`` are skipped (no needless rewrite)."""
-    import os
-    import shutil
-
-    if files_per_band < 1:
-        raise ValueError("files_per_band must be >= 1")
-
-    def _swap(part_dir: str, stage: str, retiring: str) -> None:
-        # the swap order makes every crash point repairable: the
-        # stage is complete before the first rename, and _SUCCESS
-        # marks completeness for the recovery scan
-        os.rename(part_dir, retiring)
-        os.rename(stage, part_dir)
-        shutil.rmtree(retiring)
-
-    # recovery scan: repair any crashed previous run BEFORE listing
-    # partitions, so a mid-swap crash's absent partition reappears
-    for leftover in sorted(os.listdir(index_path)):
-        if leftover.startswith("_retiring_"):
-            d = leftover[len("_retiring_"):]
-            part_dir = os.path.join(index_path, d)
-            retiring = os.path.join(index_path, leftover)
-            stage = os.path.join(index_path, f"_compacting_{d}")
-            if os.path.exists(part_dir):
-                # crash after the second rename: swap completed
-                shutil.rmtree(retiring)
-            elif os.path.exists(stage) and os.path.exists(
-                    os.path.join(stage, "_SUCCESS")):
-                # crash between the renames: the stage is complete —
-                # promote it and retire the old copy
-                os.rename(stage, part_dir)
-                shutil.rmtree(retiring)
-            else:
-                # no usable stage: roll back to the pre-compact copy
-                os.rename(retiring, part_dir)
-        elif leftover.startswith("_compacting_"):
-            d = leftover[len("_compacting_"):]
-            if os.path.exists(os.path.join(index_path, d)):
-                # live partition intact: the stage is leftover (and
-                # possibly half-written) — discard it
-                shutil.rmtree(os.path.join(index_path, leftover))
-
-    found = sorted(d for d in os.listdir(index_path)
-                   if d.startswith("band="))
-    if bands is not None:
-        missing = set(bands) - set(found)
-        if missing:
-            raise ValueError(
-                f"band partitions not in the index: {sorted(missing)}")
-        found = [d for d in found if d in bands]
-    out: dict[str, tuple[int, int]] = {}
-    for d in found:
-        part_dir = os.path.join(index_path, d)
-        n_before = sum(f.endswith(".parquet")
-                       for f in os.listdir(part_dir))
-        if n_before <= files_per_band:
-            continue
-        stage = os.path.join(index_path, f"_compacting_{d}")
-        spark.read.parquet(part_dir).coalesce(files_per_band) \
-            .write.parquet(stage)
-        _swap(part_dir, stage, os.path.join(index_path, f"_retiring_{d}"))
-        n_after = sum(f.endswith(".parquet")
-                      for f in os.listdir(part_dir))
-        out[d] = (n_before, n_after)
-    return out
 
 
 def containment_pairs(
@@ -1940,7 +1821,7 @@ def _bloom_bit(j: int, m_bits: int) -> Column:
     :func:`bloom_words` (build) and :func:`bloom_probe` (probe) use:
     if the two ever drifted, a truly-old fp could probe False and be
     emitted unverified through the definitely-new fast path — a silent
-    duplicate (ADVICE r9). Output equivalence to the plain anti-join
+    duplicate. Output equivalence to the plain anti-join
     survives ANY agreed bit function; agreement is what this helper
     makes structural."""
     return F.pmod(
@@ -1956,7 +1837,7 @@ def _bloom_word_mask(bit: Column, m_bits: int) -> tuple[Column, Column]:
     word-index math needs is STRUCTURAL, not a docstring precondition:
     a future caller passing a raw xxhash64 value can no longer
     silently corrupt word indices and break the no-false-negative
-    guarantee (ADVICE r10). Shared build/probe helper — see
+    guarantee. Shared build/probe helper — see
     :func:`_bloom_bit`."""
     bit = F.pmod(bit, F.lit(m_bits))
     return (
@@ -1978,7 +1859,7 @@ def bloom_words(fps: DataFrame, m_bits: int, k: int) -> DataFrame:
     sized like any sketch parameter) that broadcasts as a hash-join
     build side.
 
-    Representation lesson (measured r9 at 5M docs): a one-row
+    Representation lesson (measured at 5M docs): a one-row
     map<w, word> column probed via ``element_at`` evaluated the probe
     as a LINEAR scan of the map per lookup (ArrayBasedMapData has no
     hash index) — 108 s vs the plain anti-join's 1.5 s. The sparse
@@ -1988,7 +1869,7 @@ def bloom_words(fps: DataFrame, m_bits: int, k: int) -> DataFrame:
     Spark's own runtime-filter optimization builds exactly this shape
     (BloomFilterAggregate / might_contain) for eligible joins, but
     those expressions are internal-only (absent from the public
-    function registry — probed r9); this is the same pattern made
+    function registry); this is the same pattern made
     explicit, tunable, and reusable across stages.
     """
     w, mask = _bloom_word_mask(F.col("bit"), m_bits)
@@ -2096,13 +1977,7 @@ def incremental_new_docs_bloom(
     slice. The old side still shuffles once into the verify
     anti-join (its other scan feeds the 16-byte-row sketch agg) —
     a shuffled anti-join is the robust choice because the suspect
-    slice is unbounded (worst case: every new doc is a dup). When
-    the suspect slice is known-small, the old side's shuffle can be
-    eliminated too: semi-join old_fp against broadcast(suspects)
-    map-side, then broadcast the (small) hit set back into the
-    anti-join — both old-side passes become map-side scans. The
-    new side's exact_dedup groupBy is common to both plans.
-    Locally (one JVM, no network) the plain anti-join is already
+    slice is unbounded (worst case: every new doc is a dup). Locally (one JVM, no network) the plain anti-join is already
     cheap, so wall-clock parity is expected at bench scale — the
     saved quantity is cluster network bytes (BASELINE.md round-9
     notes).
@@ -2115,138 +1990,15 @@ def incremental_new_docs_bloom(
     path). ``pmod`` (not ``%``) keeps xxhash64's negative halves in
     [0, m).
     """
-    old_fp, clean, suspects = _bloom_screen(docs_new, docs_old, m_bits, k)
-    return clean.unionAll(suspects.join(old_fp, "fp", "left_anti"))
-
-
-def _bloom_screen(
-    docs_new: DataFrame, docs_old: DataFrame, m_bits: int, k: int
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The screen stage BOTH bloom dedup shapes share — (old_fp,
-    definitely-new clean slice, suspect slice), each slice projected
-    to (fp, keep_id, copies). One definition so the shipped
-    shuffled-verify shape and the broadcast-back variant can never
-    diverge on what was screened (the same structural-agreement
-    argument :func:`_bloom_bit` makes for the bit function; r10
-    review)."""
     new_groups = exact_dedup(docs_new)
     old_fp = docs_old.select(F.md5(F.col("text")).alias("fp")).distinct()
     probed = bloom_probe(
         new_groups, bloom_words(old_fp, m_bits, k), m_bits, k
     )
     cols = ["fp", "keep_id", "copies"]
-    return (
-        old_fp,
-        probed.filter(~F.col("_maybe")).select(*cols),
-        probed.filter(F.col("_maybe")).select(*cols),
-    )
-
-
-def incremental_new_docs_bloom_broadcast_back(
-    docs_new: DataFrame,
-    docs_old: DataFrame,
-    m_bits: int = 1 << 24,
-    k: int = 4,
-    max_broadcast_rows: int | None = 4_000_000,
-) -> DataFrame:
-    """The broadcast-back variant :func:`incremental_new_docs_bloom`'s
-    docstring describes — for when the suspect slice is KNOWN-SMALL
-    (healthy crawl: mostly-new content, low bloom fp rate): instead of
-    shuffling the old side into the verify anti-join, semi-join
-    ``old_fp`` against ``broadcast(suspects)`` map-side (old rows that
-    hash-hit a suspect fp), then broadcast the small hit set back into
-    the anti-join — BOTH old-side passes become map-side scans, and at
-    cluster scale the old side (the 100 TB snapshot) never crosses the
-    network at all.
-
-    Output identical to the shipped shape and to the plain anti-join
-    (bloom no-false-negatives + exact verify on the hit set); the
-    equivalence test drives it through the same collision-heavy
-    sizings. NOT the declared llm22/llm38 path because the broadcast
-    of the suspect slice is an unbounded bet — worst case (every new
-    doc a dup) the whole new side broadcasts; the shipped shuffled
-    verify is robust to ANY dup rate. Use when upstream knows the dup
-    rate (e.g. incremental re-crawl telemetry). Measured at
-    /tmp/sfdoc1000 (5M docs) against the shipped shape: BASELINE.md
-    round-10 notes.
-
-    The m_bits default is 2^24, NOT the shipped shape's 2^20: a
-    saturated sketch makes the suspect slice ~the whole new side, and
-    broadcasting that is exactly the failure this variant must avoid
-    (the shipped shuffled verify is merely slower when saturated; a
-    multi-million-row broadcast here OOMs the driver or trips the
-    broadcast-table limit). 2^24 is the measured /tmp/sfdoc1000
-    sizing (~10 bits/item at 1.67M old fps -> 1.26% suspects); size m
-    to ~10 bits per OLD fingerprint when calling (r10 review).
-
-    ``max_broadcast_rows`` makes the known-small precondition ENFORCED
-    rather than documented (ADVICE r10): before broadcasting, one
-    bounded probe — ``suspects.limit(N+1).count()`` (a LocalLimit
-    early-stop, no rows ship to the driver) — raises a clear
-    ValueError naming the shuffled-verify fallback when the slice
-    exceeds the budget, instead of an under-sized ``m_bits`` or a
-    high dup rate surfacing as a driver OOM / broadcast-limit failure
-    mid-job. With the guard on, the suspect slice is PERSISTED before
-    the probe (r11 review: the probe would otherwise re-run the whole
-    bloom screen, and the returned plan consumes suspects twice more —
-    three screen executions for a slice whose entire premise is being
-    small): one compute, cached reads after, ≤ the broadcast budget
-    by construction. The cache lives until the session drops it; the
-    persisted slice is EXPOSED as ``result.persisted_suspects``
-    (ADVICE r11: the docstring used to say "unpersist the result's
-    source", but the caller only received the unioned plan, leaving
-    the cache unreleasable short of ``spark.catalog.clearCache()``) —
-    long-lived sessions call
-    ``result.persisted_suspects.unpersist()`` after consuming the
-    result. READ THE ATTRIBUTE OFF THE RETURNED OBJECT FIRST (ADVICE
-    r12): it is a plain Python attribute on that specific DataFrame
-    instance — any transformation (``result.filter(...)`` etc.)
-    returns a NEW DataFrame without it, and unread it would shadow
-    into PySpark's ``__getattr__`` column lookup. Grab the handle
-    before chaining::
-
-        result = incremental_new_docs_bloom(new, old)
-        cache_handle = result.persisted_suspects  # may be None
-        out = result.filter(...)                  # chain freely now
-        ...
-        if cache_handle is not None:
-            cache_handle.unpersist()
-
-    Callers with trusted telemetry pass
-    ``None`` to skip both the probe and the persist (prior behavior;
-    ``result.persisted_suspects`` is then ``None``).
-    The default budget (4M rows × ~50 B/row ≈ 200 MB) sits inside a
-    1 GiB driver's broadcast comfort.
-    """
-    old_fp, clean, suspects = _bloom_screen(docs_new, docs_old, m_bits, k)
-    persisted = None
-    if max_broadcast_rows is not None:
-        suspects = persisted = suspects.persist()
-        probe = suspects.limit(max_broadcast_rows + 1).count()
-        if probe > max_broadcast_rows:
-            suspects.unpersist(blocking=False)
-            raise ValueError(
-                f"suspect slice exceeds max_broadcast_rows="
-                f"{max_broadcast_rows}: the broadcast-back variant "
-                "would OOM the driver or trip the broadcast-table "
-                "limit. Raise m_bits (size ~10 bits per OLD "
-                "fingerprint), or use incremental_new_docs_bloom / "
-                "incremental_new_docs — the shuffled verify is "
-                "robust to any dup rate."
-            )
-    # old fps that really exist in the suspect slice — a map-side
-    # broadcast semi-join on the old scan (no old-side shuffle) ...
-    hits = old_fp.join(
-        F.broadcast(suspects.select("fp")), "fp", "left_semi"
-    )
-    # ... broadcast the (small) hit set back: suspects minus true dups
-    verified = suspects.join(F.broadcast(hits), "fp", "left_anti")
-    result = clean.unionAll(verified)
-    # hand the cache handle to the caller (see docstring): a plain
-    # Python attribute on the returned plan — None when the probe and
-    # persist were skipped
-    result.persisted_suspects = persisted
-    return result
+    clean = probed.filter(~F.col("_maybe")).select(*cols)
+    suspects = probed.filter(F.col("_maybe")).select(*cols)
+    return clean.unionAll(suspects.join(old_fp, "fp", "left_anti"))
 
 
 def passage_dedup(docs: DataFrame, block: int = 8) -> DataFrame:

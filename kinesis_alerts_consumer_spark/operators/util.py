@@ -58,7 +58,11 @@ def run_overlapped(*thunks: Callable[[], Any]) -> list[Any]:
         return [f.result() for f in futures]
 
 
-def spread_for_compute(df: DataFrame, min_factor: int = 2) -> DataFrame:
+# spread only inputs with at most 1/_SPREAD_MIN_FACTOR as many splits as cores
+_SPREAD_MIN_FACTOR = 2
+
+
+def spread_for_compute(df: DataFrame) -> DataFrame:
     """Repartition a DataFrame whose partition count is far below the
     cluster's parallelism before a CPU-heavy per-row stage.
 
@@ -95,6 +99,6 @@ def spread_for_compute(df: DataFrame, min_factor: int = 2) -> DataFrame:
         pass
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() * min_factor <= target:
+    if df.rdd.getNumPartitions() * _SPREAD_MIN_FACTOR <= target:
         return df.repartition(target)
     return df

@@ -42,7 +42,6 @@ from .sinks import MetricsSink
 def stream_lines(
     spark: SparkSession,
     source_dir: str,
-    deploy_env: str = "production",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Text-file directory stream of raw syslog/kayvee lines."""
@@ -67,7 +66,7 @@ def replay_lines(
     each micro-batch (reference batch=100/5 s, main.go:54-59) and is
     what the recovery chaos test uses to force a multi-batch replay."""
     sink = sink or MetricsSink(out_dir)
-    lines = stream_lines(spark, source_dir, deploy_env, max_files_per_trigger)
+    lines = stream_lines(spark, source_dir, max_files_per_trigger)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         sink.process_batch(
@@ -102,7 +101,7 @@ def volume_rollup_processing_time(
     from ..functions.kayvee import parse_lines
     from ..operators.volume import batch_log_volume
 
-    lines = stream_lines(spark, source_dir, deploy_env, max_files_per_trigger)
+    lines = stream_lines(spark, source_dir, max_files_per_trigger)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         parsed = parse_lines(batch_df, "value", deploy_env)

@@ -42,25 +42,6 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def _project_for_state(events: DataFrame) -> DataFrame:
-    """The minimal-column projection both stateful variants apply
-    BEFORE their stateful operator: the update logic reads only
-    ``value`` (plus the ``user_id`` grouping key), and every retained
-    column would otherwise ride the pre-state shuffle AND cross the
-    JVM->Python Arrow boundary twice per row. On the events table the
-    drop (event_id, ts, event_type, props — props is a free-form JSON
-    string, the bulk of the bytes) cuts the per-1000-rows Arrow
-    payload ~6x; the linear term in st03's scale ladder is exactly
-    this boundary (VERDICT r7 item 4; 217.7 -> 110.7 s at sf100).
-
-    Shared on purpose (ADVICE r8): the applyInPandasWithState twin is
-    oracle-validated in this environment, the protobuf-gated
-    transformWithStateInPandas twin is not — one helper means the
-    validated path structurally covers the gated one, so the two
-    cannot silently diverge on the projection."""
-    return events.select("user_id", "value")
-
-
 def _update_running(
     key: tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
@@ -80,12 +61,9 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     """Per-user running (count, sum(value)) maintained in explicit
     GroupState; emits the current total once per micro-batch per key.
     After a bounded (availableNow) replay the final row per key equals
-    the batch aggregate — the equivalence the tests/oracle assert.
-
-    Columns are cut to (user_id, value) by the shared
-    :func:`_project_for_state` before the stateful operator — see its
-    docstring for the Arrow-boundary numbers."""
-    return _project_for_state(events).groupBy(
+    the batch aggregate — the equivalence the tests/oracle assert."""
+    # only value is read; other columns would cross the Arrow boundary
+    return events.select("user_id", "value").groupBy(
         "user_id"
     ).applyInPandasWithState(
         _update_running,
@@ -95,75 +73,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-OUT_SCHEMA_TWS = RUNNING_SCHEMA
-_TWS_STATE = _STATE_SCHEMA
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same per-key running totals through Spark 4's
-    ``transformWithStateInPandas`` — the modern arbitrary-state API
-    (named ValueState/ListState/MapState, timers, TTL, state schema
-    evolution) that supersedes ``applyInPandasWithState``.
-
-    Environment note: the TWS state-server protocol needs
-    ``google.protobuf``, which this container lacks (and installs are
-    off) — so this operator is import-gated exactly like the Kinesis
-    source (sources/kinesis.py): the code path is real and the
-    equivalence test runs wherever protobuf exists, skips here. That
-    gate also means the (user_id, value) pre-projection below is
-    validated HERE only through its twin in
-    :func:`running_user_totals` (in-window oracle row + streaming
-    tests); the first environment with protobuf should run the
-    equivalence test before trusting this variant.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - environment gate
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf "
-            "(Spark's TWS state-server protocol); install protobuf or "
-            "use running_user_totals (applyInPandasWithState)"
-        ) from exc
-
-    from pyspark.sql.streaming import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _TWS_STATE)
-
-        def handleInputRows(
-            self, key, rows, timerValues
-        ) -> Iterator[pd.DataFrame]:
-            if self._totals.exists():
-                n, sv = self._totals.get()
-            else:
-                n, sv = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                sv += float(pdf["value"].fillna(0.0).sum())
-            self._totals.update((n, sv))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [sv],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # the SHARED minimal-column projection (cannot diverge from the
-    # oracle-validated applyInPandasWithState twin)
-    return _project_for_state(events).groupBy(
-        "user_id"
-    ).transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=OUT_SCHEMA_TWS,
-        outputMode="Update",
-        timeMode="None",
-    )

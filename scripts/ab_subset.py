@@ -1,7 +1,7 @@
 """Interleaved same-host A/B of an arbitrary query subset between two
-trees (the bench_ab_streaming protocol, query list from argv): fresh
-JVM per sample, trees interleaved A,B,A,B,..., bench.py's own warm-up
-and timing loop via SPARK_GRAFT_QUERIES.
+trees: fresh JVM per sample, trees interleaved A,B,A,B,..., bench.py's
+own warm-up and timing loop via SPARK_GRAFT_QUERIES. An A/B of a conf
+switch is two trees that differ in that conf.
 
 Usage:
     python scripts/ab_subset.py TREE_A TREE_B ROUNDS SF_DIR q1,q2,...

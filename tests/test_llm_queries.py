@@ -1260,14 +1260,17 @@ def test_hyperplane_incremental_pairs_semantics(spark):
     }
 
 
-def test_hyperplane_new_index_path_identical_and_validated(spark):
+def test_hyperplane_new_index_path_identical_and_validated(spark, tmp_path):
     """r15 job-overlap plumbing: ``new_index=`` (the batch's own
     precomputed hyperplane_build_index table, checkpointed via
     checkpoint_index) must (a) produce the EXACT pair set of the
     in-line build — it is the same _hyperplane_banded machinery —
     (b) skip the geometry metadata aggregate when the checkpoint
     carried the build-site cache seed, and (c) raise on a geometry
-    mismatch instead of silently losing recall."""
+    mismatch instead of silently losing recall. (d) A parquet-read
+    ``new_index`` carries no cache seed, so its geometry comes from
+    the metadata aggregate: same pairs, same mismatch raise, and an
+    empty table raises instead of probing nothing."""
     import pytest
 
     from kinesis_alerts_consumer_spark.operators.dedup import (
@@ -1307,6 +1310,31 @@ def test_hyperplane_new_index_path_identical_and_validated(spark):
     with pytest.raises(ValueError, match=r"new_index geometry \(2, 4\)"):
         hyperplane_incremental_pairs(
             new, old, dim=8, threshold=0.9, index=idx, new_index=wrong)
+
+    # (d) parquet-read new_index: the uncached aggregate branch
+    def read_back(name, emb, bands):
+        path = str(tmp_path / name)
+        hyperplane_build_index(
+            emb, bands=bands, bits_per_band=4, dim=8
+        ).write.parquet(path)
+        return spark.read.parquet(path)
+
+    read_idx = read_back("batch", new, 4)
+    assert _INDEX_GEOM_CACHE.get(read_idx) is None
+    via_read = hyperplane_incremental_pairs(
+        new, old, dim=8, threshold=0.9, index=idx, new_index=read_idx)
+    assert {(r.a, r.b, r.cos) for r in via_read.collect()} == {
+        (r.a, r.b, r.cos) for r in inline.collect()
+    }
+    assert _INDEX_GEOM_CACHE.get(read_idx) == (4, 4)
+    with pytest.raises(ValueError, match=r"new_index geometry \(2, 4\)"):
+        hyperplane_incremental_pairs(
+            new, old, dim=8, threshold=0.9, index=idx,
+            new_index=read_back("wrong", new, 2))
+    with pytest.raises(ValueError, match="empty"):
+        hyperplane_incremental_pairs(
+            new, old, dim=8, threshold=0.9, index=idx,
+            new_index=read_back("empty", new.limit(0), 4))
 
 
 def test_hyperplane_gated_fixture_candidate_volume_is_a_contract(spark):
@@ -1894,62 +1922,14 @@ def test_bloom_snapshot_dedup_exact_under_heavy_collisions(spark):
         map(tuple, D.incremental_new_docs(new, old).collect())
     )
     for m_bits, k in ((64, 2), (1 << 16, 4)):
-        for variant in (
-            D.incremental_new_docs_bloom,
-            # the broadcast-back flavor (both old-side passes
-            # map-side) must agree under the same hostile sizings
-            D.incremental_new_docs_bloom_broadcast_back,
-        ):
-            got = sorted(
-                map(
-                    tuple,
-                    variant(new, old, m_bits=m_bits, k=k).collect(),
-                )
+        got = sorted(
+            map(
+                tuple,
+                D.incremental_new_docs_bloom(
+                    new, old, m_bits=m_bits, k=k).collect(),
             )
-            assert got == plain, (variant.__name__, m_bits, k)
-
-
-def test_bloom_broadcast_back_guards_suspect_slice(spark):
-    """The broadcast-back variant's known-small precondition is
-    enforced (ADVICE r10): a suspect slice over max_broadcast_rows
-    raises a clear error naming the shuffled-verify fallback instead
-    of broadcasting toward a driver OOM; None skips the probe."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from kinesis_alerts_consumer_spark.operators import dedup as D
-
-    docs = spark.createDataFrame(
-        [(i, f"doc number {i % 37} body") for i in range(200)],
-        "doc_id long, text string",
-    )
-    old = docs.filter(F.col("doc_id") % 3 == 0)
-    new = docs.filter(F.col("doc_id") % 3 != 0)
-    # 64-bit sketch saturates -> every distinct new fp is a suspect
-    with pytest.raises(ValueError, match="shuffled verify"):
-        D.incremental_new_docs_bloom_broadcast_back(
-            new, old, m_bits=64, k=2, max_broadcast_rows=3
         )
-    # None disables the guard; result still exact, no cache handle
-    plain = sorted(map(tuple, D.incremental_new_docs(new, old).collect()))
-    res = D.incremental_new_docs_bloom_broadcast_back(
-        new, old, m_bits=64, k=2, max_broadcast_rows=None
-    )
-    assert res.persisted_suspects is None
-    got = sorted(map(tuple, res.collect()))
-    assert got == plain
-    # a budget the slice fits under passes through, and the persisted
-    # slice is EXPOSED so long-lived sessions can release it (ADVICE
-    # r11: the cache was otherwise unreleasable short of clearCache)
-    res2 = D.incremental_new_docs_bloom_broadcast_back(
-        new, old, m_bits=64, k=2, max_broadcast_rows=1000
-    )
-    got2 = sorted(map(tuple, res2.collect()))
-    assert got2 == plain
-    assert res2.persisted_suspects is not None
-    assert res2.persisted_suspects.storageLevel.useMemory
-    res2.persisted_suspects.unpersist(blocking=True)
-    assert not res2.persisted_suspects.storageLevel.useMemory
+        assert got == plain, (m_bits, k)
 
 
 def test_bloom_probe_has_no_false_negatives(spark):

@@ -445,66 +445,6 @@ def test_metrics_sink_stage_dir_cleaned_even_if_staging_write_fails(
     assert not stage.exists(), "failed staging write leaked its dir"
 
 
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas twin of st03: final state
-    per key equals the batch aggregate. The TWS state server needs
-    google.protobuf — absent in this container, so this skips here
-    and runs wherever protobuf exists."""
-    pytest.importorskip("google.protobuf")
-    import uuid
-
-    from kinesis_alerts_consumer_spark.streaming.stateful import (
-        running_user_totals_tws,
-    )
-
-    name = "tws_" + uuid.uuid4().hex[:8]
-    q = (
-        running_user_totals_tws(stream_events(spark, SF_SMOKE))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        r.user_id: (r.n_events, round(r.total_value, 2))
-        for r in spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("total_value").alias("total_value"),
-        )
-        .collect()
-    }
-    register_tables(spark, SF_SMOKE)
-    want = {
-        r.user_id: (r.n, round(r.sv, 2))
-        for r in spark.sql(
-            "SELECT user_id, COUNT(*) AS n,"
-            " SUM(COALESCE(value, 0.0)) AS sv FROM events GROUP BY user_id"
-        ).collect()
-    }
-    assert got == want
-
-
-def test_transform_with_state_gated_error_without_protobuf(spark):
-    """Without protobuf the operator must fail at build time with an
-    actionable message, not crash the stream mid-flight."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        pytest.skip("protobuf present; gate inactive")
-    except ImportError:
-        pass
-    from kinesis_alerts_consumer_spark.streaming.stateful import (
-        running_user_totals_tws,
-    )
-
-    with pytest.raises(ImportError, match="protobuf"):
-        running_user_totals_tws(stream_events(spark, SF_SMOKE))
-
-
 def _day_ordered_stream(spark, tmp_path, files_per_trigger=2):
     """events replayed as one file per day, processed in day order
     with ``files_per_trigger`` files per micro-batch — the harness
@@ -1163,156 +1103,6 @@ def test_st10_absorbing_multi_batch_invariance(spark, tmp_path):
                .select("doc_id").distinct().collect()}
     assert {r[0] for b in batches for r in b} <= idx_ids
     assert spark.read.parquet(corpus_path).count() == 36
-
-
-def test_lsh_index_compact_preserves_probe(spark, tmp_path):
-    """The absorb lifecycle's maintenance op: absorbing batches grows
-    the index by one file per band per batch; compaction rewrites
-    each band partition independently down to one file with IDENTICAL
-    rows, so a probe through the compacted index returns exactly the
-    pre-compaction pairs. Also pins: selective bands= compaction,
-    the no-op skip for already-compact partitions, and the unknown-
-    partition raise."""
-    import pytest as _pytest
-
-    from kinesis_alerts_consumer_spark.operators.dedup import (
-        lsh_build_index,
-        lsh_incremental_pairs,
-        lsh_index_absorb,
-        lsh_index_compact,
-    )
-
-    def text_of(seed: str) -> str:
-        return " ".join(f"{seed}t{j}" for j in range(10))
-
-    old_rows = [(i, text_of(f"c{i}")) for i in range(20)]
-    old = spark.createDataFrame(old_rows, "doc_id long, text string")
-    idx_path = str(tmp_path / "index")
-    corpus_path = str(tmp_path / "corpus")
-    lsh_build_index(old, bands=2, rows_per_band=2, shingle=3) \
-        .write.partitionBy("band").parquet(idx_path)
-    old.write.parquet(corpus_path)
-
-    # absorb three small batches -> +1 file per band per batch
-    for k in range(3):
-        batch = spark.createDataFrame(
-            [(1000 + k, text_of(f"c{k}"))], "doc_id long, text string")
-        lsh_index_absorb(batch, idx_path, corpus_path,
-                         bands=2, rows_per_band=2, shingle=3)
-
-    def files_per_band():
-        return {
-            d: sum(f.endswith(".parquet")
-                   for f in os.listdir(os.path.join(idx_path, d)))
-            for d in sorted(os.listdir(idx_path))
-            if d.startswith("band=")
-        }
-
-    before_files = files_per_band()
-    assert all(n >= 4 for n in before_files.values())  # build + 3
-
-    probe_batch = spark.createDataFrame(
-        [(2000, text_of("c5"))], "doc_id long, text string")
-
-    def probe_pairs():
-        idx = spark.read.parquet(idx_path)
-        corpus = spark.read.parquet(corpus_path)
-        return {
-            (r["a"], r["b"], r["jaccard"])
-            for r in lsh_incremental_pairs(
-                probe_batch, corpus, shingle=3, threshold=0.5,
-                max_bucket=64, index=idx).collect()
-        }
-
-    rows_before = {
-        tuple(r) for r in spark.read.parquet(idx_path).collect()}
-    pairs_before = probe_pairs()
-    assert (5, 2000, 1.0) in pairs_before  # the planted exact copy
-
-    # selective compaction: one band only
-    stats = lsh_index_compact(spark, idx_path, bands=["band=0"])
-    assert set(stats) == {"band=0"} and stats["band=0"][1] == 1
-    assert files_per_band()["band=0"] == 1
-    assert files_per_band()["band=1"] == before_files["band=1"]
-
-    # full compaction: the remaining band; band=0 is skipped (no-op)
-    stats = lsh_index_compact(spark, idx_path)
-    assert set(stats) == {"band=1"} and stats["band=1"][1] == 1
-    assert all(n == 1 for n in files_per_band().values())
-
-    # identical rows, identical probe
-    rows_after = {
-        tuple(r) for r in spark.read.parquet(idx_path).collect()}
-    assert rows_after == rows_before
-    assert probe_pairs() == pairs_before
-
-    # unknown partition raises instead of silently compacting nothing
-    with _pytest.raises(ValueError, match="band=9"):
-        lsh_index_compact(spark, idx_path, bands=["band=9"])
-
-
-def test_lsh_index_compact_crash_recovery(spark, tmp_path):
-    """Every crash state of the two-rename swap self-repairs on the
-    next call (r14 review: the first cut cleaned only the staging
-    dir, so a mid-swap crash left a band's rows stranded in an
-    underscore dir Spark ignores — silent recall loss). Simulates
-    each state with real dirs and asserts the index rows after
-    recovery equal the pre-crash rows."""
-    import shutil
-
-    from kinesis_alerts_consumer_spark.operators.dedup import (
-        lsh_build_index,
-        lsh_index_compact,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"c{i}t{j}" for j in range(10)))
-         for i in range(12)], "doc_id long, text string")
-    idx_path = str(tmp_path / "index")
-    lsh_build_index(docs, bands=2, rows_per_band=2, shingle=3) \
-        .write.partitionBy("band").parquet(idx_path)
-    want = {tuple(r) for r in spark.read.parquet(idx_path).collect()}
-    b0 = os.path.join(idx_path, "band=0")
-
-    # state A: crash between the renames — partition ABSENT, complete
-    # stage + retiring dir present. Recovery must promote the stage.
-    os.rename(b0, os.path.join(idx_path, "_retiring_band=0"))
-    shutil.copytree(os.path.join(idx_path, "_retiring_band=0"),
-                    os.path.join(idx_path, "_compacting_band=0"))
-    # the copied partition dir has no _SUCCESS (partitionBy writes it
-    # at the ROOT) — stamp one, as a completed stage write would have
-    open(os.path.join(idx_path, "_compacting_band=0", "_SUCCESS"),
-         "w").close()
-    lsh_index_compact(spark, idx_path)
-    assert {tuple(r) for r in
-            spark.read.parquet(idx_path).collect()} == want
-    assert not any(d.startswith("_retiring") or d.startswith("_compacting")
-                   for d in os.listdir(idx_path))
-
-    # state B: crash between the renames with NO usable stage —
-    # recovery must roll the retiring copy back.
-    os.rename(b0, os.path.join(idx_path, "_retiring_band=0"))
-    lsh_index_compact(spark, idx_path)
-    assert {tuple(r) for r in
-            spark.read.parquet(idx_path).collect()} == want
-
-    # state C: crash after the second rename — live partition AND
-    # retiring dir both present. Recovery must drop the retiring copy
-    # (keeping it would be a stale duplicate if ever promoted).
-    shutil.copytree(b0, os.path.join(idx_path, "_retiring_band=0"))
-    lsh_index_compact(spark, idx_path)
-    assert {tuple(r) for r in
-            spark.read.parquet(idx_path).collect()} == want
-    assert not any(d.startswith("_") and "band" in d
-                   for d in os.listdir(idx_path))
-
-    # state D: stale half-written stage beside an intact partition —
-    # discarded, partition untouched.
-    os.makedirs(os.path.join(idx_path, "_compacting_band=1"))
-    lsh_index_compact(spark, idx_path)
-    assert not os.path.exists(os.path.join(idx_path, "_compacting_band=1"))
-    assert {tuple(r) for r in
-            spark.read.parquet(idx_path).collect()} == want
 
 
 def test_band_table_geometry_contracts(spark):
