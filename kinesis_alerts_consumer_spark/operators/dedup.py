@@ -26,10 +26,12 @@ no RNG anywhere, so oracle comparisons are exact.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import spread_for_compute
+from .util import spread_enabled, spread_for_compute
 
 # 60-bit integer hash from md5 — portable: Spark conv(hex,16,10),
 # DuckDB ('0x'||hex)::BIGINT. 15 hex chars keeps it positive signed.
@@ -165,6 +167,10 @@ def lsh_candidate_pairs(
     index: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: docs sharing any band bucket.
+    Returns distinct (a, b) with a < b, from the batch core
+    :func:`_bucket_pairs` over the docs' :func:`lsh_build_index` band
+    table (``bands * rows_per_band`` minhashes per doc; bucket key =
+    the band index and its ``r*`` row values).
 
     ``index`` accepts the docs' OWN prebuilt :func:`lsh_build_index`
     band table and skips the signature pass entirely — ``docs`` is
@@ -173,20 +179,15 @@ def lsh_candidate_pairs(
     :func:`jaccard_pairs` step). Two callers want this: the
     absorbing lifecycle (st10), whose per-batch band table already
     exists for the probe and the absorb — without it the within-batch
-    pass was the THIRD signature computation per batch (r14 review) —
-    and any corpus whose index is a standing artifact (the llm40
-    serving shape, self-dedup flavor). Geometry is the table's:
+    pass was the THIRD signature computation per batch — and any
+    corpus whose index is a standing artifact (the llm40 serving
+    shape, self-dedup flavor). Geometry is the table's:
     ``rows_per_band`` is derived from the ``r*`` columns and
     ``bands`` from the geometry cache / one narrow ``max(band)``
     aggregate; explicit arguments that mismatch raise (the
     raise-on-mismatch contract), and ``sizing="auto"`` raises —
     the table's geometry is already fixed. ``shingle`` is carried by
     the build as always and is undetectable here.
-
-    Signature of ``bands * rows_per_band`` minhashes; band value =
-    struct of its rows. Self-join on (band_index, band_value) —
-    shuffle key is small and uniform; the cross product never
-    materializes. Returns distinct (a, b) with a < b.
 
     Buckets holding more than ``max_bucket`` docs are dropped (same
     guard as winnowing's ``max_df``, :func:`winnow_near_dup_pairs`): a
@@ -197,10 +198,10 @@ def lsh_candidate_pairs(
     by exact dedup. ``None`` disables the cap.
 
     **The cap is a silent recall cliff if bands are too coarse for the
-    corpus** (r10 1000× measurement): at 5M docs the default (2, 2)
-    bands hash large fractions of the corpus into a handful of
-    buckets; the cap then drops those buckets WHOLESALE — planted
-    recall fell 20/20 → 13/20 and ~56k true ≥0.5-Jaccard pairs
+    corpus** (measured at 1000× the gated fixture): at 5M docs the
+    default (2, 2) bands hash large fractions of the corpus into a
+    handful of buckets; the cap then drops those buckets WHOLESALE —
+    planted recall fell 20/20 → 13/20 and ~56k true ≥0.5-Jaccard pairs
     vanished with no signal. Band count must RISE with corpus size
     (finer buckets = constant occupancy), not just to buy precision:
     at 5M docs (4, 4) kept 20/20 planted pairs at 2.7× the wall of
@@ -224,9 +225,9 @@ def lsh_candidate_pairs(
     :func:`suggest_lsh_sizing` derives a corpus-size-aware
     (bands, rows_per_band) from the occupancy + recall inequalities;
     use it instead of hand-picking once ``n_docs`` moves.
-    ``sizing="auto"`` does that derivation IN-LINE (VERDICT r11 item
-    6 — the gated llm03 pins (2, 2), the right literal for its
-    fixture but the wrong example for a 100 TB reader): one cheap
+    ``sizing="auto"`` does that derivation IN-LINE (the gated llm03
+    pins (2, 2), the right literal for its fixture but the wrong
+    example for a 100 TB reader): one cheap
     ``approx_count_distinct(doc_id)`` action (an HLL sketch over a
     column-pruned single-column scan — no shuffle of doc rows) feeds
     :func:`suggest_lsh_sizing` at its default threshold/recall/
@@ -240,20 +241,6 @@ def lsh_candidate_pairs(
     uncapped over-occupied bucket is an O(bucket²) pair explosion
     instead of a recall loss). ``sizing=None`` (default) is the
     prior behavior, byte-identical plans included.
-
-    Physical shape (r6): ONE aggregation — groupBy(bucket) ->
-    collect_list(doc_id) -> size() cap filter -> explode twice for the
-    per-bucket pair cross product. The previous bucket SELF-JOIN (+
-    broadcast anti-join for the cap) planned the whole signature
-    pipeline once per join side with no exchange reuse across the
-    subtrees — measured at sf10 as signatures computing 2-4x, 108.6 s
-    for the candidate stage; a shuffle_hash hint and a localCheckpoint
-    were both tried and measured (no reuse / slower). The member-list
-    form shuffles the same (bucket, doc_id) bytes exactly once. A
-    single over-cap bucket still materializes its member array on one
-    reducer before the filter drops it (8 bytes/member — a 1M-doc
-    viral bucket is 8 MB, survivable), which is the price of capping
-    without a second aggregation pass.
     """
     if index is not None:
         if sizing is not None:
@@ -261,30 +248,9 @@ def lsh_candidate_pairs(
                 "sizing cannot be combined with a prebuilt index — "
                 "the table's geometry is already fixed")
         b_idx, r_idx = _minhash_index_geometry(index)
-        if bands is None:
-            bands = b_idx
-        elif bands != b_idx:
-            raise ValueError(
-                f"bands={bands} does not match the prebuilt index's "
-                f"{b_idx} bands — omit it (it is read from the index) "
-                f"or pass {b_idx}")
-        if rows_per_band is None:
-            rows_per_band = r_idx
-        elif rows_per_band != r_idx:
-            raise ValueError(
-                f"rows_per_band={rows_per_band} does not match the "
-                f"prebuilt index's {r_idx} row columns — omit it (it "
-                f"is read from the index) or pass {r_idx}")
-        # the flat band table re-shaped to the struct the member-list
-        # aggregation below groups on; ``docs`` is never scanned
-        banded = index.select(
-            "doc_id",
-            F.struct(
-                F.col("band").alias("band"),
-                *[F.col(f"r{r}").alias(f"r{r}")
-                  for r in range(rows_per_band)],
-            ).alias("bucket"),
-        )
+        bands = _geometry_arg("bands", bands, b_idx, "bands")
+        rows_per_band = _geometry_arg(
+            "rows_per_band", rows_per_band, r_idx, "row columns")
     else:
         bands = 2 if bands is None else bands
         rows_per_band = 2 if rows_per_band is None else rows_per_band
@@ -296,10 +262,9 @@ def lsh_candidate_pairs(
                 docs.agg(F.approx_count_distinct("doc_id").alias("n"))
                 .collect()[0]["n"]
             )
-            # 2σ HLL buffer (VERDICT r12 item 3): size for the
-            # estimate's upper confidence bound so an under-estimate
-            # cannot land the derivation one band short of the recall
-            # promise
+            # 2σ HLL buffer: size for the estimate's upper confidence
+            # bound so an under-estimate cannot land the derivation
+            # one band short of the recall promise
             bands, rows_per_band = suggest_lsh_sizing(
                 hll_buffered_count(n_docs),
                 max_bucket=max_bucket if max_bucket is not None else 64,
@@ -309,45 +274,9 @@ def lsh_candidate_pairs(
                 stats["rows_per_band"] = rows_per_band
                 stats["n_docs_estimate"] = n_docs
                 stats["n_docs_sized_for"] = hll_buffered_count(n_docs)
-        k = bands * rows_per_band
-        sig = minhash_signatures(docs, num_hashes=k, shingle=shingle)
-        band_cols = [
-            F.struct(
-                F.lit(b).alias("band"),
-                *[F.col(f"mh{b * rows_per_band + r}").alias(f"r{r}")
-                  for r in range(rows_per_band)],
-            )
-            for b in range(bands)
-        ]
-        banded = sig.select(
-            "doc_id", F.explode(F.array(*band_cols)).alias("bucket")
-        )
-    # NOTE (r6 rehearsal): the plan consumes banded 4x (self-join
-    # left/right + the over-cap profile per side) with no exchange
-    # reuse across the broadcast subtrees. A localCheckpoint here was
-    # tried and MEASURED SLOWER at both sf0.1 and sf10 (llm36 1.69 ->
-    # 5.05 s, llm03 141 -> 159 s): the map-side partial min already
-    # dedups the expensive md5 work per consumer, and the checkpoint's
-    # lineage cut defeats scan-side pruning for the cheap replays.
-    buckets = banded.groupBy("bucket").agg(
-        F.collect_list("doc_id").alias("_ids")
-    )
-    if max_bucket is not None:
-        if stats is not None:
-            _overcap_light(
-                buckets.filter(F.size("_ids") > max_bucket),
-                F.size("_ids"), stats)
-        buckets = buckets.filter(F.size("_ids") <= max_bucket)
-    elif stats is not None:
-        _zero_light(stats)
-    return (
-        _spread_pairs(
-            buckets.select(F.explode("_ids").alias("a"), "_ids")
-            .select("a", F.explode("_ids").alias("b"))
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b"))
-        .distinct()
-    )
+        index = lsh_build_index(docs, bands, rows_per_band, shingle)
+    keys = ["band"] + [f"r{r}" for r in range(rows_per_band)]
+    return _bucket_pairs(index, keys, "doc_id", max_bucket, stats)
 
 
 def lsh_band_recall(
@@ -559,7 +488,7 @@ def _new_skew_light(new_idx: DataFrame, keys: list, stats: dict) -> None:
 
 
 # hyperplane signs tables, one per (session, bands, bits, dim) — see
-# hyperplane_lsh_pairs. Weak-keyed on the SESSION OBJECT, not id():
+# hyperplane_build_index. Weak-keyed on the SESSION OBJECT, not id():
 # a dict keyed on id(spark) would alias a new session to a dead one's
 # DataFrame after GC reuses the address (stale JVM refs), and would
 # pin dead sessions' plans forever in long-lived processes.
@@ -589,7 +518,7 @@ def _minhash_index_geometry(index: DataFrame) -> tuple[int, int]:
     per-micro-batch caller pays it once). Shared by every consumer
     of a band table (``index=`` on the incremental probe and the
     self-dedup pass, ``new_index=`` on the probe) so the validation
-    logic has ONE definition (r14 review #2/#3)."""
+    logic has ONE definition."""
     r_cols = sorted(
         (c for c in index.columns
          if c.startswith("r") and c[1:].isdigit()),
@@ -831,11 +760,8 @@ def _spread_pairs(cands: DataFrame) -> DataFrame:
     dynamic allocation (executors not yet registered at plan time)
     defaultParallelism alone under-sizes."""
     spark = cands.sparkSession
-    try:
-        if spark.conf.get("spark.graft.spreadForCompute", "auto") == "off":
-            return cands
-    except Exception:  # noqa: BLE001 — conf access never blocks the op
-        pass
+    if not spread_enabled(spark):
+        return cands
     try:
         # no explicit default: Spark 4 VALIDATES a supplied default
         # against the conf's requirement (a '0' placeholder throws
@@ -848,6 +774,105 @@ def _spread_pairs(cands: DataFrame) -> DataFrame:
     return cands.repartition(n, "a", "b")
 
 
+def _band_table(sig: DataFrame, id_col: str, geom: tuple[int, int],
+                key_cols: Callable[[int], list[Column]]) -> DataFrame:
+    """The flat band table ``(id, band, key columns)``, one row per
+    (id, band), from one row of signature columns per id —
+    ``key_cols(b)`` gives band b's named key columns. The one layout
+    every banded path reads (:func:`_bucket_pairs`,
+    :func:`_probe_candidates`), built only by :func:`lsh_build_index`
+    and :func:`hyperplane_build_index`. ``geom`` = (bands, key width)
+    seeds the probe's geometry cache: an in-memory ``index=``
+    round-trip skips the metadata aggregate; a parquet read is a new
+    object and re-derives it."""
+    out = sig.select(
+        id_col,
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"), *key_cols(b))
+            for b in range(geom[0])
+        ])).alias("_b"),
+    ).select(id_col, "_b.*")
+    _INDEX_GEOM_CACHE[out] = geom
+    return out
+
+
+def _batch_index(
+    new_index: DataFrame | None,
+    geom: tuple[int, int],
+    read_geometry: Callable[[DataFrame], tuple[int, int]],
+    build: Callable[[], DataFrame],
+    builder: str,
+) -> DataFrame:
+    """The probe's batch band table. A given ``new_index`` is checked
+    against the probe geometry ``geom`` and consumed as-is: same-width
+    key columns built at a different band count split the signature
+    differently and lose recall SILENTLY, so a mismatch raises (the
+    geometry is free from the build-site cache, else one narrow
+    aggregate on the tiny batch table). Otherwise ``build()`` is
+    checkpointed once: the table feeds the candidate core's semi
+    filter, its candidate join and the opt-in stats light, it is tiny
+    (batch rows x bands), and the llm03 counter-measurement (a
+    checkpoint defeating scan-side pruning) does not apply to a
+    computed signature table with nothing left to prune."""
+    if new_index is None:
+        return build().localCheckpoint(eager=True)
+    got = read_geometry(new_index)
+    if got != geom:
+        raise ValueError(
+            f"new_index geometry {got} does not match the probe "
+            f"geometry {geom} — build it with {builder}")
+    return new_index
+
+
+def _bucket_pairs(
+    index: DataFrame,
+    keys: list,
+    id_col: str,
+    max_bucket: int | None,
+    stats: dict | None,
+) -> DataFrame:
+    """Distinct ``(a, b)`` with a < b of the ids sharing a bucket
+    ``keys`` value in a flat band table — the batch candidate core of
+    :func:`lsh_candidate_pairs` and :func:`hyperplane_lsh_pairs`
+    (:func:`_probe_candidates` is the incremental one).
+
+    ONE aggregation: groupBy(keys) -> collect_list(id) -> size() cap
+    filter -> explode twice for the per-bucket pair cross product. A
+    bucket SELF-JOIN (+ broadcast anti-join for the cap) planned the
+    whole signature pipeline once per join side with no exchange
+    reuse across the subtrees — measured at sf10 as signatures
+    computing 2-4x, 108.6 s for the candidate stage; a shuffle_hash
+    hint and a localCheckpoint were both tried and measured (no reuse
+    / slower). The member-list form shuffles the same (bucket, id)
+    bytes exactly once. A single over-cap bucket still materializes
+    its member array on one reducer before the filter drops it (8
+    bytes/member — a 1M-doc viral bucket is 8 MB, survivable), which
+    is the price of capping without a second aggregation pass.
+
+    The band table is NOT checkpointed: a localCheckpoint here
+    measured SLOWER at both sf0.1 and sf10 (llm36 1.69 -> 5.05 s,
+    llm03 141 -> 159 s) — the map-side partial aggregates already
+    dedup the expensive signature work per consumer, and the
+    checkpoint's lineage cut defeats scan-side pruning for the cheap
+    replays. ``stats`` gets the over-cap light (a separate action;
+    the returned plan is the same with or without it)."""
+    buckets = index.groupBy(*keys).agg(F.collect_list(id_col).alias("_ids"))
+    if max_bucket is not None:
+        if stats is not None:
+            _overcap_light(
+                buckets.filter(F.size("_ids") > max_bucket),
+                F.size("_ids"), stats)
+        buckets = buckets.filter(F.size("_ids") <= max_bucket)
+    elif stats is not None:
+        _zero_light(stats)
+    return _spread_pairs(
+        buckets.select(F.explode("_ids").alias("a"), "_ids")
+        .select("a", F.explode("_ids").alias("b"))
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+    ).distinct()
+
+
 def _probe_candidates(
     old_idx: DataFrame,
     new_idx: DataFrame,
@@ -858,8 +883,9 @@ def _probe_candidates(
 ) -> DataFrame:
     """Distinct ``(a, b)`` candidates of a banded-index probe — ``a``
     an old id, ``b`` a new id sharing a bucket ``keys`` value — the
-    core shared by :func:`lsh_incremental_pairs` and
-    :func:`hyperplane_incremental_pairs`.
+    incremental candidate core of :func:`lsh_incremental_pairs` and
+    :func:`hyperplane_incremental_pairs` (:func:`_bucket_pairs` is the
+    batch one).
 
     The old index is scanned, never shuffled: a LEFT SEMI join against
     the broadcast new-side keys keeps only the buckets the batch
@@ -912,17 +938,32 @@ def _suspected(rows: DataFrame, cand: DataFrame, side: str, id_col: str,
     return rows.join(ids, id_col, "left_semi")
 
 
-def _exact_cos_verify(pairs: DataFrame, threshold: float) -> DataFrame:
-    """(a, b, cos >= threshold) from a joined candidate frame carrying
-    ``(a, b, _ea, _eb, _na, _nb)`` — the shared exact-cosine verify of
-    :func:`hyperplane_lsh_pairs` / :func:`hyperplane_incremental_pairs`.
-    A NULL/absent embedding yields NULL cos and is dropped by the
-    threshold filter; returned pair order is irrelevant (every gated
-    caller sorts; the operator contract is an unordered pair set)."""
-    from .similarity import dot
+def _exact_cos_verify(cand: DataFrame, emb_a: DataFrame, emb_b: DataFrame,
+                      id_col: str, threshold: float) -> DataFrame:
+    """(a, b, cos >= threshold) for the ``(a, b)`` candidates, with
+    ``a`` looked up in ``emb_a`` and ``b`` in ``emb_b`` — the one
+    exact-cosine verify of the hyperplane family
+    (:func:`hyperplane_lsh_pairs` passes its corpus twice,
+    :func:`hyperplane_incremental_pairs` the :func:`_suspected` old
+    and new sides). Norms are computed ONCE per vector and ride the
+    join, so each pair pays one interpreted-HOF traversal (the dot)
+    instead of three — pairs outnumber vectors by ~b*occupancy/2
+    (~100x on the gated fixture). A NULL/absent embedding yields NULL
+    cos and is dropped by the threshold filter; returned pair order is
+    irrelevant (every gated caller sorts; the operator contract is an
+    unordered pair set)."""
+    from .similarity import dot, norm
+
+    def side(emb: DataFrame, s: str) -> DataFrame:
+        return emb.select(
+            F.col(id_col).alias(s),
+            F.col("embedding").alias(f"_e{s}"),
+            norm(F.col("embedding")).alias(f"_n{s}"),
+        )
 
     return (
-        pairs.select(
+        cand.join(side(emb_a, "a"), "a").join(side(emb_b, "b"), "b")
+        .select(
             "a", "b",
             F.round(
                 F.try_divide(dot(F.col("_ea"), F.col("_eb")),
@@ -934,21 +975,148 @@ def _exact_cos_verify(pairs: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _hyperplane_banded(
+def hyperplane_lsh_pairs(
     emb: DataFrame,
-    bands: int,
-    bits_per_band: int,
-    dim: int,
-    id_col: str,
+    bands: int = 6,
+    bits_per_band: int = 6,
+    threshold: float = 0.9,
+    max_bucket: int | None = 1024,
+    dim: int | None = None,
+    stats: dict | None = None,
+    sizing: str | None = None,
+    id_col: str = "vec_id",
 ) -> DataFrame:
-    """(id_col, bucket struct(band int, bits string)) — the shared
-    signature machinery of :func:`hyperplane_lsh_pairs`, factored
-    in r13 so :func:`hyperplane_build_index` /
-    :func:`hyperplane_incremental_pairs` reuse the IDENTICAL
-    expressions (signs memoized per session; scan-side posexplode
-    to integer micros; broadcast signs table; map-side partial
-    integer sums). Full design rationale lives on
-    :func:`hyperplane_lsh_pairs`."""
+    """Banded random-hyperplane LSH near-dup pairs over an embedding
+    column: candidates from the batch core :func:`_bucket_pairs`
+    over the corpus's :func:`hyperplane_build_index` band table (the
+    table :func:`lsh_candidate_pairs` reads is the MinHash one), then
+    the exact-cosine verify :func:`_exact_cos_verify` (Charikar 2002
+    SimHash rounding; the banding is the standard MinHash-LSH
+    amplification applied to hyperplane bits).
+
+    Why it exists (measured with scripts/sign_lsh_recall_probe.py):
+    the single-band :func:`embedding_near_dup_pairs` holds recall only
+    for near-exact duplicates — at 1.05M vectors its adaptive 16-bit
+    bucket caught 3/20 planted cos-0.93 pairs, because one k-bit
+    band's recall is ``p^k`` and k must grow with n for occupancy.
+    Banding restores the S-curve: ``bands`` independent chances of
+    ``bits_per_band`` bits each, recall ``1 - (1 - p^r)^b``
+    (:func:`hyperplane_band_recall`), sized by
+    :func:`suggest_hyperplane_sizing` — measured 20/20 at the same
+    1.05M corpus with the auto-derived (30, 15).
+
+    Mechanics: the signature pass is :func:`hyperplane_build_index`'s
+    (plan-time ±1 hashlib coefficients, integer-micro dots as
+    map-side partial sums; see there). Band value = the r-bit sign
+    pattern of its dots; :func:`_bucket_pairs` does one aggregation,
+    the cap filter + ``stats`` warning light, the in-bucket pair
+    explosion and the distinct, followed by an exact-cosine verify
+    ``>= threshold``. Returns ``(a, b, cos)`` with a < b, cosine
+    rounded to 6 places (the llm05 compare convention).
+
+    Scale shape: the explode is scan-side (n*dim narrow rows, never
+    wider than (id, pos, q)), partial aggregation collapses them to
+    n rows of b*r longs before the only data-sized shuffles — the
+    dot groupBy and the bucket groupBy (key = r-bit string + band
+    index, uniform by construction) — plus the two id-keyed embedding
+    rejoins for the verify. Candidate volume ~``n * b *
+    target_bucket / 2`` — linear in n at constant occupancy, never
+    all-pairs. ``dim`` (the hyperplane dimensionality / signs-table
+    height) defaults to the corpus-wide MINIMUM width over NON-EMPTY
+    embeddings (one narrow aggregate — empty/null rows are excluded
+    from the inference); rows shorter than ``dim`` contribute only the
+    coordinates they have (inner join on pos — deterministic in both
+    engines), rows longer use their leading ``dim``. Sizings above
+    4096 total bits are refused with the JL-projection remedy named
+    (compose with llm34's ``random_projection``) — at that point the
+    S-curve parameters are fighting the data, not indexing it.
+    Empty/zero-width embeddings produce no dot rows and are excluded
+    from candidates (they cannot be near anything at cosine >= 0).
+
+    ``sizing="auto"`` derives (bands, bits_per_band) from one
+    ``approx_count_distinct`` action via
+    :func:`suggest_hyperplane_sizing` at ``threshold``, with the
+    occupancy target tightened to the caller's ``max_bucket`` when
+    that is below the default 32 (the :func:`lsh_candidate_pairs`
+    ``sizing`` contract); ``stats`` then also receives the chosen
+    sizing.
+    """
+    if sizing is not None:
+        if sizing != "auto":
+            raise ValueError(f"sizing must be None or 'auto', got {sizing!r}")
+        n_vecs = int(
+            emb.agg(F.approx_count_distinct(id_col).alias("n"))
+            .collect()[0]["n"]
+        )
+        # derive occupancy against the CALLER's cap, not just the
+        # default 32: a cap below the derivation target would
+        # otherwise wholesale-drop TYPICAL buckets (the
+        # lsh_candidate_pairs auto path does the same); the 2σ HLL
+        # buffer because the 1.05M probe's estimate was 8% low and
+        # landed (30,15) vs exact-n's (35,16) — recall survived on
+        # margin, not design
+        bands, bits_per_band = suggest_hyperplane_sizing(
+            hll_buffered_count(n_vecs), threshold=threshold,
+            target_bucket=min(32, max_bucket) if max_bucket is not None
+            else 32)
+        if stats is not None:
+            stats["bands"] = bands
+            stats["bits_per_band"] = bits_per_band
+            stats["n_vecs_estimate"] = n_vecs
+            stats["n_vecs_sized_for"] = hll_buffered_count(n_vecs)
+    index = hyperplane_build_index(emb, bands, bits_per_band, dim, id_col)
+    cands = _bucket_pairs(index, ["band", "bits"], id_col, max_bucket, stats)
+    return _exact_cos_verify(cands, emb, emb, id_col, threshold)
+
+
+def hyperplane_build_index(
+    emb: DataFrame,
+    bands: int = 6,
+    bits_per_band: int = 6,
+    dim: int | None = None,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Banded-hyperplane bucket table of an embedding corpus —
+    (vec_id, band, bits), one row per (vector, band); the signature
+    pass of every hyperplane path (:func:`hyperplane_lsh_pairs` and
+    both sides of :func:`hyperplane_incremental_pairs`), the
+    cosine-family counterpart of :func:`lsh_build_index` and the
+    near-dup analogue of the ANN family's ``ivf_assign``/``pq_encode``
+    artifacts. Built once over the historical corpus (b·r integer-sum
+    dots per vector, the expensive pass), written ``partitionBy
+    ("band")``; every future embedding batch probes it through
+    :func:`hyperplane_incremental_pairs` without re-signing or
+    re-shuffling the corpus.
+
+    Hyperplane (band, bit) is the ±1 vector
+    ``_hyperplane_sign(band, bit, j)`` over dims j — coefficients are
+    plan-time ``hashlib.md5`` literals shared verbatim with the SQL
+    oracle. The dot products are computed the llm02 explode→groupBy
+    way, NOT as one unrolled b*r*dim projection: the first cut
+    unrolled 2304 literal terms into every stage that touched the
+    signature, and each CALL then paid 10-15 s of janino on multi-MB
+    generated sources whose fresh exprIds defeat the codegen cache —
+    a per-plan cost, independent of data size, that made the 2060-row
+    gated query cost 22 s. This form posexplodes the embedding
+    (quantized to exact integer micros, ``floor(val*1e6)`` — the
+    llm30 device, so the sums commute and both engines agree
+    bit-for-bit with NO ordering contract), broadcast-joins a dim-row
+    ±1 signs table, and computes all ``b*r`` dots as map-side partial
+    integer SUMs — generated code is O(b*r), the shuffle carries one
+    row of b*r longs per vector, and the per-call plan cost is
+    milliseconds.
+
+    RECORD THE ``dim`` YOU BUILD WITH: unlike bands (``max(band)+1``)
+    and bits (``length(bits)``), the hyperplane dimensionality is not
+    recoverable from the table, and probing with a different dim
+    signs different coordinates — the probe requires it explicitly
+    (the ``shingle`` contract of :func:`lsh_incremental_pairs`).
+    ``dim=None`` infers the corpus MIN non-empty width."""
+    _check_hyperplane_sizing(bands, bits_per_band)
+    if dim is None:
+        dim = _infer_embedding_dim(emb)
+    if dim < 1:
+        raise ValueError(f"embedding dim must be >= 1, got {dim}")
     n_bits = bands * bits_per_band
     # signs table: dim rows x (pos, s_0..s_{b*r-1}) — tiny, broadcast.
     # The plan-time hashlib literals live HERE (and verbatim in the
@@ -974,11 +1142,11 @@ def _hyperplane_banded(
             # build of it launched a defaultParallelism-task stage
             # whose tasks each blocked ~0.2 s on a Python worker
             # round-trip — measured 7.6 s executorRunTime (0.35 s
-            # wall) PER RUN on llm39, twice per run on llm41 (r14
-            # optimization profiling). Literal count is bounded by the
-            # _check_hyperplane_sizing envelope at typical dims; the
-            # guard keeps a huge (dim x bits) sizing off the SQL
-            # parser and on the old pickle path instead.
+            # wall) PER RUN on llm39, twice per run on llm41. Literal
+            # count is bounded by the _check_hyperplane_sizing
+            # envelope at typical dims; the guard keeps a huge
+            # (dim x bits) sizing off the SQL parser and on the
+            # pickle path instead.
             values_sql = ", ".join(
                 "(" + ", ".join(str(v) for v in row) + ")"
                 for row in sign_rows
@@ -1012,219 +1180,12 @@ def _hyperplane_banded(
         .agg(*[F.sum(F.col(c) * F.col("_q")).alias(f"d_{k}")
                for k, c in enumerate(s_cols)])
     )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat(*[
-                F.when(F.col(f"d_{b * bits_per_band + r}") >= 0, F.lit("1"))
-                .otherwise(F.lit("0"))
-                for r in range(bits_per_band)
-            ]).alias("bits"),
-        )
-        for b in range(bands)
-    ]
-    banded = dots.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bucket")
-    )
-    return banded
-
-
-def hyperplane_lsh_pairs(
-    emb: DataFrame,
-    bands: int = 6,
-    bits_per_band: int = 6,
-    threshold: float = 0.9,
-    max_bucket: int | None = 1024,
-    dim: int | None = None,
-    stats: dict | None = None,
-    sizing: str | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Banded random-hyperplane LSH near-dup pairs over an embedding
-    column — the cosine-space twin of :func:`lsh_candidate_pairs`
-    (Charikar 2002 SimHash rounding; the banding is the standard
-    MinHash-LSH amplification applied to hyperplane bits).
-
-    Why it exists (r12 probe, scripts/sign_lsh_recall_probe.py): the
-    single-band :func:`embedding_near_dup_pairs` holds recall only
-    for near-exact duplicates — at 1.05M vectors its adaptive 16-bit
-    bucket caught 3/20 planted cos-0.93 pairs, because one k-bit
-    band's recall is ``p^k`` and k must grow with n for occupancy.
-    Banding restores the S-curve: ``bands`` independent chances of
-    ``bits_per_band`` bits each, recall ``1 - (1 - p^r)^b``
-    (:func:`hyperplane_band_recall`), sized by
-    :func:`suggest_hyperplane_sizing` — measured 20/20 at the same
-    1.05M corpus with the auto-derived (30, 15).
-
-    Mechanics: hyperplane (band, bit) is the ±1 vector
-    ``_hyperplane_sign(band, bit, j)`` over dims j — coefficients are
-    plan-time ``hashlib.md5`` literals shared verbatim with the SQL
-    oracle. The dot products are computed the llm02
-    explode→groupBy way, NOT as one unrolled b*r*dim projection: the
-    first cut unrolled 2304 literal terms into every stage that
-    touched the signature, and each CALL then paid 10-15 s of janino
-    on multi-MB generated sources whose fresh exprIds defeat the
-    codegen cache — a per-plan cost, independent of data size, that
-    made the 2060-row gated query cost 22 s. This form posexplodes
-    the embedding (quantized to exact integer micros,
-    ``floor(val*1e6)`` — the llm30 device, so the sums commute and
-    both engines agree bit-for-bit with NO ordering contract),
-    broadcast-joins a dim-row ±1 signs table, and computes all
-    ``b*r`` dots as map-side partial integer SUMs — generated code is
-    O(b*r), the shuffle carries one row of b*r longs per vector, and
-    the per-call plan cost is milliseconds. Band value = the r-bit
-    sign pattern of its dots; same member-list bucket machinery as
-    :func:`lsh_candidate_pairs` (one aggregation, cap filter +
-    ``stats`` warning light, in-bucket pair explosion, distinct)
-    followed by an exact-cosine verify ``>= threshold``. Returns
-    ``(a, b, cos)`` with a < b, cosine rounded to 6 places (the llm05
-    compare convention).
-
-    Scale shape: the explode is scan-side (n*dim narrow rows, never
-    wider than (id, pos, q)), partial aggregation collapses them to
-    n rows of b*r longs before the only data-sized shuffles — the
-    dot groupBy and the bucket groupBy (key = r-bit string + band
-    index, uniform by construction) — plus the two id-keyed embedding
-    rejoins for the verify. Candidate volume ~``n * b *
-    target_bucket / 2`` — linear in n at constant occupancy, never
-    all-pairs. ``dim`` (the hyperplane dimensionality / signs-table
-    height) defaults to the corpus-wide MINIMUM width over NON-EMPTY
-    embeddings (one narrow aggregate — empty/null rows are excluded
-    from the inference, ADVICE r12); rows shorter than ``dim``
-    contribute only the
-    coordinates they have (inner join on pos — deterministic in both
-    engines), rows longer use their leading ``dim``. Sizings above
-    4096 total bits are refused with the JL-projection remedy named
-    (compose with llm34's ``random_projection``) — at that point the
-    S-curve parameters are fighting the data, not indexing it.
-    Empty/zero-width embeddings produce no dot rows and are excluded
-    from candidates (they cannot be near anything at cosine >= 0).
-
-    ``sizing="auto"`` derives (bands, bits_per_band) from one
-    ``approx_count_distinct`` action via
-    :func:`suggest_hyperplane_sizing` at ``threshold``, with the
-    occupancy target tightened to the caller's ``max_bucket`` when
-    that is below the default 32 (the
-    :func:`lsh_candidate_pairs` ``sizing`` contract, VERDICT r11
-    item 6); ``stats`` then also receives the chosen sizing.
-    """
-    if sizing is not None:
-        if sizing != "auto":
-            raise ValueError(f"sizing must be None or 'auto', got {sizing!r}")
-        n_vecs = int(
-            emb.agg(F.approx_count_distinct(id_col).alias("n"))
-            .collect()[0]["n"]
-        )
-        # derive occupancy against the CALLER's cap, not just the
-        # default 32 (r12 review: a cap below the derivation target
-        # would otherwise wholesale-drop TYPICAL buckets — the
-        # lsh_candidate_pairs auto path already does this); 2σ HLL
-        # buffer per VERDICT r12 item 3 (the 1.05M probe's estimate
-        # was 8% low and landed (30,15) vs exact-n's (35,16) — recall
-        # survived on margin, not design)
-        bands, bits_per_band = suggest_hyperplane_sizing(
-            hll_buffered_count(n_vecs), threshold=threshold,
-            target_bucket=min(32, max_bucket) if max_bucket is not None
-            else 32)
-        if stats is not None:
-            stats["bands"] = bands
-            stats["bits_per_band"] = bits_per_band
-            stats["n_vecs_estimate"] = n_vecs
-            stats["n_vecs_sized_for"] = hll_buffered_count(n_vecs)
-    if dim is None:
-        dim = _infer_embedding_dim(emb)
-    if dim < 1:
-        raise ValueError(f"embedding dim must be >= 1, got {dim}")
-    _check_hyperplane_sizing(bands, bits_per_band)
-
-    banded = _hyperplane_banded(emb, bands, bits_per_band, dim, id_col)
-    buckets = banded.groupBy("bucket").agg(
-        F.collect_list(id_col).alias("_ids")
-    )
-    if max_bucket is not None:
-        if stats is not None:
-            _overcap_light(
-                buckets.filter(F.size("_ids") > max_bucket),
-                F.size("_ids"), stats)
-        buckets = buckets.filter(F.size("_ids") <= max_bucket)
-    elif stats is not None:
-        _zero_light(stats)
-    cands = (
-        _spread_pairs(
-            buckets.select(F.explode("_ids").alias("a"), "_ids")
-            .select("a", F.explode("_ids").alias("b"))
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b"))
-        .distinct()
-    )
-    # Verify: norms precomputed ONCE per vector (they ride the join),
-    # so each candidate pair pays one interpreted-HOF traversal (the
-    # dot) instead of three — the pair side outnumbers the vector
-    # side by ~b*occupancy/2 (~100x on the gated fixture). The pair
-    # frame is spread across cores first: its per-row verify cost is
-    # CPU, not bytes, and AQE's byte-based coalescing would otherwise
-    # run it on ONE task (_spread_pairs).
-    from .similarity import norm
-
-    vecs = emb.select(
-        F.col(id_col), F.col("embedding"),
-        norm(F.col("embedding")).alias("_n"),
-    )
-    pairs = (
-        cands.join(vecs.withColumnRenamed(id_col, "a")
-              .withColumnRenamed("embedding", "_ea")
-                   .withColumnRenamed("_n", "_na"), "a")
-        .join(vecs.withColumnRenamed(id_col, "b")
-              .withColumnRenamed("embedding", "_eb")
-              .withColumnRenamed("_n", "_nb"), "b")
-    )
-    return _exact_cos_verify(pairs, threshold)
-
-
-def hyperplane_build_index(
-    emb: DataFrame,
-    bands: int = 6,
-    bits_per_band: int = 6,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Durable banded-hyperplane bucket table for an existing
-    embedding corpus — (vec_id, band, bits), one row per (vector,
-    band); the cosine-family twin of :func:`lsh_build_index` and the
-    near-dup analogue of the ANN family's ``ivf_assign``/``pq_encode``
-    artifacts. Built once over the historical corpus (b·r integer-sum
-    dots per vector, the expensive pass), written ``partitionBy
-    ("band")``; every future embedding batch probes it through
-    :func:`hyperplane_incremental_pairs` without re-signing or
-    re-shuffling the corpus.
-
-    The banding is byte-identical to :func:`hyperplane_lsh_pairs`'s
-    in-line form (shared :func:`_hyperplane_banded` machinery: the
-    same plan-time ±1 hashlib literals, the same integer-micro
-    quantization). RECORD THE ``dim`` YOU BUILD WITH: unlike bands
-    (``max(band)+1``) and bits (``length(bits)``), the hyperplane
-    dimensionality is not recoverable from the table, and probing
-    with a different dim signs different coordinates — the probe
-    requires it explicitly (the ``shingle`` contract of
-    :func:`lsh_incremental_pairs`). ``dim=None`` infers the corpus
-    MIN non-empty width."""
-    _check_hyperplane_sizing(bands, bits_per_band)
-    if dim is None:
-        dim = _infer_embedding_dim(emb)
-    if dim < 1:
-        raise ValueError(f"embedding dim must be >= 1, got {dim}")
-    banded = _hyperplane_banded(emb, bands, bits_per_band, dim, id_col)
-    out = banded.select(
-        F.col(id_col),
-        F.col("bucket.band").alias("band"),
-        F.col("bucket.bits").alias("bits"),
-    )
-    # seed the probe's geometry cache: the builder knows (bands,
-    # bits) statically, so an in-memory index= round-trip skips the
-    # max(band)/length(bits) aggregate entirely (r13 review); a
-    # parquet-written index is a NEW object and re-derives correctly
-    _INDEX_GEOM_CACHE[out] = (bands, bits_per_band)
-    return out
+    return _band_table(dots, id_col, (bands, bits_per_band), lambda b: [
+        F.concat(*[
+            F.when(F.col(f"d_{b * bits_per_band + r}") >= 0, F.lit("1"))
+            .otherwise(F.lit("0"))
+            for r in range(bits_per_band)
+        ]).alias("bits")])
 
 
 def hyperplane_incremental_pairs(
@@ -1243,10 +1204,12 @@ def hyperplane_incremental_pairs(
     """Embedding near-dup pairs of a NEW batch against an EXISTING
     corpus — returns ``(a, b, cos)`` with ``a`` an old vec_id, ``b``
     a new vec_id, exact cosine ``>= threshold`` (rounded to 6, the
-    llm05 convention). The cosine-family twin of
-    :func:`lsh_incremental_pairs`: only new-vs-old pairs, the corpus
-    side served from the prebuilt :func:`hyperplane_build_index`
-    table.
+    llm05 convention). Only new-vs-old pairs, the corpus side served
+    from the prebuilt :func:`hyperplane_build_index` table; the
+    candidates come from the incremental core :func:`_probe_candidates`
+    (shared with :func:`lsh_incremental_pairs`), the batch table from
+    :func:`hyperplane_build_index` too, and the score from
+    :func:`_exact_cos_verify`.
 
     Geometry contract (the PQ/lsh-index discipline): with
     ``index=``, bands (``max(band)+1``) and bits_per_band
@@ -1258,8 +1221,7 @@ def hyperplane_incremental_pairs(
     on the probe side and quietly zero recall. Old/new id spaces must
     be disjoint (the verify distinguishes sides by id).
 
-    Physical shape: the candidate core is :func:`_probe_candidates`,
-    shared with :func:`lsh_incremental_pairs` — the index is scanned,
+    Physical shape (:func:`_probe_candidates`) — the index is scanned,
     never shuffled (broadcast new-keys semi filter; map-side partial
     membership counts; broadcast anti-join cap on OLD membership among
     PROBED buckets, output-identical to the corpus-wide cap since
@@ -1296,7 +1258,6 @@ def hyperplane_incremental_pairs(
         bands = _geometry_arg("bands", bands, b_idx, "bands")
         bits_per_band = _geometry_arg(
             "bits_per_band", bits_per_band, r_idx, "bits per band")
-        old_idx = index
     else:
         bands = 6 if bands is None else bands
         bits_per_band = 6 if bits_per_band is None else bits_per_band
@@ -1307,56 +1268,19 @@ def hyperplane_incremental_pairs(
             # bucket, the duplicate silently missed
             dim = min(_infer_embedding_dim(emb_old),
                       _infer_embedding_dim(emb_new))
-        old_idx = hyperplane_build_index(
-            emb_old, bands=bands, bits_per_band=bits_per_band,
-            dim=dim, id_col=id_col)
-    if dim < 1:
-        raise ValueError(f"embedding dim must be >= 1, got {dim}")
-    _check_hyperplane_sizing(bands, bits_per_band)
-
-    keys = ["band", "bits"]
-    if new_index is not None:
-        # same raise-on-mismatch contract as the lsh twin: same-width
-        # bits built at a different bands split the hyperplanes
-        # differently and lose recall SILENTLY
-        geom_n = _hyperplane_index_geometry(new_index)
-        if geom_n != (bands, bits_per_band):
-            raise ValueError(
-                f"new_index geometry {geom_n} does not match the probe "
-                f"geometry ({bands}, {bits_per_band}) — build it with "
-                "hyperplane_build_index at the same (bands, "
-                "bits_per_band, dim)")
-        new_idx = new_index
-    else:
-        new_idx = _hyperplane_banded(
-            emb_new, bands, bits_per_band, dim, id_col
-        ).select(
-            F.col(id_col),
-            F.col("bucket.band").alias("band"),
-            F.col("bucket.bits").alias("bits"),
-        )
-        # the batch signature table feeds the candidate core's semi
-        # filter, its candidate join and the opt-in stats light — one
-        # checkpoint, tiny table (the lsh_incremental_pairs rationale)
-        new_idx = new_idx.localCheckpoint(eager=True)
-
-    cand = _probe_candidates(old_idx, new_idx, keys, id_col, max_bucket,
-                             stats)
-
-    from .similarity import norm
-
-    vecs_a = _suspected(emb_old, cand, "a", id_col, max_bucket).select(
-        F.col(id_col).alias("a"),
-        F.col("embedding").alias("_ea"),
-        norm(F.col("embedding")).alias("_na"),
-    )
-    vecs_b = _suspected(emb_new, cand, "b", id_col, max_bucket).select(
-        F.col(id_col).alias("b"),
-        F.col("embedding").alias("_eb"),
-        norm(F.col("embedding")).alias("_nb"),
-    )
+        index = hyperplane_build_index(
+            emb_old, bands, bits_per_band, dim, id_col)
+    new_idx = _batch_index(
+        new_index, (bands, bits_per_band), _hyperplane_index_geometry,
+        lambda: hyperplane_build_index(
+            emb_new, bands, bits_per_band, dim, id_col),
+        "hyperplane_build_index at the same (bands, bits_per_band, dim)")
+    cand = _probe_candidates(index, new_idx, ["band", "bits"], id_col,
+                             max_bucket, stats)
     return _exact_cos_verify(
-        cand.join(vecs_a, "a").join(vecs_b, "b"), threshold)
+        cand, _suspected(emb_old, cand, "a", id_col, max_bucket),
+        _suspected(emb_new, cand, "b", id_col, max_bucket), id_col,
+        threshold)
 
 
 def jaccard_pairs(
@@ -1424,7 +1348,7 @@ def lsh_build_index(
     durable incremental-dedup artifact (doc_id, band, r0..r{r-1}),
     one row per (doc, band).
 
-    This is the near-dup analogue of the r12 ANN lesson
+    This is the near-dup analogue of the ANN family's index artifacts
     (:func:`~..operators.similarity.ivf_assign` /
     :func:`~..operators.similarity.pq_encode`): at 100 TB the index
     is built ONCE over the historical corpus (b·r minhashes per doc,
@@ -1435,10 +1359,10 @@ def lsh_build_index(
     full-corpus re-shuffle — the production dedup pattern: new data
     is deduped AGAINST the corpus, the corpus is not re-deduped.
 
-    The banding is byte-identical to :func:`lsh_candidate_pairs`'s
-    in-line form (same ``minhash_signatures`` hash recipe, same
-    band/row layout), flattened to plain columns so the table is
-    parquet-writable and partition-prunable. ``shingle`` is part of
+    It is the one MinHash band table: :func:`lsh_candidate_pairs`
+    builds it in-line for its batch core, and both sides of
+    :func:`lsh_incremental_pairs` read it. Plain columns, so the table
+    is parquet-writable and partition-prunable. ``shingle`` is part of
     the index geometry but not recoverable from the schema — callers
     own passing the same value at probe time (documented on
     :func:`lsh_incremental_pairs`; bands/rows ARE validated there
@@ -1447,25 +1371,9 @@ def lsh_build_index(
         raise ValueError("bands and rows_per_band must be >= 1")
     sig = minhash_signatures(
         docs, num_hashes=bands * rows_per_band, shingle=shingle)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            *[F.col(f"mh{b * rows_per_band + r}").alias(f"r{r}")
-              for r in range(rows_per_band)],
-        )
-        for b in range(bands)
-    ]
-    out = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("_b")
-    ).select(
-        "doc_id", "_b.band",
-        *[F.col(f"_b.r{r}") for r in range(rows_per_band)],
-    )
-    # seed the probe's geometry cache (the hyperplane_build_index
-    # device): an in-memory index= round-trip skips the max(band)
-    # metadata aggregate; a parquet read is a new object, re-derived
-    _INDEX_GEOM_CACHE[out] = (bands, rows_per_band)
-    return out
+    return _band_table(sig, "doc_id", (bands, rows_per_band), lambda b: [
+        F.col(f"mh{b * rows_per_band + r}").alias(f"r{r}")
+        for r in range(rows_per_band)])
 
 
 def checkpoint_index(index: DataFrame, eager: bool = True) -> DataFrame:
@@ -1474,7 +1382,7 @@ def checkpoint_index(index: DataFrame, eager: bool = True) -> DataFrame:
     geometry-cache seed through — ``localCheckpoint`` returns a NEW
     DataFrame object, so without this the probe's raise-on-mismatch
     validation would re-pay the metadata aggregate (one extra driver
-    action per batch). Used by the r15 job-overlap callers (guide
+    action per batch). Used by the job-overlap callers (guide
     §2.6): the new batch's signature pass is checkpointed on a worker
     thread while the corpus index writes on another."""
     out = index.localCheckpoint(eager=eager)
@@ -1501,8 +1409,10 @@ def lsh_incremental_pairs(
     doc_id, exact shingle-Jaccard ``>= threshold``. Only new-vs-old
     pairs: old-vs-old was settled when the corpus was deduped, and
     new-vs-new belongs to the batch's own :func:`lsh_candidate_pairs`
-    pass. The incremental twin of llm22's exact digest anti-join, at
-    near-dup (MinHash) granularity.
+    pass. llm22's exact digest anti-join at near-dup (MinHash)
+    granularity: candidates from the incremental core
+    :func:`_probe_candidates` over two :func:`lsh_build_index` band
+    tables (corpus and batch), scored by :func:`jaccard_pairs`.
 
     ``new_index`` accepts the NEW batch's own precomputed (and
     persisted/checkpointed) :func:`lsh_build_index` table, skipping
@@ -1581,43 +1491,16 @@ def lsh_incremental_pairs(
         rows_per_band = _geometry_arg(
             "rows_per_band", rows_per_band, r_idx, "row columns")
         bands = _geometry_arg("bands", bands, b_idx, "bands")
-        old_idx = index
     else:
         bands = 2 if bands is None else bands
         rows_per_band = 2 if rows_per_band is None else rows_per_band
-        old_idx = lsh_build_index(
-            docs_old, bands=bands, rows_per_band=rows_per_band,
-            shingle=shingle)
+        index = lsh_build_index(docs_old, bands, rows_per_band, shingle)
+    new_idx = _batch_index(
+        new_index, (bands, rows_per_band), _minhash_index_geometry,
+        lambda: lsh_build_index(docs_new, bands, rows_per_band, shingle),
+        "lsh_build_index at the same (bands, rows_per_band, shingle)")
     keys = ["band"] + [f"r{r}" for r in range(rows_per_band)]
-    if new_index is not None:
-        # full geometry check, same raise-on-mismatch contract as the
-        # index= path: same-width columns built at a different bands
-        # split the minhashes differently and lose recall SILENTLY.
-        # Geometry comes free from the build-site cache
-        # when the caller passes the lsh_build_index result itself; a
-        # checkpointed/read-back table pays one narrow aggregate on
-        # the tiny batch table, memoized per object like the old side.
-        n_bands, n_rows = _minhash_index_geometry(new_index)
-        if (n_bands, n_rows) != (bands, rows_per_band):
-            raise ValueError(
-                f"new_index geometry ({n_bands}, {n_rows}) does not "
-                f"match the probe geometry ({bands}, {rows_per_band}) "
-                "— build it with lsh_build_index at the same "
-                "(bands, rows_per_band, shingle)")
-        new_idx = new_index
-    else:
-        new_idx = lsh_build_index(
-            docs_new, bands=bands, rows_per_band=rows_per_band,
-            shingle=shingle)
-        # the new batch's signature table feeds the candidate core's
-        # semi filter, its candidate join and the opt-in stats light —
-        # checkpoint it once; it is tiny (batch rows x bands) and the
-        # llm03 counter-measurement (checkpoint defeating scan-side
-        # pruning) does not apply to a computed signature table with
-        # nothing left to prune
-        new_idx = new_idx.localCheckpoint(eager=True)
-
-    cand = _probe_candidates(old_idx, new_idx, keys, "doc_id", max_bucket,
+    cand = _probe_candidates(index, new_idx, keys, "doc_id", max_bucket,
                              stats)
     verify_docs = (
         _suspected(docs_old, cand, "a", "doc_id", max_bucket)

@@ -5,7 +5,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _memo_ctx: Any = None
 _memo: dict[str, Any] = {}
@@ -62,6 +62,17 @@ def run_overlapped(*thunks: Callable[[], Any]) -> list[Any]:
 _SPREAD_MIN_FACTOR = 2
 
 
+def spread_enabled(spark: SparkSession) -> bool:
+    """False when the deployment turned every forced spread off with
+    ``spark.graft.spreadForCompute=off`` — the one reading of the
+    switch, shared by :func:`spread_for_compute` and the dedup pair
+    spread. A session whose conf cannot be read keeps the spread on."""
+    try:
+        return spark.conf.get("spark.graft.spreadForCompute", "auto") != "off"
+    except Exception:  # noqa: BLE001 — conf access never blocks the op
+        return True
+
+
 def spread_for_compute(df: DataFrame) -> DataFrame:
     """Repartition a DataFrame whose partition count is far below the
     cluster's parallelism before a CPU-heavy per-row stage.
@@ -92,11 +103,8 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
     at scale must too); probing actual row distribution would cost a
     full pass.
     """
-    try:
-        if df.sparkSession.conf.get("spark.graft.spreadForCompute", "auto") == "off":
-            return df
-    except Exception:  # noqa: BLE001 — conf access never blocks the op
-        pass
+    if not spread_enabled(df.sparkSession):
+        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() * _SPREAD_MIN_FACTOR <= target:

@@ -1685,12 +1685,12 @@ def q_hyperplane_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs land at cos 1.0, perturbed ones cross 0.9 or not on
     bit-identical doubles (the llm27 device).
 
-    r15 (guide §2.6): corpus-index write and the new batch's banded
-    signature pass overlap on driver threads (the llm40 device);
+    Corpus-index write and the new batch's banded signature pass
+    overlap on driver threads (guide §2.6, the llm40 device);
     ``new_index=`` feeds the probe the checkpointed batch table it
-    would otherwise build in-line — byte-identical signatures (shared
-    :func:`~..operators.dedup._hyperplane_banded` machinery at the
-    same (6, 6, dim=64))."""
+    would otherwise build in-line — byte-identical signatures (both
+    are :func:`~..operators.dedup.hyperplane_build_index` at the same
+    (6, 6, dim=64))."""
     from ..operators.util import run_overlapped
 
     t = _tables(spark, sf_dir)

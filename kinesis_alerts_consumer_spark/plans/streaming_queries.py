@@ -42,6 +42,18 @@ def _await(q, timeout: int = 600) -> None:
         )
 
 
+def _batch_dirs(out: str) -> list[str]:
+    """The ``b{batch_id}`` subdirectories a per-batch ``foreachBatch``
+    sink wrote under ``out``, as explicit paths. A ``b*`` glob read
+    instead makes Spark's ``FileStreamSink.hasMetadata`` stat the glob
+    as a literal path and log a ``FileNotFoundException`` stack on
+    every healthy run."""
+    import os
+
+    return sorted(os.path.join(out, d) for d in os.listdir(out)
+                  if d.startswith("b"))
+
+
 def _run_to_memory(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Memory sink — ONLY for aggregates whose result is bounded
     (st01: hours x event types). An unbounded result through the
@@ -816,7 +828,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     _await(q)
-    return spark.read.parquet(os.path.join(out, "b*")).orderBy("a", "b")
+    return spark.read.parquet(*_batch_dirs(out)).orderBy("a", "b")
 
 
 def absorbing_dedup_step(
@@ -987,7 +999,7 @@ def q_stream_absorbing_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     _await(q)
-    return spark.read.parquet(os.path.join(out, "b*")).orderBy("a", "b")
+    return spark.read.parquet(*_batch_dirs(out)).orderBy("a", "b")
 
 
 # the oracle is llm40's full-recompute template (shared so the

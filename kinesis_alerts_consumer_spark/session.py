@@ -47,6 +47,9 @@ RUNTIME_CONFS: dict[str, str] = {
 # Confs that must be set before the JVM/session exists.
 BUILD_CONFS: dict[str, str] = {
     "spark.ui.enabled": "false",
+    # no console progress bars: they interleave with the bench's
+    # stdout/stderr and carry nothing the run records do not
+    "spark.ui.showConsoleProgress": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     # local[N] has no dynamic executors; bound shuffle fan-out to
     # cores. Tracks SPARK_GRAFT_CPUS (the bench's core count) so the

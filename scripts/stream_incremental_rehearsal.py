@@ -177,7 +177,11 @@ def main() -> None:
     q.awaitTermination()
     total = time.monotonic() - t_all
 
-    got = spark.read.parquet(os.path.join(out, "b*"))
+    from kinesis_alerts_consumer_spark.plans.streaming_queries import (
+        _batch_dirs,
+    )
+
+    got = spark.read.parquet(*_batch_dirs(out))
     pairs = {(r.a, r.b) for r in got.select("a", "b").collect()}
     recall = sum(p in pairs for p in planted)
 

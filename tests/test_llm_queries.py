@@ -594,6 +594,15 @@ def test_hyperplane_lsh_pairs_semantics(spark):
     ).sameSemantics(hyperplane_lsh_pairs(
         ragged, bands=2, bits_per_band=2, threshold=-1.0, dim=3))
 
+    # a non-default id column rides the builder and the batch core
+    # through to the verify: same pairs and cosines as under vec_id
+    renamed = hyperplane_lsh_pairs(
+        emb.withColumnRenamed("vec_id", "item"), bands=4,
+        bits_per_band=4, threshold=0.9, max_bucket=10, id_col="item")
+    assert renamed.columns == ["a", "b", "cos"]
+    assert {tuple(r) for r in renamed.collect()} == {
+        tuple(r) for r in plain.collect()}
+
     with pytest.raises(ValueError, match="auto"):
         hyperplane_lsh_pairs(emb, sizing="nope")
     with pytest.raises(ValueError, match="dim"):
@@ -1264,7 +1273,7 @@ def test_hyperplane_new_index_path_identical_and_validated(spark, tmp_path):
     """r15 job-overlap plumbing: ``new_index=`` (the batch's own
     precomputed hyperplane_build_index table, checkpointed via
     checkpoint_index) must (a) produce the EXACT pair set of the
-    in-line build — it is the same _hyperplane_banded machinery —
+    in-line build — both come from hyperplane_build_index —
     (b) skip the geometry metadata aggregate when the checkpoint
     carried the build-site cache seed, and (c) raise on a geometry
     mismatch instead of silently losing recall. (d) A parquet-read

@@ -1004,8 +1004,9 @@ def test_st10_absorbing_multi_batch_invariance(spark, tmp_path):
         lsh_candidate_pairs,
     )
     from kinesis_alerts_consumer_spark.plans.streaming_queries import (
-        absorbing_dedup_step,
         _await,
+        _batch_dirs,
+        absorbing_dedup_step,
     )
 
     def text_of(seed: str) -> str:
@@ -1067,12 +1068,17 @@ def test_st10_absorbing_multi_batch_invariance(spark, tmp_path):
     )
     _await(q)
 
-    # the stream really was chopped: one output dir per micro-batch
+    # the stream really was chopped: one output dir per micro-batch,
+    # read back through the explicit paths the st09/st10 queries use
+    # (a glob read logs a FileNotFoundException stack from Spark's
+    # sink-metadata lookup on every healthy run)
     assert sorted(os.listdir(out)) == ["b0", "b1", "b2"]
+    dirs = _batch_dirs(out)
+    assert dirs == [os.path.join(out, f"b{i}") for i in range(3)]
+    assert not any("*" in d for d in dirs), dirs
     got = {
         (r["a"], r["b"], r["jaccard"])
-        for r in spark.read.parquet(
-            os.path.join(out, "b*")).collect()
+        for r in spark.read.parquet(*dirs).collect()
     }
 
     # one-shot reference: full near-dup over old ∪ all-new, pairs
@@ -1106,14 +1112,15 @@ def test_st10_absorbing_multi_batch_invariance(spark, tmp_path):
 
 
 def test_band_table_geometry_contracts(spark):
-    """The r14 review's two geometry gaps, pinned: (a) a correct
+    """Band-table geometry contracts, pinned: (a) a correct
     new_index at rows_per_band >= 11 is ACCEPTED (the first cut's
     lexicographic column sort rejected 'r10' < 'r2'); (b) a
     new_index built at a DIFFERENT bands count raises instead of
     silently losing recall (same-width columns, different minhash
     split); (c) lsh_candidate_pairs(index=) returns the same
-    candidates as the inline path and raises on sizing= or explicit
-    geometry mismatch."""
+    candidates and the same over-cap ``stats`` light as the inline
+    path, each form's plan unchanged by ``stats``, and raises on
+    sizing= or explicit geometry mismatch."""
     import pytest as _pytest
 
     from kinesis_alerts_consumer_spark.operators.dedup import (
@@ -1148,7 +1155,10 @@ def test_band_table_geometry_contracts(spark):
             new, old, shingle=3, threshold=0.5, max_bucket=64,
             index=idx22, new_index=new42)
 
-    # (c) candidate pairs through the docs' own index == inline
+    # (c) candidate pairs through the docs' own index == inline, and
+    # the over-cap light reads the same on both forms without
+    # touching either form's plan (max_bucket=1 puts every shared
+    # bucket, e.g. docs 3 and 1000's, over the cap)
     both = old.unionByName(new)
     both_idx = lsh_build_index(both, bands=2, rows_per_band=2,
                                shingle=3).localCheckpoint(eager=True)
@@ -1157,6 +1167,19 @@ def test_band_table_geometry_contracts(spark):
     via_idx = {(r.a, r.b) for r in lsh_candidate_pairs(
         both, shingle=3, index=both_idx).collect()}
     assert via_idx == inline and (3, 1000) in via_idx
+    s_inline: dict = {}
+    s_idx: dict = {}
+    lit_inline = lsh_candidate_pairs(
+        both, bands=2, rows_per_band=2, shingle=3, max_bucket=1,
+        stats=s_inline)
+    lit_idx = lsh_candidate_pairs(
+        both, shingle=3, max_bucket=1, index=both_idx, stats=s_idx)
+    assert s_inline == s_idx and s_idx["overcap_buckets"] > 0, (
+        s_inline, s_idx)
+    assert lit_inline.sameSemantics(lsh_candidate_pairs(
+        both, bands=2, rows_per_band=2, shingle=3, max_bucket=1))
+    assert lit_idx.sameSemantics(lsh_candidate_pairs(
+        both, shingle=3, max_bucket=1, index=both_idx))
     with _pytest.raises(ValueError, match="sizing"):
         lsh_candidate_pairs(both, sizing="auto", index=both_idx)
     with _pytest.raises(ValueError, match="does not match"):
