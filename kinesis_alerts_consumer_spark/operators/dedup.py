@@ -383,9 +383,9 @@ def suggest_lsh_sizing(
     with ``b * r`` signature hashes per doc; tighten
     ``target_recall`` or ``threshold`` before growing either blindly.
 
-    MEASURED (r11, scripts/lsh_recall_probe.py at 5M docs, planted
-    pairs at the default threshold's similarity J3≈0.83): the
-    suggested (8, 5) delivered **19/20 planted recall** — the >=0.95
+    MEASURED (``scripts/recall_probe.py --mode text-batch`` at 5M
+    docs, BASELINE.md Round 11; planted pairs at the default
+    threshold's similarity J3≈0.83): the suggested (8, 5) delivered **19/20 planted recall** — the >=0.95
     promise — where the fixed (2, 2) got 17/20; uncapping (2, 2) to
     max_bucket=1024 bought only 18/20 (its S-curve ceiling at this J)
     at a **275x candidate explosion** (2.05M -> 562M pairs), so finer
@@ -465,6 +465,29 @@ def _zero_light(stats: dict) -> None:
     """The cap is off: report a clean light."""
     stats["overcap_buckets"] = 0
     stats["dropped_members"] = 0
+
+
+def _drop_overcap(rows: DataFrame, keys: list, max_bucket: int | None,
+                  stats: dict | None) -> DataFrame:
+    """``rows`` without the buckets (rows sharing a ``keys`` value) that
+    hold more than ``max_bucket`` rows — the one cap of the paths that
+    bucket by a join (:func:`_probe_candidates`,
+    :func:`embedding_near_dup_pairs`, ``similarity.semantic_dedup``).
+    Occupancy is counted with map-side partial counts (only (key,
+    count) rows shuffle) and the over-cap keys, at most
+    n/max_bucket rows, drop through a broadcast anti-join, never a
+    shuffle join on the much larger keep set. ``stats`` gets the
+    over-cap light, or a clean one when ``max_bucket`` is None (no
+    cap)."""
+    if max_bucket is None:
+        if stats is not None:
+            _zero_light(stats)
+        return rows
+    over = (rows.groupBy(*keys).agg(F.count("*").alias("_n"))
+            .filter(F.col("_n") > max_bucket))
+    if stats is not None:
+        _overcap_light(over, F.col("_n"), stats)
+    return rows.join(F.broadcast(over.select(*keys)), keys, "left_anti")
 
 
 def _new_skew_light(new_idx: DataFrame, keys: list, stats: dict) -> None:
@@ -615,9 +638,9 @@ def suggest_hyperplane_sizing(
 ) -> tuple[int, int]:
     """Corpus-size-aware (bands, bits_per_band) for
     :func:`hyperplane_lsh_pairs` — the :func:`suggest_lsh_sizing`
-    derivation transplanted to the cosine family (VERDICT r11 item 5;
-    the r12 probe measured WHY it is needed: the single-band
-    sign-LSH's threshold-0.9 recall decays as the adaptive bit count
+    derivation transplanted to the cosine family (the planted probe
+    measured WHY it is needed: the single-band sign-LSH's
+    threshold-0.9 recall decays as the adaptive bit count
     grows — 3/20 planted cos-0.93 pairs at 1.05M vectors).
 
     Two inequalities, applied in order:
@@ -640,9 +663,9 @@ def suggest_hyperplane_sizing(
     ``b * target_bucket / 2`` verify cosines per vector — e.g.
     defaults give (6, 6) at 2k vectors and (35, 16) at 1.05M.
 
-    MEASURED (r12, scripts/sign_lsh_recall_probe.py arm D at 1.05M
-    vectors, planted pairs at cosine 0.93 exactly): the auto path
-    derived (30, 15) from the HLL estimate n̂=967,835 (~8% under
+    MEASURED (``scripts/recall_probe.py --mode hyperplane`` at 1.05M
+    vectors, BASELINE.md Round 12; planted pairs at cosine 0.93
+    exactly): the auto path derived (30, 15) from the HLL estimate n̂=967,835 (~8% under
     true n — occupancy landed at ~32/bucket, right on target) and
     delivered **20/20 planted recall** — the S-curve promises 0.989
     at cos 0.93 for that sizing — where the gated single-band
@@ -890,12 +913,9 @@ def _probe_candidates(
     The old index is scanned, never shuffled: a LEFT SEMI join against
     the broadcast new-side keys keeps only the buckets the batch
     probes (duplicate build keys are harmless in a semi join, so no
-    distinct). With ``max_bucket`` set, old membership per probed
-    bucket is counted with map-side partial counts (only (key, count)
-    rows shuffle) and over-cap buckets drop through a broadcast
-    anti-join. ``stats`` gets the new-side skew light and the over-cap
-    light, each a separate action that never touches the returned
-    plan.
+    distinct). Over-cap probed buckets drop through
+    :func:`_drop_overcap`. ``stats`` gets the new-side skew light and the over-cap light, each
+    a separate action that never touches the returned plan.
 
     The surviving old rows join the broadcast batch signatures, the
     pairs spread over the cores (:func:`_spread_pairs`, whose exchange
@@ -905,17 +925,9 @@ def _probe_candidates(
     size."""
     if stats is not None:
         _new_skew_light(new_idx, keys, stats)
-    old_matched = old_idx.join(
-        F.broadcast(new_idx.select(*keys)), keys, "left_semi")
-    if max_bucket is not None:
-        counts = old_matched.groupBy(*keys).agg(F.count("*").alias("_n"))
-        over = counts.filter(F.col("_n") > max_bucket)
-        if stats is not None:
-            _overcap_light(over, F.col("_n"), stats)
-        old_matched = old_matched.join(
-            F.broadcast(over.select(*keys)), keys, "left_anti")
-    elif stats is not None:
-        _zero_light(stats)
+    old_matched = _drop_overcap(old_idx.join(
+        F.broadcast(new_idx.select(*keys)), keys, "left_semi"),
+        keys, max_bucket, stats)
     pairs = old_matched.join(
         F.broadcast(new_idx.withColumnRenamed(id_col, "_new_id")), keys
     ).select(F.col(id_col).alias("a"), F.col("_new_id").alias("b"))
@@ -994,7 +1006,8 @@ def hyperplane_lsh_pairs(
     SimHash rounding; the banding is the standard MinHash-LSH
     amplification applied to hyperplane bits).
 
-    Why it exists (measured with scripts/sign_lsh_recall_probe.py):
+    Why it exists (measured with ``scripts/recall_probe.py --mode
+    sign`` and ``--mode hyperplane``, BASELINE.md Round 12):
     the single-band :func:`embedding_near_dup_pairs` holds recall only
     for near-exact duplicates — at 1.05M vectors its adaptive 16-bit
     bucket caught 3/20 planted cos-0.93 pairs, because one k-bit
@@ -1419,8 +1432,9 @@ def lsh_incremental_pairs(
     the batch signature pass here — the absorbing lifecycle (st10)
     computes it ONCE and feeds both the probe and
     :func:`lsh_index_absorb`, instead of paying the minhash pass
-    twice per batch (the 5M absorb rehearsal measured the second
-    pass at ~10 s/batch). It must be built with the SAME
+    twice per batch (``scripts/recall_probe.py --mode text-absorb`` at
+    a 5M corpus measured the second pass at ~10 s/batch, BASELINE.md
+    Round 14). It must be built with the SAME
     (bands, rows_per_band, shingle) as the probe: the ``r*`` column
     layout AND the band count are validated against the probe
     geometry (raise-on-mismatch, the index= contract — the band
@@ -2231,6 +2245,18 @@ def adaptive_sign_bits(
     return max(1, min(max_bits, (x - 1).bit_length()))
 
 
+def _sign_bucket(sign_bits: int) -> Column:
+    """The axis-aligned sign-LSH bucket of ``embedding``: one "1"/"0"
+    per leading coordinate (>= 0 / < 0), ``sign_bits`` of them. The
+    bucket of :func:`embedding_near_dup_pairs` and of
+    ``similarity``'s ``cosine_topk_lsh`` and ``semantic_dedup``."""
+    return F.concat_ws("", *[
+        F.when(F.element_at(F.col("embedding"), i + 1) >= 0, F.lit("1"))
+        .otherwise(F.lit("0"))
+        for i in range(sign_bits)
+    ])
+
+
 def embedding_near_dup_pairs(
     emb: DataFrame,
     sign_bits: int | None = 8,
@@ -2260,9 +2286,9 @@ def embedding_near_dup_pairs(
     (same guard as ``lsh_candidate_pairs`` / winnowing ``max_df``).
     ``None`` disables the cap.
 
-    ``stats``, if given, is the same warning light
-    :func:`lsh_candidate_pairs` grew in r11 (VERDICT r11 item 5 — the
-    sign-LSH family shares the structural hazard: the cap drops
+    ``stats``, if given, is the same warning light as
+    :func:`lsh_candidate_pairs` (the sign-LSH family shares the
+    structural hazard: the cap drops
     over-occupied buckets WHOLESALE and recall loss is otherwise
     invisible): it receives ``{"sign_bits": k, "overcap_buckets": B,
     "dropped_members": M}`` via a SEPARATE aggregate action over the
@@ -2271,11 +2297,13 @@ def embedding_near_dup_pairs(
     mean occupancy beat the adaptive sizing's model — a fixed
     sign_bits=4 at 1.05M vectors drops ALL 16 buckets (1.05M member
     slots, planted recall 0/20) and the light is the only signal
-    (scripts/sign_lsh_recall_probe.py arm B, BASELINE.md round-12).
+    (``scripts/recall_probe.py --mode sign --sign-bits 4``, BASELINE.md
+    Round 12).
 
     **Recall envelope — measured, know what this operator promises**
-    (the same r12 probe, arm A): a pair at cosine ``s`` shares the
-    single k-bit bucket with probability ~``(1 - acos(s)/pi)^k``, and
+    (``--mode sign`` with the adaptive bits, the same round): a pair
+    at cosine ``s`` shares the single k-bit bucket with probability
+    ~``(1 - acos(s)/pi)^k``, and
     the adaptive ``k`` GROWS with corpus size — so threshold-0.9
     recall DECAYS as the corpus grows: at 1.05M vectors (adaptive
     k=16) planted cos-0.93 recall measured **3/20** with ZERO
@@ -2292,29 +2320,10 @@ def embedding_near_dup_pairs(
         sign_bits = adaptive_sign_bits(emb.count(), target_bucket)
     if stats is not None:
         stats["sign_bits"] = sign_bits
-    sig = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at(F.col("embedding"), i + 1) >= 0, F.lit("1"))
-            .otherwise(F.lit("0"))
-            for i in range(sign_bits)
-        ],
-    )
-    b = spread_for_compute(emb).select("vec_id", "embedding", sig.alias("bucket"))
-    if max_bucket is not None:
-        # Exclusion set (over-cap buckets) is <= n/max_bucket rows —
-        # broadcast anti-join, not a shuffle join on the huge keep set.
-        over = (
-            b.groupBy("bucket")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_bucket)
-        )
-        if stats is not None:
-            _overcap_light(over, F.col("_df"), stats)
-        bad = over.select("bucket")
-        b = b.join(F.broadcast(bad), "bucket", "left_anti")
-    elif stats is not None:
-        _zero_light(stats)
+    b = _drop_overcap(
+        spread_for_compute(emb).select(
+            "vec_id", "embedding", _sign_bucket(sign_bits).alias("bucket")),
+        ["bucket"], max_bucket, stats)
     left = b.alias("l")
     right = b.alias("r")
     pairs = left.join(

@@ -250,29 +250,6 @@ def _metric_exprs() -> dict[str, Column]:
     }
 
 
-def encode_output(df: DataFrame) -> DataFrame:
-    """Per-record ``EncodeOutput`` JSON envelope — the reference's
-    serialized hop between the project stage and the batch sink
-    (alerts_consumer.go:65-68, 226-231: ``{DDMetrics, CWMetrics}``
-    marshalled per record, unmarshalled+concatenated in SendBatch).
-
-    Spark doesn't need the serialize/deserialize hop (the DataFrame IS
-    the envelope — SURVEY.md §1.4), so this exists as an export/interop
-    format: one JSON line per clean routed record plus its partition
-    tag, byte-compatible with what a reference-side consumer expects.
-    """
-    c = clean(df)
-    return c.select(
-        F.col("tag"),
-        F.to_json(
-            F.struct(
-                F.col("dd_metrics").alias("DDMetrics"),
-                F.col("cw_metrics").alias("CWMetrics"),
-            )
-        ).alias("encoded"),
-    )
-
-
 def clean(df: DataFrame) -> DataFrame:
     """Routed records that projected without error."""
     return df.filter(~F.col("ignored") & F.col("error").isNull())

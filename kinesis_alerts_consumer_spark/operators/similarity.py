@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _drop_overcap, _sign_bucket, adaptive_sign_bits
 from .util import spread_for_compute
 
 
@@ -255,9 +256,10 @@ def cosine_topk_ivf(
     ``index`` accepts a prebuilt ``(centroids, assignments)`` pair
     (the :func:`ivf_assign` output, typically persisted or written to
     a table) and skips the assign pass entirely. This is the SCALE
-    API: the r12 probe (scripts/ann_recall_probe.py, 1M clustered
-    vectors) measured the sqrt-rule sizing (n_centroids=1000,
-    nprobe=32) at **recall@5 = 1.00 scoring only 3.2% of the corpus**
+    API: ``scripts/recall_probe.py --mode ann-ivf`` (1M clustered
+    vectors, BASELINE.md Round 12) measured the sqrt-rule sizing
+    (n_centroids=1000, nprobe=32) at **recall@5 = 1.00 scoring only
+    3.2% of the corpus**
     — but 98% of its 976 s wall was the n x n_centroids assign pass,
     a one-time INDEX BUILD this signature was re-running per query
     batch. Build once with ``ivf_assign`` (at 100 TB: write the
@@ -361,28 +363,20 @@ def cosine_topk_lsh(
     device), which is the SCALE setting: the gated llm07 literal
     (4 bits) probes 5 of 16 buckets ≈ 31% of the corpus at ANY n,
     i.e. its cost approaches brute force while its recall stays high.
-    MEASURED (r12, scripts/ann_recall_probe.py at 1M clustered
-    vectors, recall@5 vs exact brute force): gated (4 bits, radius 1)
-    recall 0.97 scoring ~31%; adaptive (15 bits, radius 2) recall
-    0.95 scoring **0.37%** — equal recall at ~80x less scored work,
-    because bits grow log2(n) (constant bucket occupancy) while the
-    radius-2 probe set grows only quadratically in bits. BASELINE.md
-    round-12 has the full ladder table."""
+    MEASURED (``scripts/recall_probe.py --mode ann-lsh`` at 1M
+    clustered vectors, BASELINE.md Round 12; recall@5 vs exact brute
+    force): gated (4 bits, radius 1) recall 0.97 scoring ~31%;
+    adaptive (15 bits, radius 2) recall 0.95 scoring **0.37%** — equal
+    recall at ~80x less scored work, because bits grow log2(n)
+    (constant bucket occupancy) while the radius-2 probe set grows
+    only quadratically in bits. BASELINE.md Round 12 has the full
+    ladder table."""
     if probe_radius > 2:
         raise ValueError("probe_radius > 2 not implemented")
     if sign_bits is None:
-        from .dedup import adaptive_sign_bits
-
         sign_bits = adaptive_sign_bits(emb.count())
-    sig = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at(F.col("embedding"), i + 1) >= 0, F.lit("1"))
-            .otherwise(F.lit("0"))
-            for i in range(sign_bits)
-        ],
-    )
-    b = spread_for_compute(emb).select("vec_id", "embedding", sig.alias("bucket"))
+    b = spread_for_compute(emb).select(
+        "vec_id", "embedding", _sign_bucket(sign_bits).alias("bucket"))
     probes = [F.col("qb")]
     if probe_radius >= 1:
         probes += [_flip_bit(F.col("qb"), i + 1) for i in range(sign_bits)]
@@ -715,44 +709,19 @@ def semantic_dedup(
     ``stats``, if given, receives ``{"sign_bits": k,
     "overcap_buckets": B, "dropped_members": M}`` — the same silent-
     cap warning light as :func:`..operators.dedup.
-    embedding_near_dup_pairs` (VERDICT r11 item 5; see that docstring
-    for the 1M-vector measurement). A SEPARATE aggregate action; the
-    returned plan stays byte-identical (the gated llm27 query passes
-    stats=None and its hash is pinned by sameSemantics in the test).
+    embedding_near_dup_pairs` (see that docstring for the 1M-vector
+    measurement). A SEPARATE aggregate action; the returned plan
+    stays byte-identical (the gated llm27 query passes stats=None and
+    its hash is pinned by sameSemantics in the test).
     """
-    from .dedup import adaptive_sign_bits
-
     if sign_bits is None:
         sign_bits = adaptive_sign_bits(emb.count(), target_cluster)
     if stats is not None:
         stats["sign_bits"] = sign_bits
-    sig = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at(F.col("embedding"), i + 1) >= 0, F.lit("1"))
-            .otherwise(F.lit("0"))
-            for i in range(sign_bits)
-        ],
-    )
-    members = spread_for_compute(emb).select(
-        id_col, "embedding", sig.alias("cluster")
-    )
-    if max_bucket is not None:
-        over = (
-            members.groupBy("cluster")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_bucket)
-        )
-        if stats is not None:
-            from .dedup import _overcap_light
-
-            _overcap_light(over, F.col("_df"), stats)
-        bad = over.select("cluster")
-        members = members.join(F.broadcast(bad), "cluster", "left_anti")
-    elif stats is not None:
-        from .dedup import _zero_light
-
-        _zero_light(stats)
+    members = _drop_overcap(
+        spread_for_compute(emb).select(
+            id_col, "embedding", _sign_bucket(sign_bits).alias("cluster")),
+        ["cluster"], max_bucket, stats)
     l, r = members.alias("l"), members.alias("r")
     dominated = (
         l.join(

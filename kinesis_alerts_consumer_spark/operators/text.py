@@ -6,7 +6,6 @@ one low-cardinality aggregate where noted.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -178,53 +177,6 @@ def language_id(docs: DataFrame) -> DataFrame:
         .otherwise(F.lit("und"))
         .alias("pred_lang"),
         best.getField("hits").cast("bigint").alias("hits"),
-    )
-
-
-def subword_token_counts(
-    docs: DataFrame, tokenizer_factory=None
-) -> DataFrame:
-    """Per-doc subword token counts with a pluggable real tokenizer.
-
-    ``tokenizer_factory`` is a zero-arg callable returning an object
-    with ``encode(text) -> sized`` (the HuggingFace ``tokenizers``
-    protocol: ``len(tok.encode(t).ids)`` — a plain ``encode(t) ->
-    list`` works too). It runs inside an Arrow-batched ``pandas_udf``
-    and is constructed ONCE per task, not per row, so loading a real
-    BPE vocab costs O(tasks), not O(rows). With no factory the count
-    stays JVM-side: the same alnum-run + punctuation pre-tokenizer
-    proxy ``token_stats`` uses (deterministic, oracle-matched).
-
-    Real-tokenizer output is model-dependent, so like ext05 it is
-    bounds-validated (0 < n_subtokens <= n_chars for non-empty text),
-    never hash-matched against a SQL oracle.
-    """
-    docs = spread_for_compute(docs)
-    if tokenizer_factory is None:
-        n = F.size(
-            F.regexp_extract_all(
-                F.col("text"), F.lit(r"[A-Za-z0-9]+|[^\sA-Za-z0-9]"), 0
-            )
-        )
-        return docs.select("doc_id", n.cast("int").alias("n_subtokens"))
-
-    state: dict[str, object] = {}
-
-    @F.pandas_udf("int")
-    def _n_subtokens(texts: pd.Series) -> pd.Series:
-        tok = state.get("tok")
-        if tok is None:
-            tok = state["tok"] = tokenizer_factory()
-
-        def count(t: str) -> int:
-            enc = tok.encode(t)
-            ids = getattr(enc, "ids", enc)
-            return len(ids)
-
-        return texts.map(count)
-
-    return docs.select(
-        "doc_id", _n_subtokens(F.col("text")).alias("n_subtokens")
     )
 
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 # Option names follow the spark-sql-kinesis connector family
-# (format "aws-kinesis"); kafka equivalents noted for that path.
+# (format "aws-kinesis").
 DEFAULT_KINESIS_OPTIONS: dict[str, str] = {
     "streamName": "logs",
     "region": "us-west-2",
@@ -56,45 +56,7 @@ def read_kinesis(
     except Exception as exc:  # pragma: no cover - environment-dependent
         raise RuntimeError(
             f"no '{fmt}' streaming connector on the classpath; install the "
-            "connector jar (spark.jars.packages) or use the file/kafka "
+            "connector jar (spark.jars.packages) or use the file "
             "sources in streaming.pipeline for dev"
         ) from exc
 
-
-# Kafka twin of the Kinesis contract: same topology knobs, different
-# option names. startingOffsets=earliest is the TRIM_HORIZON analogue
-# (consumer.properties.template:10); maxOffsetsPerTrigger bounds the
-# micro-batch like READ_RATE_LIMIT / BatchCount (main.go:54-59).
-DEFAULT_KAFKA_OPTIONS: dict[str, str] = {
-    "kafka.bootstrap.servers": "localhost:9092",
-    "subscribe": "logs",
-    "startingOffsets": "earliest",
-    "maxOffsetsPerTrigger": "10000",
-}
-
-
-def kafka_options(**overrides: str) -> dict[str, str]:
-    return {**DEFAULT_KAFKA_OPTIONS, **overrides}
-
-
-def read_kafka_lines(spark: SparkSession, **overrides: str) -> DataFrame:
-    """``readStream.format("kafka")`` producing the SAME single
-    string-``value`` column shape as ``streaming.pipeline.stream_lines``
-    — the whole record pipeline (process_lines -> MetricsSink) slots in
-    unchanged behind either source. Raises a clear error when the
-    kafka-sql connector jar is not on the classpath (this container
-    ships none; the integration test skips in that case)."""
-    from pyspark.sql import functions as F
-
-    reader = spark.readStream.format("kafka")
-    for k, v in kafka_options(**overrides).items():
-        reader = reader.option(k, v)
-    try:
-        raw = reader.load()
-    except Exception as exc:
-        raise RuntimeError(
-            "no 'kafka' streaming connector on the classpath; add "
-            "org.apache.spark:spark-sql-kafka-0-10_2.13 via "
-            "spark.jars.packages"
-        ) from exc
-    return raw.select(F.col("value").cast("string").alias("value"))

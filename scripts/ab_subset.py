@@ -1,7 +1,9 @@
 """Interleaved same-host A/B of an arbitrary query subset between two
-trees: fresh JVM per sample, trees interleaved A,B,A,B,..., bench.py's
-own warm-up and timing loop via SPARK_GRAFT_QUERIES. An A/B of a conf
-switch is two trees that differ in that conf.
+trees: fresh JVM per sample, bench.py's own warm-up and timing loop
+via SPARK_GRAFT_QUERIES. The order alternates each round (A,B then
+B,A), so a drift of the host or a first-run effect lands on both
+trees alike; each round prints its order. An A/B of a conf switch is
+two trees that differ in that conf.
 
 Usage:
     python scripts/ab_subset.py TREE_A TREE_B ROUNDS SF_DIR q1,q2,...
@@ -42,8 +44,12 @@ def main() -> None:
         sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4],
         sys.argv[5])
     samples: dict[str, list[dict]] = {"A": [], "B": []}
+    arms = (("A", tree_a), ("B", tree_b))
     for i in range(rounds):
-        for arm, tree in (("A", tree_a), ("B", tree_b)):
+        order = arms if i % 2 == 0 else arms[::-1]
+        print(f"round {i} order {','.join(arm for arm, _ in order)}",
+              flush=True)
+        for arm, tree in order:
             r = run_once(tree, sf_dir, queries)
             samples[arm].append(r["queries"])
             print(f"round {i} arm {arm}: total "

@@ -275,28 +275,6 @@ def test_unparseable_line_quarantines(spark):
     assert quarantine(out).count() == 1
 
 
-def test_encode_output_envelope(spark):
-    """EncodeOutput JSON envelope (alerts_consumer.go:65-68): one
-    {DDMetrics, CWMetrics} JSON line per clean record, with the tag."""
-    from kinesis_alerts_consumer_spark.operators.project import encode_output
-
-    line = HEADER + body(
-        [alert_route(dims=("Hostname",), value_field=None)], value=7
-    )
-    out = run(spark, [line])
-    rows = encode_output(out).collect()
-    assert len(rows) == 1
-    assert rows[0].tag == "default"
-    env = json.loads(rows[0].encoded)
-    assert set(env) <= {"DDMetrics", "CWMetrics"}
-    dd = env["DDMetrics"]
-    assert len(dd) == 1
-    assert dd[0]["metric"] == "kv.series-name"
-    assert dd[0]["ts"] == EPOCH
-    assert dd[0]["value"] == 1.0  # counter default
-    assert "Hostname:my-hostname" in dd[0]["tags"]
-
-
 # --- team fallback: string-typed + non-empty only (go:86-89) ---------
 
 

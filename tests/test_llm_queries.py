@@ -151,8 +151,9 @@ def test_lsh_topk_recall_vs_exact(spark):
 
 
 def test_ann_scale_apis(spark):
-    """The r12 scale levers on the ANN ladder (certified at 1M by
-    scripts/ann_recall_probe.py — BASELINE.md round-12): a prebuilt
+    """The scale levers on the ANN ladder (certified at 1M by
+    ``scripts/recall_probe.py --mode ann-ivf`` and ``--mode ann-lsh``,
+    BASELINE.md Round 12): a prebuilt
     (centroids, assignments) index on cosine_topk_ivf must reproduce
     the inline form exactly (index build is one-time at scale, not
     per query batch), and sign_bits=None on cosine_topk_lsh must
@@ -1395,63 +1396,6 @@ def test_hyperplane_signs_are_pinned():
                for b in range(3) for r in range(3))
     # deterministic across calls
     assert sample == [_hyperplane_sign(0, 0, j) for j in range(8)]
-
-
-def test_subword_token_counts_pluggable_tokenizer(spark):
-    """The pandas_udf plug-in path: an injected whitespace tokenizer
-    must reproduce the whitespace token count exactly, proving the
-    factory is honored and batch results align row-for-row."""
-    from kinesis_alerts_consumer_spark.operators.text import (
-        subword_token_counts,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "one two"), (3, "solo")],
-        "doc_id long, text string",
-    )
-
-    class _WsTok:
-        def encode(self, t):
-            return t.split()
-
-    got = {
-        r.doc_id: r.n_subtokens
-        for r in subword_token_counts(docs, lambda: _WsTok()).collect()
-    }
-    assert got == {1: 3, 2: 2, 3: 1}
-
-    # default path stays JVM-side and matches token_stats' proxy
-    default = {
-        r.doc_id: r.n_subtokens for r in subword_token_counts(docs).collect()
-    }
-    assert default == {1: 3, 2: 2, 3: 1}
-
-
-def test_subword_token_counts_real_bpe_opt_in(spark):
-    """Opt-in: if the HuggingFace `tokenizers` wheel is present, train
-    a throwaway BPE and bounds-validate (model-dependent counts are
-    never hash-matched — same policy as ext05)."""
-    tokenizers = pytest.importorskip("tokenizers")
-    from kinesis_alerts_consumer_spark.operators.text import (
-        subword_token_counts,
-    )
-
-    texts = ["the quick brown fox", "jumps over the lazy dog"]
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-
-    def factory():
-        tok = tokenizers.Tokenizer(tokenizers.models.BPE())
-        tok.pre_tokenizer = tokenizers.pre_tokenizers.Whitespace()
-        trainer = tokenizers.trainers.BpeTrainer(vocab_size=64)
-        tok.train_from_iterator(texts, trainer)
-        return tok
-
-    rows = subword_token_counts(docs, factory).collect()
-    by_id = {r.doc_id: r.n_subtokens for r in rows}
-    for i, t in enumerate(texts):
-        assert 0 < by_id[i] <= len(t)
 
 
 def test_pii_redaction_finds_planted_pii(spark):

@@ -341,3 +341,18 @@ def test_pair_verify_spread_honors_kill_switch(spark):
         assert "REPARTITION_BY_NUM" not in plan, plan[:2000]
     finally:
         spark.conf.unset("spark.graft.spreadForCompute")
+
+
+def test_register_tables_refreshes_views_on_sf_switch(spark):
+    """Temp views are global per session: switching sf_dir and back
+    must re-point the views, not silently serve the stale sf's data
+    from the (session, sf_dir) cache."""
+    from .conftest import SF_CORRECTNESS
+
+    n_smoke = register_tables(spark, SF_SMOKE)["orders"].count()
+    assert spark.sql("SELECT COUNT(*) c FROM orders").first().c == n_smoke
+    n_big = register_tables(spark, SF_CORRECTNESS)["orders"].count()
+    assert n_big != n_smoke
+    assert spark.sql("SELECT COUNT(*) c FROM orders").first().c == n_big
+    register_tables(spark, SF_SMOKE)
+    assert spark.sql("SELECT COUNT(*) c FROM orders").first().c == n_smoke

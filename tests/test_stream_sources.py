@@ -1,12 +1,11 @@
 """Network stream-source contracts (reference S1/S2).
 
-No Kinesis/Kafka connector jar or broker ships in this container, so
-these pin the CONTRACT: option mapping from the reference's KCL
-config (consumer.properties.template:4-26, main.go:54-59) and the
-loud, actionable error when the connector is absent. When a connector
-jar IS on the classpath the kafka test instead checks the loaded
-stream's shape (single string ``value`` column — the exact shape
-``stream_lines`` produces, so the whole pipeline slots in unchanged).
+The Kinesis connector jar is optional, so these pin the CONTRACT:
+option mapping from the reference's KCL config
+(consumer.properties.template:4-26, main.go:54-59) and the loud,
+actionable error when the connector is absent. The socket test drives
+the whole pipeline from a live network source: any ``readStream``
+yielding one string ``value`` column slots in unchanged.
 """
 
 from __future__ import annotations
@@ -14,11 +13,8 @@ from __future__ import annotations
 import pytest
 
 from kinesis_alerts_consumer_spark.sources.kinesis import (
-    DEFAULT_KAFKA_OPTIONS,
     DEFAULT_KINESIS_OPTIONS,
-    kafka_options,
     kinesis_options,
-    read_kafka_lines,
     read_kinesis,
 )
 
@@ -33,30 +29,9 @@ def test_kinesis_options_contract():
     assert set(DEFAULT_KINESIS_OPTIONS) <= set(opts)
 
 
-def test_kafka_options_contract():
-    opts = kafka_options(subscribe="raw-logs")
-    assert opts["subscribe"] == "raw-logs"
-    assert opts["startingOffsets"] == "earliest"  # TRIM_HORIZON twin
-    assert opts["maxOffsetsPerTrigger"] == "10000"
-    assert set(DEFAULT_KAFKA_OPTIONS) <= set(opts)
-
-
 def test_read_kinesis_raises_actionable_error_without_connector(spark):
     with pytest.raises(RuntimeError, match="connector"):
         read_kinesis(spark)
-
-
-def test_read_kafka_lines_smoke(spark):
-    """Error contract without the jar; stream shape with it."""
-    try:
-        df = read_kafka_lines(spark, subscribe="logs")
-    except RuntimeError as exc:
-        assert "spark-sql-kafka" in str(exc)
-        pytest.skip("no kafka connector jar on the classpath")
-    assert df.isStreaming
-    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
-        ("value", "string")
-    ]
 
 
 def test_socket_source_drives_full_pipeline(spark, tmp_path):
@@ -64,7 +39,7 @@ def test_socket_source_drives_full_pipeline(spark, tmp_path):
     ``socket`` format — no connector jar needed) driving the full
     parse→route→project→sink pipeline: proves the seam between a
     network readStream and ``process_lines`` end-to-end, the
-    environment-gated gap the Kinesis/Kafka option contracts
+    environment-gated gap the Kinesis option contract
     (sources/kinesis.py) can't cover in this container. The record
     pipeline is source-agnostic by construction — any DataFrame with a
     ``value`` string column slots in (reference: KCL MultiLangDaemon
