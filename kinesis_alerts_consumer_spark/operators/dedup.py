@@ -31,6 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import _tokens
 from .util import spread_enabled, spread_for_compute
 
 # 60-bit integer hash from md5 — portable: Spark conv(hex,16,10),
@@ -49,41 +50,17 @@ def _hash60(col: Column) -> Column:
     return _hex60_value(_hex60(col))
 
 
-def _tokens(text: Column) -> Column:
-    return F.split(F.trim(text), r"\s+")
-
-
-def shingles_of(w: Column, n: int) -> Column:
-    """Word n-gram shingles from an ALREADY-MATERIALIZED token array.
-
-    Always shingle from a real column, not an inline ``split(...)``
-    expression: Catalyst does not CSE across lambda scopes, so an
-    inline split re-evaluates per array element — O(tokens²)/doc
-    (observed 15 s -> 1 s at sf0.1 for minhash when fixed)."""
-    if n == 1:
-        return w
-    idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(-1)))
-    return F.when(
-        F.size(w) >= n,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(w, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.expr("array()").cast("array<string>"))
-
-
 def shingle_strings(text: Column, n: int) -> Column:
     """Overlapping word n-gram shingles of a TEXT column as
     array<string> — one lookahead regex over whitespace-normalized
     text, entirely inside whole-stage codegen.
 
-    The transform/element_at formulation (:func:`shingles_of`) is a
-    higher-order lambda, which Catalyst executes as CodegenFallback:
-    every shingle of every doc pays interpreted expression dispatch
-    (measured at the r6 sf10 rehearsal: a single core pegged >900 s
-    in regex/eval for 60k docs). Here ``(?<=^| )(?=(\\S+( \\S+)*))``
+    The rejected form, a ``transform`` over a token-index ``sequence``
+    that ``concat_ws``-joins ``element_at`` windows, is a higher-order
+    lambda, which Catalyst executes as CodegenFallback: every shingle
+    of every doc pays interpreted expression dispatch (measured at
+    the sf10 rehearsal: a single core pegged >900 s in regex/eval for
+    60k docs). Here ``(?<=^| )(?=(\\S+( \\S+)*))``
     captures each n-token window at token starts only — the
     lookbehind rejects mid-token positions, the lookahead makes the
     matches overlap — so the whole shingle set is one vectorizable
@@ -163,7 +140,6 @@ def lsh_candidate_pairs(
     shingle: int = 1,
     max_bucket: int | None = 64,
     stats: dict | None = None,
-    sizing: str | None = None,
     index: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: docs sharing any band bucket.
@@ -185,9 +161,8 @@ def lsh_candidate_pairs(
     ``rows_per_band`` is derived from the ``r*`` columns and
     ``bands`` from the geometry cache / one narrow ``max(band)``
     aggregate; explicit arguments that mismatch raise (the
-    raise-on-mismatch contract), and ``sizing="auto"`` raises —
-    the table's geometry is already fixed. ``shingle`` is carried by
-    the build as always and is undetectable here.
+    raise-on-mismatch contract). ``shingle`` is carried by the build
+    as always and is undetectable here.
 
     Buckets holding more than ``max_bucket`` docs are dropped (same
     guard as winnowing's ``max_df``, :func:`winnow_near_dup_pairs`): a
@@ -224,29 +199,11 @@ def lsh_candidate_pairs(
     query (stats=None) plans byte-identically.
     :func:`suggest_lsh_sizing` derives a corpus-size-aware
     (bands, rows_per_band) from the occupancy + recall inequalities;
-    use it instead of hand-picking once ``n_docs`` moves.
-    ``sizing="auto"`` does that derivation IN-LINE (the gated llm03
-    pins (2, 2), the right literal for its fixture but the wrong
-    example for a 100 TB reader): one cheap
-    ``approx_count_distinct(doc_id)`` action (an HLL sketch over a
-    column-pruned single-column scan — no shuffle of doc rows) feeds
-    :func:`suggest_lsh_sizing` at its default threshold/recall/
-    background model, and the derived (bands, rows_per_band)
-    OVERRIDES the ``bands``/``rows_per_band`` arguments; ``stats``,
-    if given, additionally receives ``{"bands": b,
-    "rows_per_band": r, "n_docs_estimate": n}`` so audits can see
-    what the derivation chose. With ``max_bucket=None`` the
-    derivation sizes against the default cap of 64 (occupancy is
-    still the right target even when nothing enforces it — an
-    uncapped over-occupied bucket is an O(bucket²) pair explosion
-    instead of a recall loss). ``sizing=None`` (default) is the
-    prior behavior, byte-identical plans included.
+    use it instead of hand-picking once ``n_docs`` moves (the gated
+    llm03 pins (2, 2), the right literal for its fixture but the
+    wrong example for a 100 TB reader).
     """
     if index is not None:
-        if sizing is not None:
-            raise ValueError(
-                "sizing cannot be combined with a prebuilt index — "
-                "the table's geometry is already fixed")
         b_idx, r_idx = _minhash_index_geometry(index)
         bands = _geometry_arg("bands", bands, b_idx, "bands")
         rows_per_band = _geometry_arg(
@@ -254,26 +211,6 @@ def lsh_candidate_pairs(
     else:
         bands = 2 if bands is None else bands
         rows_per_band = 2 if rows_per_band is None else rows_per_band
-        if sizing is not None:
-            if sizing != "auto":
-                raise ValueError(
-                    f"sizing must be None or 'auto', got {sizing!r}")
-            n_docs = int(
-                docs.agg(F.approx_count_distinct("doc_id").alias("n"))
-                .collect()[0]["n"]
-            )
-            # 2σ HLL buffer: size for the estimate's upper confidence
-            # bound so an under-estimate cannot land the derivation
-            # one band short of the recall promise
-            bands, rows_per_band = suggest_lsh_sizing(
-                hll_buffered_count(n_docs),
-                max_bucket=max_bucket if max_bucket is not None else 64,
-            )
-            if stats is not None:
-                stats["bands"] = bands
-                stats["rows_per_band"] = rows_per_band
-                stats["n_docs_estimate"] = n_docs
-                stats["n_docs_sized_for"] = hll_buffered_count(n_docs)
         index = lsh_build_index(docs, bands, rows_per_band, shingle)
     keys = ["band"] + [f"r{r}" for r in range(rows_per_band)]
     return _bucket_pairs(index, keys, "doc_id", max_bucket, stats)
@@ -303,10 +240,10 @@ def lsh_band_recall(
 
 def hll_buffered_count(n_estimate: int, rsd: float = 0.05) -> int:
     """Inflate an ``approx_count_distinct`` estimate by two standard
-    errors before it feeds a sizing derivation (VERDICT r12 item 3).
+    errors before it feeds a sizing derivation.
 
     HLL's relative standard deviation is ~1.04/sqrt(m); Spark's
-    ``approx_count_distinct`` default targets ``rsd=0.05``. The r12
+    ``approx_count_distinct`` default targets ``rsd=0.05``. The
     1.05M hyperplane probe measured the hazard this closes: the raw
     estimate came in 8% LOW (n̂=967,835), deriving (30, 15) where
     exact n gives (35, 16) — recall held (20/20, S-curve 0.989) but
@@ -329,7 +266,7 @@ def hll_buffered_count(n_estimate: int, rsd: float = 0.05) -> int:
         raise ValueError(f"rsd must be in (0, 0.5), got {rsd}")
     from fractions import Fraction
 
-    # Exact integer arithmetic (ADVICE r13): the earlier float form
+    # Exact integer arithmetic: the earlier float form
     # ceil(round(n/(1-2·rsd), 9)) could cancel a LEGITIMATE ceil
     # whenever the exact quotient sits within 5e-10 above an integer,
     # under-buffering by 1 for arbitrary rsd values. Express
@@ -353,7 +290,7 @@ def suggest_lsh_sizing(
     max_bucket: int = 64,
 ) -> tuple[int, int]:
     """Corpus-size-aware (bands, rows_per_band) for
-    :func:`lsh_candidate_pairs` — the productized r10/r11 lesson that
+    :func:`lsh_candidate_pairs` — the productized lesson that
     band sizing must RISE with corpus size or ``max_bucket`` silently
     eats recall (at 5M docs the (2, 2) default lost 7/20 planted
     near-dups to wholesale over-cap bucket drops; (4, 4) kept 20/20).
@@ -412,8 +349,8 @@ def suggest_lsh_sizing(
 
     # rows are floored at 2: a 1-row band's value is a single global
     # minhash, and heavy-tailed token frequencies collapse its buckets
-    # regardless of corpus size — measured (r11 probe, 540 unigram
-    # docs): a (2, 1) sizing put 966 of 1080 bucket-member slots into
+    # regardless of corpus size — measured (planted-recall probe, 540
+    # unigram docs): a (2, 1) sizing put 966 of 1080 bucket-member slots into
     # over-cap buckets and planted recall fell to 2/20
     r = 2
     if n_docs > max_bucket:
@@ -709,7 +646,7 @@ def suggest_hyperplane_sizing(
 
 def _check_hyperplane_sizing(bands: int, bits_per_band: int) -> None:
     """Shared expression-size envelope (was copy-pasted at three call
-    sites by the end of r13 — the _overcap_light lesson again):
+    sites — the _overcap_light lesson again):
     beyond ~4096 total bits the parameters are fighting the data, not
     indexing it, and the signs table / generated SQL grow unusable —
     fail loudly with the JL remedy named."""
@@ -731,7 +668,7 @@ def _infer_embedding_dim(emb: DataFrame) -> int:
     _global_sub_len defense): consistent in both engines; callers
     passing dim explicitly own the ragged-width contract documented
     on :func:`hyperplane_lsh_pairs`. Restricting to size>=1 keeps the
-    empty/null exclusion promise honest (ADVICE r12): one empty
+    empty/null exclusion promise honest: one empty
     (size 0) or null (size -1) embedding must not drive the inferred
     dim to <= 0 and abort the whole call — such rows posexplode into
     no dot rows and drop out of candidates."""
@@ -1050,9 +987,8 @@ def hyperplane_lsh_pairs(
     ``approx_count_distinct`` action via
     :func:`suggest_hyperplane_sizing` at ``threshold``, with the
     occupancy target tightened to the caller's ``max_bucket`` when
-    that is below the default 32 (the :func:`lsh_candidate_pairs`
-    ``sizing`` contract); ``stats`` then also receives the chosen
-    sizing.
+    that is below the default 32; ``stats`` then also receives the
+    chosen sizing.
     """
     if sizing is not None:
         if sizing != "auto":
@@ -1063,8 +999,7 @@ def hyperplane_lsh_pairs(
         )
         # derive occupancy against the CALLER's cap, not just the
         # default 32: a cap below the derivation target would
-        # otherwise wholesale-drop TYPICAL buckets (the
-        # lsh_candidate_pairs auto path does the same); the 2σ HLL
+        # otherwise wholesale-drop TYPICAL buckets; the 2σ HLL
         # buffer because the 1.05M probe's estimate was 8% low and
         # landed (30,15) vs exact-n's (35,16) — recall survived on
         # margin, not design
@@ -1204,12 +1139,10 @@ def hyperplane_build_index(
 def hyperplane_incremental_pairs(
     emb_new: DataFrame,
     emb_old: DataFrame,
-    bands: int | None = None,
-    bits_per_band: int | None = None,
+    index: DataFrame,
     dim: int | None = None,
     threshold: float = 0.9,
     max_bucket: int | None = 1024,
-    index: DataFrame | None = None,
     stats: dict | None = None,
     id_col: str = "vec_id",
     new_index: DataFrame | None = None,
@@ -1218,21 +1151,21 @@ def hyperplane_incremental_pairs(
     corpus — returns ``(a, b, cos)`` with ``a`` an old vec_id, ``b``
     a new vec_id, exact cosine ``>= threshold`` (rounded to 6, the
     llm05 convention). Only new-vs-old pairs, the corpus side served
-    from the prebuilt :func:`hyperplane_build_index` table; the
-    candidates come from the incremental core :func:`_probe_candidates`
-    (shared with :func:`lsh_incremental_pairs`), the batch table from
+    from ``index``, its prebuilt :func:`hyperplane_build_index`
+    table; the candidates come from the incremental core
+    :func:`_probe_candidates` (shared with
+    :func:`lsh_incremental_pairs`), the batch table from
     :func:`hyperplane_build_index` too, and the score from
     :func:`_exact_cos_verify`.
 
-    Geometry contract (the PQ/lsh-index discipline): with
-    ``index=``, bands (``max(band)+1``) and bits_per_band
-    (``length(bits)``) are read from the table in ONE memoized
-    metadata aggregate (weak-keyed per index object — a
-    per-micro-batch caller pays it once); explicit mismatches raise.
-    ``dim`` is NOT recoverable and must be passed explicitly with
-    ``index=`` — a silent dim drift would sign different coordinates
-    on the probe side and quietly zero recall. Old/new id spaces must
-    be disjoint (the verify distinguishes sides by id).
+    Geometry contract (the PQ/lsh-index discipline): bands
+    (``max(band)+1``) and bits_per_band (``length(bits)``) are read
+    from the table in ONE memoized metadata aggregate (weak-keyed per
+    index object — a per-micro-batch caller pays it once). ``dim`` is
+    NOT recoverable and must be passed explicitly — a silent dim
+    drift would sign different coordinates on the probe side and
+    quietly zero recall. Old/new id spaces must be disjoint (the
+    verify distinguishes sides by id).
 
     Physical shape (:func:`_probe_candidates`) — the index is scanned,
     never shuffled (broadcast new-keys semi filter; map-side partial
@@ -1244,49 +1177,31 @@ def hyperplane_incremental_pairs(
     bucket announces itself instead of silently multiplying
     candidates; one checkpointed candidate set); the exact-cosine
     verify joins embeddings left-semi-pruned to suspected ids, norms
-    precomputed per vector (the llm39 device). As with
-    :func:`lsh_incremental_pairs`, the no-``index`` form builds the
-    old index in-line and its lineage re-computes per consumer —
-    serve real traffic from a written (or persisted) index table.
+    precomputed per vector (the llm39 device). Serve real traffic
+    from a written (or persisted) index table: an index passed as an
+    unpersisted lineage re-computes per consumer.
 
     ``new_index`` mirrors :func:`lsh_incremental_pairs`'s: the
     NEW batch's own precomputed (and persisted/checkpointed)
     :func:`hyperplane_build_index` table, skipping the batch
     signature pass here — the job-overlap callers compute it on a
     worker thread while the corpus index writes (guide §2.6). It must
-    be built with the SAME (bands, bits_per_band, dim); bands/bits
-    are validated raise-on-mismatch (free via the build-site geometry
-    cache, else one narrow aggregate on the tiny batch table); ``dim``
-    is undetectable, as everywhere. Consumed as-is — persist or
-    checkpoint it first (:func:`checkpoint_index`), or its lineage
-    recomputes per consumer."""
-    if index is not None:
-        if dim is None:
-            raise ValueError(
-                "dim is part of the index geometry and is not "
-                "recoverable from the table — pass the dim the index "
-                "was built with (hyperplane_build_index records it in "
-                "its docstring contract)")
-        b_idx, r_idx = _hyperplane_index_geometry(index)
-        bands = _geometry_arg("bands", bands, b_idx, "bands")
-        bits_per_band = _geometry_arg(
-            "bits_per_band", bits_per_band, r_idx, "bits per band")
-    else:
-        bands = 6 if bands is None else bands
-        bits_per_band = 6 if bits_per_band is None else bits_per_band
-        if dim is None:
-            # min over BOTH frames: inferring from the old corpus
-            # alone would sign a narrower new vector over only its
-            # partial coordinates — different band bits, no shared
-            # bucket, the duplicate silently missed
-            dim = min(_infer_embedding_dim(emb_old),
-                      _infer_embedding_dim(emb_new))
-        index = hyperplane_build_index(
-            emb_old, bands, bits_per_band, dim, id_col)
+    be built with the SAME (bands, bits_per_band, dim) as ``index``;
+    bands/bits are validated raise-on-mismatch (free via the
+    build-site geometry cache, else one narrow aggregate on the tiny
+    batch table); ``dim`` is undetectable, as everywhere. Consumed
+    as-is — persist or checkpoint it first (:func:`checkpoint_index`),
+    or its lineage recomputes per consumer."""
+    if dim is None:
+        raise ValueError(
+            "dim is part of the index geometry and is not "
+            "recoverable from the table — pass the dim the index "
+            "was built with (hyperplane_build_index records it in "
+            "its docstring contract)")
+    geom = _hyperplane_index_geometry(index)
     new_idx = _batch_index(
-        new_index, (bands, bits_per_band), _hyperplane_index_geometry,
-        lambda: hyperplane_build_index(
-            emb_new, bands, bits_per_band, dim, id_col),
+        new_index, geom, _hyperplane_index_geometry,
+        lambda: hyperplane_build_index(emb_new, *geom, dim, id_col),
         "hyperplane_build_index at the same (bands, bits_per_band, dim)")
     cand = _probe_candidates(index, new_idx, ["band", "bits"], id_col,
                              max_bucket, stats)
@@ -1296,14 +1211,34 @@ def hyperplane_incremental_pairs(
         threshold)
 
 
+def _candidate_sets(docs: DataFrame, candidates: DataFrame,
+                    shingle: int) -> DataFrame:
+    """``(a, b, sa, sb)``: each candidate pair with the distinct
+    ``shingle``-gram sets of its two docs — the shared input of the
+    exact verify scores (:func:`jaccard_pairs`,
+    :func:`containment_pairs`)."""
+    sets = spread_for_compute(docs).select(
+        "doc_id",
+        F.array_distinct(shingle_strings(F.col("text"), shingle)).alias("s"),
+    )
+    return (
+        candidates.join(sets.withColumnRenamed("doc_id", "a"), "a")
+        .withColumnRenamed("s", "sa")
+        .join(
+            sets.withColumnRenamed("doc_id", "b").withColumnRenamed("s", "sb"),
+            "b",
+        )
+    )
+
+
 def jaccard_pairs(
     docs: DataFrame,
-    candidates: DataFrame | None = None,
+    candidates: DataFrame,
     shingle: int = 1,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs (all pairs if none
-    given — only sane for small n; the LSH path is the scale path).
+    """Exact n-gram Jaccard over the ``(a, b)`` candidate pairs (an
+    LSH pass: :func:`lsh_candidate_pairs`, :func:`_probe_candidates`).
 
     Jaccard computed set-wise: |A ∩ B| / |A ∪ B| over distinct
     shingles. Both sets are ``array_distinct``, so the union's size is
@@ -1311,42 +1246,14 @@ def jaccard_pairs(
     A pair with an empty intersection scores 0.0, and so does a NULL
     or empty text or one with fewer than ``shingle`` tokens.
     """
-    sets = spread_for_compute(docs).select(
-        "doc_id",
-        F.array_distinct(shingle_strings(F.col("text"), shingle)).alias("s"),
-    )
-    if candidates is None:
-        a = sets.alias("l")
-        b = sets.alias("r")
-        pairs = a.join(b, F.col("l.doc_id") < F.col("r.doc_id"))
-    else:
-        pairs = (
-            candidates.join(sets.withColumnRenamed("doc_id", "a"), "a")
-            .withColumnRenamed("s", "sa")
-            .join(
-                sets.withColumnRenamed("doc_id", "b").withColumnRenamed("s", "sb"),
-                "b",
-            )
-            .select(
-                F.col("a").alias("l_doc_id"), F.col("b").alias("r_doc_id"),
-                F.col("sa").alias("l_s"), F.col("sb").alias("r_s"),
-            )
-        )
-        pairs = pairs.select(
-            F.struct(F.col("l_doc_id").alias("doc_id"), F.col("l_s").alias("s")).alias("l"),
-            F.struct(F.col("r_doc_id").alias("doc_id"), F.col("r_s").alias("s")).alias("r"),
-        )
-    inter = F.size(F.array_intersect(F.col("l.s"), F.col("r.s")))
-    union = F.size(F.col("l.s")) + F.size(F.col("r.s")) - inter
+    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
+    union = F.size(F.col("sa")) + F.size(F.col("sb")) - inter
     # inter > 0 implies both sets are non-NULL and non-empty, whatever
     # size(NULL) returns under the session's ANSI setting
     jac = F.when(inter > 0, inter / union).otherwise(F.lit(0.0))
     return (
-        pairs.select(
-            F.col("l.doc_id").alias("a"),
-            F.col("r.doc_id").alias("b"),
-            F.round(jac, 6).alias("jaccard"),
-        )
+        _candidate_sets(docs, candidates, shingle)
+        .select("a", "b", F.round(jac, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -1378,8 +1285,8 @@ def lsh_build_index(
     is parquet-writable and partition-prunable. ``shingle`` is part of
     the index geometry but not recoverable from the schema — callers
     own passing the same value at probe time (documented on
-    :func:`lsh_incremental_pairs`; bands/rows ARE validated there
-    from the table itself)."""
+    :func:`lsh_incremental_pairs`; bands/rows are read there from the
+    table itself)."""
     if bands < 1 or rows_per_band < 1:
         raise ValueError("bands and rows_per_band must be >= 1")
     sig = minhash_signatures(
@@ -1389,16 +1296,17 @@ def lsh_build_index(
         for r in range(rows_per_band)])
 
 
-def checkpoint_index(index: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` an index table (:func:`lsh_build_index` /
-    :func:`hyperplane_build_index` output), carrying the build-site
+def checkpoint_index(index: DataFrame) -> DataFrame:
+    """Eagerly ``localCheckpoint`` an index table
+    (:func:`lsh_build_index` / :func:`hyperplane_build_index`
+    output), carrying the build-site
     geometry-cache seed through — ``localCheckpoint`` returns a NEW
     DataFrame object, so without this the probe's raise-on-mismatch
     validation would re-pay the metadata aggregate (one extra driver
     action per batch). Used by the job-overlap callers (guide
     §2.6): the new batch's signature pass is checkpointed on a worker
     thread while the corpus index writes on another."""
-    out = index.localCheckpoint(eager=eager)
+    out = index.localCheckpoint(eager=True)
     geom = _INDEX_GEOM_CACHE.get(index)
     if geom is not None:
         _INDEX_GEOM_CACHE[out] = geom
@@ -1408,12 +1316,10 @@ def checkpoint_index(index: DataFrame, eager: bool = True) -> DataFrame:
 def lsh_incremental_pairs(
     docs_new: DataFrame,
     docs_old: DataFrame,
-    bands: int | None = None,
-    rows_per_band: int | None = None,
+    index: DataFrame,
     shingle: int = 1,
     threshold: float = 0.5,
     max_bucket: int | None = 64,
-    index: DataFrame | None = None,
     stats: dict | None = None,
     new_index: DataFrame | None = None,
 ) -> DataFrame:
@@ -1427,6 +1333,22 @@ def lsh_incremental_pairs(
     :func:`_probe_candidates` over two :func:`lsh_build_index` band
     tables (corpus and batch), scored by :func:`jaccard_pairs`.
 
+    ``index`` is the corpus's prebuilt :func:`lsh_build_index` table —
+    the scale API: the old-corpus signature pass is never paid here.
+    Following the PQ contract, index GEOMETRY is read from the table,
+    never trusted from the caller: ``rows_per_band`` from the ``r*``
+    schema columns (free), ``bands`` from ``max(band)+1`` (one narrow
+    metadata aggregate, memoized per index object). ``shingle`` cannot
+    be read from the schema — the caller owns passing the build-time
+    value, or the probe signatures hash different shingles and recall
+    silently dies. Serve real traffic from a written table
+    (``lsh_build_index(...).write...`` then
+    ``index=spark.read.parquet(...)``) or at least a persisted frame:
+    the probe consumes the index twice (matched join + membership
+    counts), so an unpersisted lineage re-computes the corpus minhash
+    pass per consumer — the gated llm40 measured 7.3 s that way vs
+    ~3 s through parquet on a 5k-doc fixture.
+
     ``new_index`` accepts the NEW batch's own precomputed (and
     persisted/checkpointed) :func:`lsh_build_index` table, skipping
     the batch signature pass here — the absorbing lifecycle (st10)
@@ -1435,28 +1357,14 @@ def lsh_incremental_pairs(
     twice per batch (``scripts/recall_probe.py --mode text-absorb`` at
     a 5M corpus measured the second pass at ~10 s/batch, BASELINE.md
     Round 14). It must be built with the SAME
-    (bands, rows_per_band, shingle) as the probe: the ``r*`` column
-    layout AND the band count are validated against the probe
-    geometry (raise-on-mismatch, the index= contract — the band
-    count comes free from the build-site geometry cache, or one
-    narrow aggregate on the tiny batch table); ``shingle`` alone is
-    undetectable, as everywhere. When given, it is consumed as-is:
-    persist or checkpoint it first, or its lineage recomputes per
-    consumer (it feeds the semi filter, the candidate join and the
-    opt-in stats light).
-
-    ``index`` accepts the prebuilt :func:`lsh_build_index` table and
-    skips the old-corpus signature pass entirely — the scale API.
-    Following the PQ contract, index GEOMETRY is read from
-    the table, never trusted from the caller: ``rows_per_band`` from
-    the ``r*`` schema columns (free), ``bands`` from ``max(band)+1``
-    (one narrow metadata aggregate); an explicit argument that
-    mismatches raises instead of probing a silently wrong banding
-    (fewer probe bands than the index = silent recall loss; more =
-    phantom buckets that never match). ``shingle`` cannot be read
-    from the schema — the caller owns passing the build-time value,
-    or the probe signatures hash different shingles and recall
-    silently dies.
+    (bands, rows_per_band, shingle) as ``index``: the ``r*`` column
+    layout AND the band count are validated against the index
+    geometry (raise-on-mismatch — the band count comes free from the
+    build-site geometry cache, or one narrow aggregate on the tiny
+    batch table); ``shingle`` alone is undetectable, as everywhere.
+    When given, it is consumed as-is: persist or checkpoint it first,
+    or its lineage recomputes per consumer (it feeds the semi filter,
+    the candidate join and the opt-in stats light).
 
     Physical shape at 100 TB (:func:`_probe_candidates`, shared with
     :func:`hyperplane_incremental_pairs`) — the old index is NEVER
@@ -1489,31 +1397,13 @@ def lsh_incremental_pairs(
     Contract: old and new doc_id spaces must be DISJOINT (the verify
     join distinguishes sides by id, the llm22 convention — new ids
     collide with old ids would cross-wire the shingle sets).
-
-    The no-``index`` form builds the old index IN-LINE as a
-    convenience — but an in-line index is a LINEAGE, and the probe
-    consumes it twice (matched join + membership counts), so the
-    corpus minhash pass re-computes per consumer. Serve real traffic
-    from a written table (``lsh_build_index(...).write...`` then
-    ``index=spark.read.parquet(...)``) or at least a persisted frame
-    — the gated llm40 measured 7.3 s in-line vs ~3 s through parquet
-    on a 5k-doc fixture; at corpus scale the gap is the whole
-    signature pass.
     """
-    if index is not None:
-        b_idx, r_idx = _minhash_index_geometry(index)
-        rows_per_band = _geometry_arg(
-            "rows_per_band", rows_per_band, r_idx, "row columns")
-        bands = _geometry_arg("bands", bands, b_idx, "bands")
-    else:
-        bands = 2 if bands is None else bands
-        rows_per_band = 2 if rows_per_band is None else rows_per_band
-        index = lsh_build_index(docs_old, bands, rows_per_band, shingle)
+    geom = _minhash_index_geometry(index)
     new_idx = _batch_index(
-        new_index, (bands, rows_per_band), _minhash_index_geometry,
-        lambda: lsh_build_index(docs_new, bands, rows_per_band, shingle),
+        new_index, geom, _minhash_index_geometry,
+        lambda: lsh_build_index(docs_new, *geom, shingle),
         "lsh_build_index at the same (bands, rows_per_band, shingle)")
-    keys = ["band"] + [f"r{r}" for r in range(rows_per_band)]
+    keys = ["band"] + [f"r{r}" for r in range(geom[1])]
     cand = _probe_candidates(index, new_idx, keys, "doc_id", max_bucket,
                              stats)
     verify_docs = (
@@ -1529,21 +1419,20 @@ def lsh_incremental_pairs(
 def lsh_index_absorb(
     docs_new: DataFrame,
     index_path: str,
-    corpus_path: str | None = None,
-    bands: int = 2,
-    rows_per_band: int = 2,
-    shingle: int = 1,
-    index_rows: DataFrame | None = None,
+    corpus_path: str,
+    index_rows: DataFrame,
 ) -> None:
     """ABSORB an ingest batch into the durable near-dup index — the
     third leg of the incremental-dedup lifecycle (build → probe →
-    absorb). Appends the batch's :func:`lsh_build_index` band/bucket
-    rows into the standing ``partitionBy("band")`` parquet index, and
-    (when ``corpus_path`` is given) the batch's ``(doc_id, text)``
-    rows into the corpus table the verify step reads. After the
-    absorb, the NEXT batch's :func:`lsh_incremental_pairs` probe sees
-    this batch as part of "old" — new data dedups against corpus AND
-    all earlier ingest, without any operator ever re-shuffling either.
+    absorb). Appends ``index_rows``, the batch's own
+    :func:`lsh_build_index` band table (the one the caller already
+    built for the probe's ``new_index``), into the standing
+    ``partitionBy("band")`` parquet index, and the batch's
+    ``(doc_id, text)`` rows into the corpus table the verify step
+    reads. After the absorb, the NEXT batch's
+    :func:`lsh_incremental_pairs` probe sees this batch as part of
+    "old" — new data dedups against corpus AND all earlier ingest,
+    without any operator ever re-shuffling either.
 
     Caller contract (the foreachBatch shape, see the gated st10):
     probe FIRST, absorb AFTER — the probe must see the index as of
@@ -1551,43 +1440,32 @@ def lsh_index_absorb(
     Within-batch pairs are the batch's own
     :func:`lsh_candidate_pairs` pass, not this function's concern.
 
-    Geometry is the caller's to keep constant: appended rows MUST use
-    the same (bands, rows_per_band, shingle) as the standing index —
-    a mismatched append poisons the table silently (the ``r*`` column
-    check in the probe only sees the merged schema). At 100 TB the
-    practical concerns are the ones any append-mostly table has, not
-    new ones: per-batch appends create one small file per band per
-    batch, so compact periodically (rewrite one ``band=`` partition
-    at a time — the partitioning makes compaction embarrassingly
-    parallel; a plain-parquet directory swap is not atomic, so run it
-    while no probe lists the index), and the probe's ``max(band)``
-    geometry aggregate stays O(metadata). The corpus append is plain
-    row data; the probe's verify only ever reads it pruned to
-    suspected ids, so corpus file count affects listing, not scan.
+    Geometry is the caller's to keep constant: ``index_rows`` MUST
+    use the same (bands, rows_per_band, shingle) as the standing
+    index — a mismatched append poisons the table silently (the
+    ``r*`` column check in the probe only sees the merged schema). At
+    100 TB the practical concerns are the ones any append-mostly
+    table has, not new ones: per-batch appends create one small file
+    per band per batch, so compact periodically (rewrite one
+    ``band=`` partition at a time — the partitioning makes compaction
+    embarrassingly parallel; a plain-parquet directory swap is not
+    atomic, so run it while no probe lists the index), and the
+    probe's ``max(band)`` geometry aggregate stays O(metadata). The
+    corpus append is plain row data; the probe's verify only ever
+    reads it pruned to suspected ids, so corpus file count affects
+    listing, not scan.
     """
-    if bands < 1 or rows_per_band < 1:
-        raise ValueError("bands and rows_per_band must be >= 1")
-    # ``index_rows``: the batch's band table when the caller already
-    # computed it for the probe (the absorbing lifecycle) — reusing
-    # it skips the second per-batch signature pass. Same geometry
-    # contract as the probe's ``new_index``.
-    rows = index_rows if index_rows is not None else lsh_build_index(
-        docs_new, bands=bands, rows_per_band=rows_per_band,
-        shingle=shingle)
-    if corpus_path is not None:
-        # two independent appends to disjoint tables — overlapped
-        # driver threads (guide §2.6, r15): the index append's
-        # planning/commit gap hides behind the corpus append's tasks
-        from .util import run_overlapped
+    # two independent appends to disjoint tables — overlapped driver
+    # threads (guide §2.6): the index append's planning/commit gap
+    # hides behind the corpus append's tasks
+    from .util import run_overlapped
 
-        run_overlapped(
-            lambda: rows.write.mode("append").partitionBy("band")
-            .parquet(index_path),
-            lambda: docs_new.select("doc_id", "text").write
-            .mode("append").parquet(corpus_path),
-        )
-    else:
-        rows.write.mode("append").partitionBy("band").parquet(index_path)
+    run_overlapped(
+        lambda: index_rows.write.mode("append").partitionBy("band")
+        .parquet(index_path),
+        lambda: docs_new.select("doc_id", "text").write
+        .mode("append").parquet(corpus_path),
+    )
 
 
 def containment_pairs(
@@ -1611,21 +1489,10 @@ def containment_pairs(
     BEFORE the multiply (products stay < 2^53, single IEEE
     multiply/divide/floor — bit-identical cross-engine, no ROUND).
     """
-    sets = spread_for_compute(docs).select(
-        "doc_id",
-        F.array_distinct(shingle_strings(F.col("text"), shingle)).alias("s"),
-    )
-    pairs = (
-        candidates.join(sets.withColumnRenamed("doc_id", "a"), "a")
-        .withColumnRenamed("s", "sa")
-        .join(
-            sets.withColumnRenamed("doc_id", "b").withColumnRenamed("s", "sb"),
-            "b",
-        )
-    )
     # LSH candidates always carry >=1 shingle per side; the guard makes
     # the operator total for arbitrary candidate sets (no div-by-zero).
-    pairs = pairs.filter((F.size("sa") > 0) & (F.size("sb") > 0))
+    pairs = _candidate_sets(docs, candidates, shingle).filter(
+        (F.size("sa") > 0) & (F.size("sb") > 0))
     inter = F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
     ppm = lambda size_col: F.floor(  # noqa: E731 — local expression builder
         inter * F.lit(1000000.0) / F.size(size_col).cast("double")
@@ -2014,7 +1881,7 @@ def winnow_fingerprints(
     so ``.`` is total), then posexplode -> codegen md5/conv per gram
     -> window-min over ``pos`` per doc -> distinct. The previous
     sequence/transform/slice/array_min form was zero-shuffle but
-    interpreted (higher-order lambdas are CodegenFallback): the r6
+    interpreted (higher-order lambdas are CodegenFallback): the
     sf10 rehearsal measured cores pegged in interpreted Substring/
     NumberConverter eval. One narrow (doc_id, pos, hash) shuffle that
     partitions evenly by doc_id is the standard Spark trade for
@@ -2072,18 +1939,18 @@ def winnow_near_dup_pairs(
     ``overlap`` = |shared rare fps| / min(|rare fps a|, |rare fps b|),
     computed over the filtered sets on both sides.
 
-    Physical shape (r7): ONE aggregation over the fingerprint stream —
+    Physical shape: ONE aggregation over the fingerprint stream —
     groupBy(fp) -> collect_list(doc_id) -> size() <= max_df (the rare
     filter IS the bucket cap: ``fps`` is distinct per (doc_id, fp), so
     the member-list size equals the old COUNT(*) df) — then both
     consumers (per-doc rare-fp counts and the per-bucket pair cross
     product) read the SAME Exchange(fp): the expensive lookahead-regex
     / md5 / window-min pipeline is planned under one reused exchange
-    instead of once per self-join side. The r6 form (groupBy-df rare
+    instead of once per self-join side. The earlier form (groupBy-df rare
     set + fp self-join + two count joins) planned the fingerprint
     pipeline 4x with no exchange reuse — measured 5.08 s at sf0.1
-    (the suite's slowest query, VERDICT r6 item 3); this is the same
-    member-list device lsh_candidate_pairs adopted in r6, with the
+    (the suite's slowest query); this is the same member-list device
+    lsh_candidate_pairs adopted, with the
     same bounded-bucket skew story (<= max_df^2/2 pairs per
     fingerprint, one over-cap array per reducer before the filter).
     """
@@ -2177,7 +2044,7 @@ def connected_components(
     ``stats``, if given, receives ``{"rounds": n}`` for convergence
     tests.
     """
-    # LAZY checkpoints throughout (r14 optimization round): every
+    # LAZY checkpoints throughout (a measured optimization): every
     # round is followed immediately by the checksum aggregate, so an
     # eager checkpoint would pay a separate materialization job per
     # round — with eager=False the checksum action itself materializes

@@ -170,8 +170,8 @@ def media_block_fingerprint_docs(
 ) -> DataFrame:
     """Opaque binary payloads -> byte-block fingerprint "documents"
     (``doc_id``, ``text``) — the bridge from multimodal columns onto
-    the gated text near-dup machinery (VERDICT r13 item 4: the
-    multimodal family's first-class dedup operator).
+    the gated text near-dup machinery (the multimodal family's
+    first-class dedup operator).
 
     Each payload is hex-encoded and sliced into fixed
     ``block_bytes``-byte blocks (2·block_bytes hex chars; the trailing
@@ -181,15 +181,15 @@ def media_block_fingerprint_docs(
     / :func:`~.dedup.jaccard_pairs` at ``shingle=1`` compute
     block-level MinHash-LSH and exact block-Jaccard over media bytes
     with zero new shuffle machinery, and every existing lever (band
-    sizing, ``max_bucket`` + ``_overcap_light`` stats, ``sizing=
-    "auto"``) applies unchanged.
+    sizing with :func:`~.dedup.suggest_lsh_sizing`, ``max_bucket`` +
+    ``_overcap_light`` stats) applies unchanged.
 
     The hex slicing is one ``regexp_extract_all`` (``(.{1,2B})``
     consecutive greedy chunks) — whole-stage codegen, NOT a
-    higher-order ``transform`` lambda (CodegenFallback; the r6
-    shingle lesson). No per-block md5 is needed: the LSH minhash
-    recipe hashes each token itself, and raw hex blocks are already
-    uniform tokens.
+    higher-order ``transform`` lambda (CodegenFallback; the
+    shingle lesson of :func:`~.dedup.shingle_strings`). No per-block
+    md5 is needed: the LSH minhash recipe hashes each token itself,
+    and raw hex blocks are already uniform tokens.
 
     Similarity semantics: fixed OFFSET-ALIGNED blocks detect the
     dominant binary dup classes — identical payloads, appended/
@@ -337,12 +337,10 @@ def media_block_index(
 def media_incremental_pairs(
     media_new: DataFrame,
     media_old: DataFrame,
+    index: DataFrame,
     block_bytes: int = 64,
-    bands: int | None = None,
-    rows_per_band: int | None = None,
     threshold: float = 0.5,
     max_bucket: int | None = 64,
-    index: DataFrame | None = None,
     stats: dict | None = None,
     new_index: DataFrame | None = None,
 ) -> DataFrame:
@@ -355,20 +353,19 @@ def media_incremental_pairs(
     incremental probe at ``shingle=1``, so the entire certified
     physical shape — index scanned never shuffled, broadcast matched
     keys, old-side-only cap, ``new_max_bucket`` skew light, pruned
-    verify — applies verbatim. ``index`` takes a written-back
-    :func:`media_block_index` table (geometry validated from the
-    table, the shared contract); old/new media_id spaces must be
-    disjoint. ``new_index`` (r15) passes the NEW batch's own
-    precomputed :func:`media_block_index` table through to the probe
-    (same geometry contract; persist/checkpoint it first) — the
-    job-overlap device of :func:`~.dedup.lsh_incremental_pairs`."""
+    verify — applies verbatim. ``index`` is the corpus's written-back
+    :func:`media_block_index` table (geometry read from the table,
+    the shared contract); old/new media_id spaces must be disjoint.
+    ``new_index`` passes the NEW batch's own precomputed
+    :func:`media_block_index` table through to the probe (same
+    geometry contract; persist/checkpoint it first) — the job-overlap
+    device of :func:`~.dedup.lsh_incremental_pairs`."""
     from .dedup import lsh_incremental_pairs
 
     return lsh_incremental_pairs(
         media_block_fingerprint_docs(media_new, block_bytes=block_bytes),
         media_block_fingerprint_docs(media_old, block_bytes=block_bytes),
-        bands=bands, rows_per_band=rows_per_band, shingle=1,
-        threshold=threshold, max_bucket=max_bucket, index=index,
+        index, shingle=1, threshold=threshold, max_bucket=max_bucket,
         stats=stats, new_index=new_index)
 
 

@@ -140,8 +140,8 @@ def q_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail shares every complete leading block and block-Jaccard stays
     high — exactly the appended/truncated-metadata dup class the
     operator exists to catch. Banding mirrors the gated llm03
-    fixture; `suggest_lsh_sizing`/`sizing="auto"` apply unchanged at
-    corpus scale (the operator delegates to lsh_candidate_pairs)."""
+    fixture; `suggest_lsh_sizing` applies unchanged at corpus scale
+    (the operator delegates to lsh_candidate_pairs)."""
     from .llm_queries import _mutated_docs
 
     t = _tables(spark, sf_dir)

@@ -870,7 +870,6 @@ def absorbing_dedup_step(
     # the batch's band table, computed ONCE and fed to the probe,
     # the within-batch pass, AND the absorb — without this the
     # lifecycle paid the batch signature pass three times per batch
-    # (r14 reviews)
     batch_idx = lsh_build_index(
         batch_df, bands=bands, rows_per_band=rows_per_band,
         shingle=shingle).localCheckpoint(eager=True)
@@ -883,9 +882,7 @@ def absorbing_dedup_step(
         spark.createDataFrame([], "a long, b long, jaccard double") \
             .write.mode("overwrite").parquet(
                 os.path.join(out_dir, f"b{batch_id}"))
-        lsh_index_absorb(batch_df, idx_path, corpus_path,
-                         bands=bands, rows_per_band=rows_per_band,
-                         shingle=shingle, index_rows=batch_idx)
+        lsh_index_absorb(batch_df, idx_path, corpus_path, batch_idx)
         return
     probe = lsh_incremental_pairs(
         batch_df, corpus, shingle=shingle, threshold=threshold,
@@ -904,9 +901,7 @@ def absorbing_dedup_step(
     )
     pairs.write.mode("overwrite").parquet(
         os.path.join(out_dir, f"b{batch_id}"))
-    lsh_index_absorb(batch_df, idx_path, corpus_path,
-                     bands=bands, rows_per_band=rows_per_band,
-                     shingle=shingle, index_rows=batch_idx)
+    lsh_index_absorb(batch_df, idx_path, corpus_path, batch_idx)
 
 
 def q_stream_absorbing_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

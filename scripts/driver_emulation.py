@@ -16,11 +16,13 @@ Defaults: sf_dir=/root/testdata/sf0.01, names=all registered queries
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

@@ -18,9 +18,11 @@ Usage: python scripts/plan_audit.py [sf_dir]   (default sf0.001)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from kinesis_alerts_consumer_spark.session import get_spark  # noqa: E402
@@ -165,7 +167,7 @@ def main() -> None:
                 f" {r['bcast']} | {r['smj']} | {r['wgl']} | {r['wscg']} |"
                 f" {r['text_in_exchange']} |"
             )
-    with open("/root/repo/PLAN_AUDIT.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLAN_AUDIT.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     batch = [r for r in rows if "hash_ex" in r]
     print(

@@ -27,7 +27,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -112,8 +113,9 @@ def main() -> None:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
-            os.makedirs("/root/repo/plans/r15", exist_ok=True)
-            path = f"/root/repo/plans/r15/{short}_{args.tag}.txt"
+            out_dir = os.path.join(ROOT, "plans", "r15")
+            os.makedirs(out_dir, exist_ok=True)
+            path = os.path.join(out_dir, f"{short}_{args.tag}.txt")
             with open(path, "w") as fh:
                 fh.write(f"# {name} @ {args.sf} — explain('formatted') "
                          f"after execution, timed {dt:.2f}s\n")

@@ -21,10 +21,12 @@ should sit far below because fixed overheads amortize).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEAVY_FAMILY = [
     "llm03_near_dup_minhash_lsh",   # LSH candidate fan-out

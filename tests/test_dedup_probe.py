@@ -70,13 +70,14 @@ def test_jaccard_pairs_scores_null_empty_and_short_texts(spark):
     """Every pair's score, threshold 0: |A ∩ B| / |A ∪ B| over distinct
     shingles (a Python set reference), and 0.0 whenever the
     intersection is empty — which covers NULL, empty and
-    fewer-than-n-token texts. Both the all-pairs and the
-    candidate-list forms, at shingle widths 1 and 3."""
+    fewer-than-n-token texts. Over every pair and over a subset of
+    them, at shingle widths 1 and 3."""
     from kinesis_alerts_consumer_spark.operators.dedup import jaccard_pairs
 
     texts = dict(TEXTS)
     ids = sorted(texts)
     all_pairs = [(a, b) for a in ids for b in ids if a < b]
+    every = spark.createDataFrame(all_pairs, "a long, b long")
     cands = spark.createDataFrame(
         [(a, b) for a, b in all_pairs if (a + b) % 3], "a long, b long")
     for n in (1, 3):
@@ -85,16 +86,16 @@ def test_jaccard_pairs_scores_null_empty_and_short_texts(spark):
             sa, sb = _shingles(texts[a], n), _shingles(texts[b], n)
             inter = len(sa & sb)
             want[(a, b)] = inter / len(sa | sb) if inter else 0.0
-        for candidates in (None, cands):
+        for candidates in (every, cands):
             got = {
                 (r.a, r.b): r.jaccard
                 for r in jaccard_pairs(
                     _docs(spark), candidates, shingle=n,
                     threshold=0.0).collect()
             }
-            keys = set(all_pairs) if candidates is None else {
+            keys = set(all_pairs) if candidates is every else {
                 (r.a, r.b) for r in cands.collect()}
-            assert set(got) == keys, (n, candidates is None)
+            assert set(got) == keys, (n, candidates is every)
             for k in keys:
                 assert abs(got[k] - want[k]) < 1e-6, (n, k, got[k], want[k])
         # the fixture has overlapping and disjoint pairs at each width

@@ -269,63 +269,6 @@ def test_lsh_bucket_cap_stats_warning_light(spark):
     assert nstats == {"overcap_buckets": 0, "dropped_members": 0}
 
 
-def test_lsh_sizing_auto_is_a_gated_consumer_of_suggest(spark):
-    """VERDICT r11 item 6: ``sizing="auto"`` derives (bands,
-    rows_per_band) from approx_count_distinct(doc_id) via
-    suggest_lsh_sizing, matches the explicitly-derived call exactly,
-    reports its choice through ``stats``, and leaves the default
-    (sizing=None) plan byte-identical — the gated llm03 literal
-    sizing is untouched."""
-    import pytest
-
-    from kinesis_alerts_consumer_spark.operators.dedup import (
-        hll_buffered_count,
-        lsh_candidate_pairs,
-        suggest_lsh_sizing,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"document body number {i} with shared tokens") for i in range(40)]
-        + [(100, "a genuinely unique document about spark engines"),
-           (101, "a genuinely unique document about spark engines!")],
-        "doc_id long, text string",
-    )
-    n = docs.select("doc_id").distinct().count()
-    stats: dict = {}
-    auto = lsh_candidate_pairs(docs, shingle=1, sizing="auto", stats=stats)
-    # the derivation is visible to audits...
-    assert stats["n_docs_estimate"] >= 1
-    b, r = stats["bands"], stats["rows_per_band"]
-    # ...and uses suggest_lsh_sizing on the 2σ-buffered HLL estimate
-    # (±5% rsd even at this cardinality — 43 for 42 observed — so
-    # compare against the REPORTED estimate; VERDICT r12 item 3)
-    n_est = stats["n_docs_estimate"]
-    assert abs(n_est - n) <= max(3, n // 10)  # sane estimate
-    assert stats["n_docs_sized_for"] == hll_buffered_count(n_est)
-    assert (b, r) == suggest_lsh_sizing(hll_buffered_count(n_est))
-    explicit = lsh_candidate_pairs(docs, shingle=1, bands=b, rows_per_band=r)
-    assert auto.sameSemantics(explicit)
-    assert {(x.a, x.b) for x in auto.collect()} == {
-        (x.a, x.b) for x in explicit.collect()
-    }
-    # the default path is untouched: sizing=None plans exactly as the
-    # pre-auto form (llm03's pinned (2, 2) hash-identical)
-    assert lsh_candidate_pairs(docs, shingle=1).sameSemantics(
-        lsh_candidate_pairs(docs, shingle=1, bands=2, rows_per_band=2)
-    )
-    # cap=None still derives against the default occupancy target
-    stats_nocap: dict = {}
-    lsh_candidate_pairs(
-        docs, shingle=1, sizing="auto", max_bucket=None, stats=stats_nocap
-    )
-    assert (stats_nocap["bands"], stats_nocap["rows_per_band"]) == \
-        suggest_lsh_sizing(
-            hll_buffered_count(stats_nocap["n_docs_estimate"]),
-            max_bucket=64)
-    with pytest.raises(ValueError, match="auto"):
-        lsh_candidate_pairs(docs, sizing="bogus")
-
-
 def test_lsh_sizing_helper_inverts_the_s_curve():
     """suggest_lsh_sizing productizes the r10 band-scaling lesson:
     rows_per_band grows (logarithmically) with corpus size so bucket
@@ -873,9 +816,9 @@ def test_prebuilt_index_probes_prune_partitioned_tables(spark, tmp_path):
 
 def test_lsh_incremental_pairs_semantics(spark):
     """llm40's operator (r13): new-batch-vs-corpus near-dup through a
-    prebuilt MinHash bucket index. Pins: inline build == prebuilt
-    index results; index geometry (bands/rows_per_band) is READ from
-    the table and explicit mismatches raise (the r12/r13 PQ
+    prebuilt MinHash bucket index. Pins: in-memory index == parquet
+    roundtrip results; index geometry (bands/rows_per_band) is READ
+    from the table, and a table without band columns raises (the PQ
     contract); only new-vs-old pairs come back; the cap applies to
     OLD-side bucket membership with the stats light reporting drops;
     the probe plan broadcasts the new side (the corpus-sized old
@@ -907,7 +850,8 @@ def test_lsh_incremental_pairs_semantics(spark):
     )
 
     inline = lsh_incremental_pairs(
-        new, old, bands=2, rows_per_band=2, shingle=3, threshold=0.5)
+        new, old, shingle=3, threshold=0.5,
+        index=lsh_build_index(old, bands=2, rows_per_band=2, shingle=3))
     got = {(r.a, r.b): r.jaccard for r in inline.collect()}
     assert got.get((50, 1000)) == 1.0
     # new-vs-old only: no old ids in b, no new ids in a
@@ -919,12 +863,9 @@ def test_lsh_incremental_pairs_semantics(spark):
     assert {(r.a, r.b, r.jaccard) for r in prebuilt.collect()} == {
         (r.a, r.b, r.jaccard) for r in inline.collect()
     }
-    # geometry read from the index; explicit mismatches raise
-    with pytest.raises(ValueError, match="row columns"):
-        lsh_incremental_pairs(new, old, rows_per_band=3, shingle=3,
-                              index=idx)
-    with pytest.raises(ValueError, match="bands"):
-        lsh_incremental_pairs(new, old, bands=4, shingle=3, index=idx)
+    # a table that is not a band table raises
+    with pytest.raises(ValueError, match="lsh_build_index"):
+        lsh_incremental_pairs(new, old, shingle=3, index=old)
 
     # doc 1002 probes the 30-doc boilerplate cluster's hot bucket: a
     # tight cap drops it (old-side members), the light reports it —
@@ -933,7 +874,7 @@ def test_lsh_incremental_pairs_semantics(spark):
     assert (0, 1002) in got  # uncapped: the hot bucket pairs
     stats: dict = {}
     capped = lsh_incremental_pairs(
-        new, old, bands=2, rows_per_band=2, shingle=3, threshold=0.5,
+        new, old, shingle=3, threshold=0.5, index=idx,
         max_bucket=4, stats=stats)
     capped_pairs = {(r.a, r.b) for r in capped.collect()}
     assert stats["overcap_buckets"] >= 1
@@ -969,7 +910,9 @@ def test_incremental_new_side_skew_light(spark):
     the separate-action contract every light obeys, (c) the
     empty-batch zero."""
     from kinesis_alerts_consumer_spark.operators.dedup import (
+        hyperplane_build_index,
         hyperplane_incremental_pairs,
+        lsh_build_index,
         lsh_incremental_pairs,
     )
 
@@ -987,10 +930,11 @@ def test_incremental_new_side_skew_light(spark):
            (2001, "another unique snippet mentioning catalyst")],
         "doc_id long, text string",
     )
+    idx = lsh_build_index(old, bands=2, rows_per_band=2, shingle=3)
     stats: dict = {}
     with_stats = lsh_incremental_pairs(
-        new, old, bands=2, rows_per_band=2, shingle=3, threshold=0.5,
-        max_bucket=4, stats=stats)
+        new, old, idx, shingle=3, threshold=0.5, max_bucket=4,
+        stats=stats)
     assert stats["new_max_bucket"] == 6
     # the old-side cap saw nothing (old buckets hold <= 2 members)
     assert stats["overcap_buckets"] == 0
@@ -1012,23 +956,21 @@ def test_incremental_new_side_skew_light(spark):
         return p
 
     plain = lsh_incremental_pairs(
-        new, old, bands=2, rows_per_band=2, shingle=3, threshold=0.5,
-        max_bucket=4)
+        new, old, idx, shingle=3, threshold=0.5, max_bucket=4)
     assert _norm_plan(with_stats) == _norm_plan(plain)
     # cap=None still reports the new-side light (it is independent of
     # the old-side cap)
     nstats: dict = {}
     lsh_incremental_pairs(
-        new, old, bands=2, rows_per_band=2, shingle=3, threshold=0.5,
-        max_bucket=None, stats=nstats)
+        new, old, idx, shingle=3, threshold=0.5, max_bucket=None,
+        stats=nstats)
     assert nstats["new_max_bucket"] == 6
     assert nstats["overcap_buckets"] == 0  # _zero_light
     # empty ingest batch -> 0 (coalesce over the empty max)
     estats: dict = {}
     lsh_incremental_pairs(
         spark.createDataFrame([], "doc_id long, text string"), old,
-        bands=2, rows_per_band=2, shingle=3, threshold=0.5,
-        max_bucket=4, stats=estats)
+        idx, shingle=3, threshold=0.5, max_bucket=4, stats=estats)
     assert estats["new_max_bucket"] == 0
 
     # hyperplane family: 5 EXACTLY colinear batch vectors (scalar
@@ -1044,14 +986,14 @@ def test_incremental_new_side_skew_light(spark):
         + [(2000, [0.0, 0.0, 0.0, 1.0])],
         "vec_id long, embedding array<double>",
     )
+    hidx = hyperplane_build_index(emb_old, bands=4, bits_per_band=4, dim=4)
     hstats: dict = {}
     hs = hyperplane_incremental_pairs(
-        emb_new, emb_old, bands=4, bits_per_band=4, dim=4,
-        threshold=0.9, max_bucket=16, stats=hstats)
+        emb_new, emb_old, hidx, dim=4, threshold=0.9, max_bucket=16,
+        stats=hstats)
     assert hstats["new_max_bucket"] == 5
     hplain = hyperplane_incremental_pairs(
-        emb_new, emb_old, bands=4, bits_per_band=4, dim=4,
-        threshold=0.9, max_bucket=16)
+        emb_new, emb_old, hidx, dim=4, threshold=0.9, max_bucket=16)
     assert _norm_plan(hs) == _norm_plan(hplain)
 
 
@@ -1190,12 +1132,11 @@ def test_split_assign_properties():
 
 def test_hyperplane_incremental_pairs_semantics(spark):
     """llm41's operator (r13): the embedding-family twin of
-    lsh_incremental_pairs. Pins: inline build == prebuilt index ==
-    parquet roundtrip; geometry (bands from max(band)+1, bits from
-    length(bits)) read from the table with explicit mismatches
-    raising; dim REQUIRED with index= (not recoverable); new-vs-old
-    pairs only; old-side probed-bucket cap + light; broadcast probe
-    (the old index never shuffles)."""
+    lsh_incremental_pairs. Pins: in-memory index == parquet
+    roundtrip; geometry (bands from max(band)+1, bits from
+    length(bits)) read from the table; dim REQUIRED (not
+    recoverable); new-vs-old pairs only; old-side probed-bucket cap
+    + light; broadcast probe (the old index never shuffles)."""
     import pytest
 
     from kinesis_alerts_consumer_spark.operators.dedup import (
@@ -1221,7 +1162,8 @@ def test_hyperplane_incremental_pairs_semantics(spark):
     )
 
     inline = hyperplane_incremental_pairs(
-        new, old, bands=4, bits_per_band=4, dim=8, threshold=0.9)
+        new, old, dim=8, threshold=0.9,
+        index=hyperplane_build_index(old, bands=4, bits_per_band=4, dim=8))
     got = {(r.a, r.b): r.cos for r in inline.collect()}
     assert got.get((50, 1000)) == 1.0
     assert all(a < 1000 and b >= 1000 for a, b in got)
@@ -1234,21 +1176,15 @@ def test_hyperplane_incremental_pairs_semantics(spark):
     assert {(r.a, r.b, r.cos) for r in prebuilt.collect()} == {
         (r.a, r.b, r.cos) for r in inline.collect()
     }
-    # geometry from the index; mismatches and missing dim raise
+    # geometry from the index; a missing dim raises
     with pytest.raises(ValueError, match="dim is part"):
         hyperplane_incremental_pairs(new, old, index=idx)
-    with pytest.raises(ValueError, match="bands"):
-        hyperplane_incremental_pairs(new, old, bands=6, dim=8, index=idx)
-    with pytest.raises(ValueError, match="bits_per_band"):
-        hyperplane_incremental_pairs(new, old, bits_per_band=6, dim=8,
-                                     index=idx)
 
     # a tight cap drops the probed hot bucket (20 colinear old
     # members), the light reports it, the quiet planted pair survives
     stats: dict = {}
     capped = hyperplane_incremental_pairs(
-        new, old, bands=4, bits_per_band=4, dim=8, threshold=0.9,
-        max_bucket=4, stats=stats)
+        new, old, idx, dim=8, threshold=0.9, max_bucket=4, stats=stats)
     capped_pairs = {(r.a, r.b) for r in capped.collect()}
     assert stats["overcap_buckets"] >= 1
     assert stats["dropped_members"] >= 20

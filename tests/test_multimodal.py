@@ -223,8 +223,8 @@ def test_media_cdc_insertion_robustness(spark):
 def test_media_incremental_pairs_prebuilt_index(spark, tmp_path):
     """mm06's operator: new media probed against a written-back
     media_block_index — geometry read from the table (the shared
-    contract raises on mismatch arrives via lsh_incremental_pairs),
-    new-vs-old only, and the new_max_bucket skew light rides along."""
+    contract of lsh_incremental_pairs), new-vs-old only, and the
+    new_max_bucket skew light rides along."""
     from kinesis_alerts_consumer_spark.operators.multimodal import (
         media_block_index,
         media_incremental_pairs,
@@ -257,12 +257,15 @@ def test_media_incremental_pairs_prebuilt_index(spark, tmp_path):
     assert all(a < 1000 <= b for a, b in pairs)
     assert stats["new_max_bucket"] >= 1
 
-    # inline form (no index) agrees
-    inline = {(r.a, r.b): r.jaccard
-              for r in media_incremental_pairs(
-                  new, old, block_bytes=8, bands=2,
-                  rows_per_band=2).collect()}
-    assert inline == pairs
+    # an in-memory index (build-site geometry) agrees with the
+    # parquet-read one (geometry from the metadata aggregate)
+    in_memory = {(r.a, r.b): r.jaccard
+                 for r in media_incremental_pairs(
+                     new, old, block_bytes=8,
+                     index=media_block_index(
+                         old, block_bytes=8, bands=2,
+                         rows_per_band=2)).collect()}
+    assert in_memory == pairs
 
 
 def test_mm_oracle_twin_smoke(spark, duck):

@@ -1119,8 +1119,8 @@ def test_band_table_geometry_contracts(spark):
     silently losing recall (same-width columns, different minhash
     split); (c) lsh_candidate_pairs(index=) returns the same
     candidates and the same over-cap ``stats`` light as the inline
-    path, each form's plan unchanged by ``stats``, and raises on
-    sizing= or explicit geometry mismatch."""
+    path, each form's plan unchanged by ``stats``, and raises on an
+    explicit geometry mismatch."""
     import pytest as _pytest
 
     from kinesis_alerts_consumer_spark.operators.dedup import (
@@ -1180,7 +1180,5 @@ def test_band_table_geometry_contracts(spark):
         both, bands=2, rows_per_band=2, shingle=3, max_bucket=1))
     assert lit_idx.sameSemantics(lsh_candidate_pairs(
         both, shingle=3, max_bucket=1, index=both_idx))
-    with _pytest.raises(ValueError, match="sizing"):
-        lsh_candidate_pairs(both, sizing="auto", index=both_idx)
     with _pytest.raises(ValueError, match="does not match"):
         lsh_candidate_pairs(both, bands=4, index=both_idx)
