@@ -458,7 +458,8 @@ _SIGNS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]]" 
     weakref.WeakKeyDictionary()
 )
 
-# probe index geometry, weak-keyed on the index
+# probe index geometry (band tables here, PQ codebooks in
+# similarity.pq_encode), weak-keyed on the index
 # DataFrame OBJECT (same GC-aliasing rationale as _SIGNS_CACHE): a
 # caller probing the same prebuilt index every micro-batch (st09's
 # foreachBatch) pays the max(band) metadata aggregate ONCE, not once

@@ -1,16 +1,23 @@
 """Similarity search over the ``embeddings`` table (array<float>).
 
-Two paths, both UDF-free:
+Every top-k operator here has the same three steps and differs only
+in the middle one:
 
-- brute-force cosine top-k: broadcast the (small) query set, score
-  every (query, candidate) with a JVM-side double-precision dot
-  product (``zip_with`` + ``aggregate``), rank per query. One
-  broadcast join + one window — the exact-baseline at any scale where
-  the query side is small.
-- LSH-bucketed top-k: sign-pattern bucket join first (same buckets as
-  dedup.embedding_near_dup_pairs), cosine only within the bucket —
-  the approximate scale path: candidate count drops ~2^bits, recall
-  traded via ``sign_bits``.
+1. query rows — :func:`_query_rows`: the ``num_queries`` lowest
+   vec_ids, a bounded batch that is broadcast;
+2. candidate generation — every other vector (:func:`cosine_topk`,
+   :func:`knn_classify`), the query's sign-pattern buckets
+   (:func:`cosine_topk_lsh`), its nearest IVF cells
+   (:func:`cosine_topk_ivf`) or its PQ ADC shortlist
+   (:func:`cosine_topk_pq`);
+3. exact re-rank — :func:`_rerank_topk`: ``ROUND(cosine, 6)`` of each
+   candidate pair and the ``k`` best per query as ``(query_id,
+   neighbor_id, rnk, cos)``, ties broken by neighbor_id, so the
+   output is total-ordered and oracle-hashable.
+
+The IVF and PQ operators serve from an index built once by
+:func:`ivf_assign` / :func:`pq_encode` (in memory or read back from a
+table); none builds one in-line. All of it is UDF-free.
 
 Double-precision note: elements cast to double BEFORE multiply and
 the sum is sequential over the array, so DuckDB's
@@ -20,28 +27,32 @@ bit-for-bit — the oracle comparison is exact, not tolerance-based.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from .dedup import _drop_overcap, _sign_bucket, adaptive_sign_bits
+from .dedup import (
+    _INDEX_GEOM_CACHE,
+    _drop_overcap,
+    _sign_bucket,
+    adaptive_sign_bits,
+)
 from .util import spread_for_compute
 
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential double-precision dot product of two float arrays.
 
-    The cast rides INSIDE the zip_with lambda (r14 optimization
-    round): the earlier ``zip_with(_d(a), _d(b), ..)`` form
-    materialized two intermediate double arrays per evaluation — two
-    extra interpreted array traversals + allocations. Element values
-    and fold order are unchanged (cast-then-multiply, left-to-right
-    sum from 0.0), so results stay bit-identical — measured ~18%
-    cheaper on a 200k x 64-dim microbench. An unrolled
-    GetArrayItem/multiply/add chain was ALSO measured (the obvious
-    "escape CodegenFallback" move): ~2x SLOWER than this interpreted
-    HOF at dim=64 — the 64-deep Add tree defeats JIT — so the HOF
-    form is the keeper, and callers instead parallelize the stage it
-    runs in (see dedup._exact_cos_verify)."""
+    The cast rides inside the zip_with lambda: casting the two arrays
+    first materializes two intermediate double arrays per evaluation.
+    Element values and fold order are the same either way
+    (cast-then-multiply, left-to-right sum from 0.0), so results are
+    bit-identical. An unrolled GetArrayItem/multiply/add chain, which
+    escapes CodegenFallback, measured about 2x slower than this
+    interpreted HOF at dim=64, so callers parallelize the stage it
+    runs in instead (see dedup._exact_cos_verify)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -60,46 +71,49 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def cosine_topk(
-    emb: DataFrame,
-    k: int = 5,
-    num_queries: int = 10,
-    query_filter: Column | None = None,
-) -> DataFrame:
-    """Brute-force cosine top-k: for each query vector (default: the
-    ``num_queries`` lowest vec_ids), the k nearest other vectors.
-
-    Returns (query_id, neighbor_id, rnk, cos) — ties broken by
-    neighbor_id so the output is total-ordered and oracle-hashable.
-    """
-    queries = emb.filter(
-        query_filter if query_filter is not None else F.col("vec_id") < num_queries
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
+def _query_rows(emb: DataFrame, n: int, *carry: Column) -> DataFrame:
+    """The query side of every top-k operator: the ``vec_id < n`` rows
+    as ``(query_id, q, *carry)``."""
+    return emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q"),
+        *carry,
     )
-    emb = spread_for_compute(emb)
-    scored = (
-        F.broadcast(queries)
-        .join(
-            emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding")),
-            F.col("query_id") != F.col("neighbor_id"),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q"), F.col("embedding")), 6).alias("cos"),
-        )
-    )
-    from pyspark.sql.window import Window
 
+
+def _rerank_topk(cands: DataFrame, k: int, *carry: str) -> DataFrame:
+    """Exact re-rank of candidate pairs ``(query_id, neighbor_id, q,
+    embedding, *carry)``: the ``k`` highest ``ROUND(cosine(q,
+    embedding), 6)`` per query as ``(query_id, neighbor_id, rnk, cos,
+    *carry)``, rank ties broken by neighbor_id."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id")
     )
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
+        cands.select(
+            "query_id",
+            "neighbor_id",
+            *carry,
+            F.round(cosine(F.col("q"), F.col("embedding")), 6).alias("cos"),
+        )
+        .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.col("rnk").cast("bigint").alias("rnk"), "cos")
+        .select(
+            "query_id", "neighbor_id",
+            F.col("rnk").cast("bigint").alias("rnk"), "cos", *carry,
+        )
     )
+
+
+def cosine_topk(emb: DataFrame, k: int = 5, num_queries: int = 10) -> DataFrame:
+    """Brute-force cosine top-k, the exact baseline: each of the
+    ``num_queries`` lowest vec_ids against every other vector. One
+    broadcast join and one window."""
+    cands = F.broadcast(_query_rows(emb, num_queries)).join(
+        spread_for_compute(emb).select(
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding")),
+        F.col("query_id") != F.col("neighbor_id"),
+    )
+    return _rerank_topk(cands, k)
 
 
 def knn_classify(
@@ -110,38 +124,22 @@ def knn_classify(
     labeled remainder; each probe takes the majority label of its
     ``k`` highest-cosine training neighbors (vote ties -> smaller
     label, rank ties -> smaller neighbor id — total order, so the
-    oracle hash is exact).
+    oracle hash is exact). Returns (query_id, pred_label, votes).
 
-    Scale shape: the probe set is a BOUNDED incoming batch, never a
-    fraction of the corpus — a fractional split makes the score pass
-    O(n^2) (a first cut used a 25% md5 split and measured 44x at 10x
-    rows; the adaptive-parameter trap BASELINE.md records for
-    llm05/llm27). With probes fixed, the broadcast-join scan is
-    O(probes x n) — linear — followed by two narrow shuffles on
-    query_id (top-k window, vote count). For probe sets too big to
-    broadcast, bucket both sides with the sign-LSH path (llm07's
-    device) — the classification layer on top is unchanged.
+    The probe set is a bounded incoming batch, never a fraction of
+    the corpus: a fractional split makes the score pass O(n^2) (the
+    adaptive-parameter trap BASELINE.md records for llm05/llm27).
+    With probes fixed, the broadcast-join scan is O(probes x n),
+    followed by two narrow shuffles on query_id (top-k window, vote
+    count).
     """
-    queries = emb.filter(F.col("vec_id") < num_probes).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
     train = emb.filter(F.col("vec_id") >= num_probes).select(
         F.col("vec_id").alias("neighbor_id"), "embedding", "label"
     )
-    scored = F.broadcast(queries).join(spread_for_compute(train)).select(
-        "query_id",
-        "neighbor_id",
-        "label",
-        F.round(cosine(F.col("q"), F.col("embedding")), 6).alias("cos"),
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
+    cands = F.broadcast(_query_rows(emb, num_probes)).join(
+        spread_for_compute(train))
     votes = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        _rerank_topk(cands, k, "label")
         .groupBy("query_id", "label")
         .agg(F.count("*").alias("votes"))
     )
@@ -203,95 +201,60 @@ def label_centroids(emb: DataFrame) -> DataFrame:
 
 
 def ivf_assign(
-    emb: DataFrame, n_centroids: int = 8, id_col: str = "vec_id"
+    emb: DataFrame, n_centroids: int = 8
 ) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantization with deterministic centroids (the
-    ``n_centroids`` lowest-id vectors — swap for k-means output in
-    production; the *structure* is identical and this keeps the oracle
-    exact). Returns (centroids, assignments) where every vector maps
-    to its max-cosine centroid (ties -> lowest centroid id).
+    """The IVF index that :func:`cosine_topk_ivf` serves from:
+    (centroids, assignments), where centroids are the ``n_centroids``
+    lowest-id vectors (swap for k-means output in production; the
+    structure is identical and this keeps the oracle exact) and every
+    vector maps to its max-cosine centroid (ties -> lowest centroid
+    id).
 
-    Scale shape: centroids broadcast; assignment is ONE narrow pass
-    over the vectors (argmax over a few dot products per row) — the
-    inverted lists then bound every query to nprobe clusters.
+    Centroids broadcast; assignment is one narrow pass over the
+    vectors (argmax over a few dot products per row). Build it once
+    and keep it: at scale, write the assignments next to the vectors,
+    partitioned by centroid_id, so each probe is a partition-pruned
+    scan.
     """
-    cents = emb.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("centroid_id"), F.col("embedding").alias("ce")
+    cents = emb.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("ce")
     )
     scored = (
-        emb.select(id_col, "embedding")
+        emb.select("vec_id", "embedding")
         .join(F.broadcast(cents))
         .select(
-            id_col,
+            "vec_id",
             "centroid_id",
             cosine(F.col("embedding"), F.col("ce")).alias("ccos"),
         )
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("centroid_id")
     )
     assign = (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(id_col, "centroid_id")
+        .select("vec_id", "centroid_id")
     )
     return cents, assign
 
 
 def cosine_topk_ivf(
     emb: DataFrame,
+    index: tuple[DataFrame, DataFrame],
     k: int = 5,
     num_queries: int = 10,
-    n_centroids: int | None = None,
     nprobe: int = 2,
-    index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k: each query probes its ``nprobe``
-    closest centroids and scores only vectors assigned to them.
-    Candidate count ~ nprobe/n_centroids of the corpus — the standard
-    inverted-file ANN trade; recall < 1 by design.
-
-    ``index`` accepts a prebuilt ``(centroids, assignments)`` pair
-    (the :func:`ivf_assign` output, typically persisted or written to
-    a table) and skips the assign pass entirely. This is the SCALE
-    API: ``scripts/recall_probe.py --mode ann-ivf`` (1M clustered
-    vectors, BASELINE.md Round 12) measured the sqrt-rule sizing
-    (n_centroids=1000, nprobe=32) at **recall@5 = 1.00 scoring only
-    3.2% of the corpus**
-    — but 98% of its 976 s wall was the n x n_centroids assign pass,
-    a one-time INDEX BUILD this signature was re-running per query
-    batch. Build once with ``ivf_assign`` (at 100 TB: write the
-    assignment table next to the vectors, partitioned by
-    centroid_id so each probe is a partition-pruned scan), then
-    serve every batch through ``index=``. The gated llm13 literal
-    (8, 2) measured recall 0.86 while scoring 25% — cells must grow
-    ~sqrt(n) or IVF neither prunes nor recalls at scale.
-
-    ``n_centroids`` is a BUILD parameter: with ``index=`` it would be
-    silently ignored, so passing both raises (ADVICE r12) — the cell
-    count is already baked into the prebuilt assignments. Default
-    ``None`` resolves to 8 on the build path (the gated llm13
-    literal)."""
-    if index is not None:
-        if n_centroids is not None:
-            raise ValueError(
-                "n_centroids is a build parameter and is ignored when "
-                "a prebuilt index= is passed — the cell count is baked "
-                "into the index; build it with ivf_assign(emb, "
-                "n_centroids) and drop the argument here")
-        cents, assign = index
-    else:
-        cents, assign = ivf_assign(
-            emb, 8 if n_centroids is None else n_centroids)
-    queries = emb.filter(F.col("vec_id") < num_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    from pyspark.sql.window import Window
-
+    """IVF approximate top-k over an :func:`ivf_assign` index: each
+    query probes its ``nprobe`` closest centroids and re-ranks only
+    the vectors assigned to them. Candidate count ~
+    nprobe/n_centroids of the corpus; recall < 1 by design. The cell
+    count must grow ~sqrt(n) for IVF to both prune and recall at
+    scale (BASELINE.md Round 12 has the measured ladder)."""
+    cents, assign = index
     qc = (
-        F.broadcast(queries)
+        F.broadcast(_query_rows(emb, num_queries))
         .join(F.broadcast(cents))
         .select(
             "query_id", "q", "centroid_id",
@@ -306,29 +269,14 @@ def cosine_topk_ivf(
         .filter(F.col("_rn") <= nprobe)
         .select("query_id", "q", "centroid_id")
     )
-    cands = spread_for_compute(emb).select(
+    cells = spread_for_compute(emb).select(
         F.col("vec_id").alias("neighbor_id"), "embedding"
     ).join(assign.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-    scored = (
+    return _rerank_topk(
         F.broadcast(probes)
-        .join(cands, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q"), F.col("embedding")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rnk").cast("bigint").alias("rnk"), "cos",
-        )
+        .join(cells, "centroid_id")
+        .filter(F.col("query_id") != F.col("neighbor_id")),
+        k,
     )
 
 
@@ -345,86 +293,44 @@ def cosine_topk_lsh(
     emb: DataFrame,
     k: int = 5,
     num_queries: int = 10,
-    sign_bits: int | None = 4,
+    sign_bits: int = 4,
     probe_radius: int = 1,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's
     sign-pattern bucket plus (multi-probe) every bucket within Hamming
     distance ``probe_radius`` (<=2) — the standard recall/cost lever.
-    All deterministic (axis-aligned hyperplanes — measured BETTER than
-    pseudo-random Rademacher planes on these fixtures, whose cluster
-    signal lives in the leading coordinates), so the oracle replays it
-    exactly; recall < 1 by design. Probed-bucket count is
-    ``1 + C(bits,1) [+ C(bits,2)]`` of ``2^bits`` — at production bit
-    widths (16+) radius 2 still prunes >99% of buckets.
-
-    ``sign_bits=None`` selects the bit count adaptively from the row
-    count (:func:`..operators.dedup.adaptive_sign_bits` — the llm05
-    device), which is the SCALE setting: the gated llm07 literal
-    (4 bits) probes 5 of 16 buckets ≈ 31% of the corpus at ANY n,
-    i.e. its cost approaches brute force while its recall stays high.
-    MEASURED (``scripts/recall_probe.py --mode ann-lsh`` at 1M
-    clustered vectors, BASELINE.md Round 12; recall@5 vs exact brute
-    force): gated (4 bits, radius 1) recall 0.97 scoring ~31%;
-    adaptive (15 bits, radius 2) recall 0.95 scoring **0.37%** — equal
-    recall at ~80x less scored work, because bits grow log2(n)
-    (constant bucket occupancy) while the radius-2 probe set grows
-    only quadratically in bits. BASELINE.md Round 12 has the full
-    ladder table."""
+    All deterministic (axis-aligned hyperplanes, the buckets of
+    dedup.embedding_near_dup_pairs), so the oracle replays it exactly;
+    recall < 1 by design. Probed-bucket count is ``1 + C(bits,1)
+    [+ C(bits,2)]`` of ``2^bits``: at a fixed bit count the probe
+    covers a fixed share of the corpus at any n, so at scale size
+    ``sign_bits`` with :func:`..operators.dedup.adaptive_sign_bits`
+    (BASELINE.md Round 12 has the measured ladder)."""
     if probe_radius > 2:
         raise ValueError("probe_radius > 2 not implemented")
-    if sign_bits is None:
-        sign_bits = adaptive_sign_bits(emb.count())
     b = spread_for_compute(emb).select(
         "vec_id", "embedding", _sign_bucket(sign_bits).alias("bucket"))
     probes = [F.col("qb")]
     if probe_radius >= 1:
         probes += [_flip_bit(F.col("qb"), i + 1) for i in range(sign_bits)]
     if probe_radius >= 2:
-        import itertools
-
         probes += [
             _flip_bit(_flip_bit(F.col("qb"), i + 1), j + 1)
             for i, j in itertools.combinations(range(sign_bits), 2)
         ]
-    queries = (
-        b.filter(F.col("vec_id") < num_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q"),
-            F.col("bucket").alias("qb"),
-        )
-        .select(
-            "query_id", "q", F.explode(F.array(*probes)).alias("probe")
-        )
+    queries = _query_rows(
+        b, num_queries, F.col("bucket").alias("qb")
+    ).select("query_id", "q", F.explode(F.array(*probes)).alias("probe"))
+    cands = F.broadcast(queries).join(
+        b.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding"),
+            F.col("bucket"),
+        ),
+        (F.col("probe") == F.col("bucket"))
+        & (F.col("query_id") != F.col("neighbor_id")),
     )
-    scored = (
-        F.broadcast(queries)
-        .join(
-            b.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding"),
-                F.col("bucket"),
-            ),
-            (F.col("probe") == F.col("bucket"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q"), F.col("embedding")), 6).alias("cos"),
-        )
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.col("rnk").cast("bigint").alias("rnk"), "cos")
-    )
+    return _rerank_topk(cands, k)
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -448,16 +354,16 @@ def _global_sub_len(emb: DataFrame, m: int) -> int:
 
 
 def _subvectors(
-    emb: DataFrame, m: int, id_col: str, out_id: str, sub_len: int
+    emb: DataFrame, m: int, out_id: str, sub_len: int
 ) -> DataFrame:
-    """(id, subspace, sub) rows: the embedding split into ``m``
+    """(out_id, subspace, sub) rows: the embedding split into ``m``
     contiguous sub-vectors of ``sub_len`` each (a GLOBAL constant from
     :func:`_global_sub_len`, not per-row ``size(embedding)/m`` — a
     per-row split would silently diverge from the oracle's global MIN
     if dimensions ever varied across rows)."""
     sub_len = F.lit(int(sub_len))
     return (
-        emb.select(F.col(id_col).alias(out_id), "embedding")
+        emb.select(F.col("vec_id").alias(out_id), "embedding")
         .select(
             out_id,
             F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("subspace"),
@@ -474,36 +380,32 @@ def _subvectors(
 
 
 def pq_encode(
-    emb: DataFrame,
-    m: int = 4,
-    codebook_k: int = 16,
-    id_col: str = "vec_id",
-    sub_len: int | None = None,
+    emb: DataFrame, m: int = 4, codebook_k: int = 16
 ) -> tuple[DataFrame, DataFrame]:
-    """Product quantization: split each vector into ``m`` sub-vectors
-    and code each against a per-subspace codebook of ``codebook_k``
-    centroids (deterministic: the sub-vectors of the ``codebook_k``
-    lowest-id vectors — swap for trained k-means codebooks in
-    production; the structure and the oracle-exactness device are the
-    same as :func:`ivf_assign`).
+    """The product-quantization index that :func:`cosine_topk_pq`
+    serves from: each vector split into ``m`` sub-vectors of
+    ``min(dim) // m`` elements, each coded against a per-subspace
+    codebook of ``codebook_k`` centroids (deterministic: the
+    sub-vectors of the ``codebook_k`` lowest-id vectors — swap for
+    trained k-means codebooks in production; the structure and the
+    oracle-exactness device are the same as :func:`ivf_assign`).
 
     Returns (codebooks, codes): codebooks (subspace, centroid_id,
     cvec) — m*k rows, broadcast everywhere; codes (vec_id, subspace,
-    code) — the 100 TB artifact: m small ints per vector instead of
-    the full float array (~16x smaller for 64-dim float32 at m=4),
-    which is what makes exhaustive ADC scans bandwidth-feasible.
-    Encoding is one narrow pass: m rows per vector joined against the
-    broadcast codebooks, argmin per (vector, subspace) with
-    lowest-centroid tie-break.
+    code) — m small ints per vector instead of the full float array
+    (~16x smaller for 64-dim float32 at m=4), the artifact an
+    exhaustive ADC scan reads. Encoding is one narrow pass: m rows
+    per vector joined against the broadcast codebooks, argmin per
+    (vector, subspace) with lowest-centroid tie-break. The
+    codebooks' geometry ``(m, sub_len)`` seeds the index geometry
+    cache, so serving from the in-memory index runs no extra job.
     """
-    if sub_len is None:
-        sub_len = _global_sub_len(emb, m)
+    sub_len = _global_sub_len(emb, m)
     books = _subvectors(
-        emb.filter(F.col(id_col) < codebook_k), m, id_col, "centroid_id",
-        sub_len,
+        emb.filter(F.col("vec_id") < codebook_k), m, "centroid_id", sub_len,
     ).withColumnRenamed("sub", "cvec")
     scored = (
-        _subvectors(spread_for_compute(emb), m, id_col, "vec_id", sub_len)
+        _subvectors(spread_for_compute(emb), m, "vec_id", sub_len)
         .join(F.broadcast(books), "subspace")
         .select(
             "vec_id",
@@ -512,8 +414,6 @@ def pq_encode(
             l2sq(F.col("sub"), F.col("cvec")).alias("d"),
         )
     )
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("vec_id", "subspace").orderBy(
         F.col("d").asc(), F.col("centroid_id")
     )
@@ -522,20 +422,38 @@ def pq_encode(
         .filter(F.col("_rn") == 1)
         .select("vec_id", "subspace", F.col("centroid_id").alias("code"))
     )
+    _INDEX_GEOM_CACHE[books] = (m, sub_len)
     return books, codes
+
+
+def _pq_geometry(books: DataFrame) -> tuple[int, int]:
+    """``(m, sub_len)`` of a PQ codebook table: seeded by
+    :func:`pq_encode`, else read in one aggregate (``max(subspace)+1``
+    and the width of the subspace-0 codebook vectors) and memoized
+    like the band tables' geometry."""
+    geom = _INDEX_GEOM_CACHE.get(books)
+    if geom is None:
+        row = books.agg(
+            F.max("subspace").alias("mx"),
+            F.min(F.when(F.col("subspace") == 0, F.size("cvec"))).alias("d"),
+        ).first()
+        if row["d"] is None:
+            raise ValueError("PQ index has no subspace-0 codebook")
+        geom = (int(row["mx"]) + 1, int(row["d"]))
+        _INDEX_GEOM_CACHE[books] = geom
+    return geom
 
 
 def cosine_topk_pq(
     emb: DataFrame,
+    index: tuple[DataFrame, DataFrame],
     k: int = 5,
     num_queries: int = 10,
-    m: int | None = None,
-    codebook_k: int | None = None,
     shortlist: int = 25,
-    index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """PQ ANN top-k: asymmetric distance computation (ADC) over PQ
-    codes, exact cosine re-rank of the shortlist.
+    """PQ ANN top-k over a :func:`pq_encode` index: asymmetric
+    distance computation (ADC) over the codes, exact cosine re-rank of
+    the shortlist.
 
     Per query: a lookup table of l2sq(query_sub, centroid) for every
     (subspace, centroid) — num_queries*m*codebook_k rows, broadcast —
@@ -543,71 +461,17 @@ def cosine_topk_pq(
     distance is m table lookups + a sum per (query, vector): the scan
     touches only the codes, never the vectors. The ``shortlist`` best
     by ADC (ranked on ROUND(d,6) with id tie-break for cross-engine
-    stability) are re-scored with exact cosine on the full vectors.
-    At 100 TB the ADC scan pairs with IVF partition pruning
-    (:func:`cosine_topk_ivf`) — the standard IVFPQ split; recall < 1
-    by design (measured vs :func:`cosine_topk` in tests).
-
-    ``index`` accepts a prebuilt ``(codebooks, codes)`` pair (the
-    :func:`pq_encode` output) and skips the encode pass — the same
-    one-time-index lesson the r12 ANN probe taught
-    ``cosine_topk_ivf``: codes are the durable 100 TB artifact
-    (written once, ~16x smaller than the vectors), and re-encoding
-    per query batch re-pays the n·m·codebook_k argmin scan every
-    call. BOTH geometry facts are read from the index itself, never
-    trusted from the caller (ADVICE r12): ``sub_len`` from the
-    subspace-0 codebook vectors, and ``m`` from the index's subspace
-    count (``max(subspace)+1``) — a caller-supplied ``m`` smaller
-    than the index's would silently ADC-sum a subset of subspaces,
-    and a larger one would NULL every adist (the missing per-subspace
-    sums) and degenerate the shortlist to a vec_id-ordered cut, so an
-    explicit ``m`` that mismatches the index raises. ``codebook_k``
-    is a build parameter the index path never reads; passing it with
-    ``index=`` raises the same way. ``sub_len`` is likewise not
-    re-derived from the query-time ``emb`` — re-deriving would
-    silently misalign every LUT slice against the stored codes the
-    moment the serving corpus's minimum width drifts from the
-    build-time one (r12 review). Defaults ``m=None``/
-    ``codebook_k=None`` resolve to 4/16 on the build path.
+    stability) go to the exact re-rank. Recall < 1 by design. The
+    geometry ``(m, sub_len)`` comes from the index (never re-derived
+    from the serving ``emb``, whose minimum width may have drifted
+    from the build-time one); an index without a subspace-0 codebook
+    raises.
     """
-    if index is not None:
-        if codebook_k is not None:
-            raise ValueError(
-                "codebook_k is a build parameter and is ignored when a "
-                "prebuilt index= is passed — it is baked into the "
-                "codebooks; build with pq_encode(emb, m, codebook_k) "
-                "and drop the argument here")
-        books, codes = index
-        row = books.agg(
-            F.max("subspace").alias("mx"),
-            F.min(
-                F.when(F.col("subspace") == 0, F.size("cvec"))
-            ).alias("d"),
-        ).first()
-        if row is None or row["d"] is None:
-            raise ValueError("prebuilt PQ index has no subspace-0 codebook")
-        sub_len = int(row["d"])
-        m_idx = int(row["mx"]) + 1
-        if m is None:
-            m = m_idx
-        elif m != m_idx:
-            raise ValueError(
-                f"m={m} does not match the prebuilt index's {m_idx} "
-                "subspaces — the ADC sum would cover the wrong subspace "
-                "set; omit m (it is read from the index) or pass "
-                f"m={m_idx}")
-    else:
-        m = 4 if m is None else m
-        codebook_k = 16 if codebook_k is None else codebook_k
-        sub_len = _global_sub_len(emb, m)
-        books, codes = pq_encode(emb, m, codebook_k, sub_len=sub_len)
-    queries = emb.filter(F.col("vec_id") < num_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
+    books, codes = index
+    m, sub_len = _pq_geometry(books)
     lut = (
         _subvectors(
-            emb.filter(F.col("vec_id") < num_queries), m, "vec_id",
-            "query_id", sub_len,
+            emb.filter(F.col("vec_id") < num_queries), m, "query_id", sub_len,
         )
         .join(F.broadcast(books), "subspace")
         .select(
@@ -640,8 +504,6 @@ def cosine_topk_pq(
             "query_id", "vec_id", F.round(seq_sum, 6).alias("adist")
         )
     )
-    from pyspark.sql.window import Window
-
     ws = Window.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("vec_id")
     )
@@ -650,30 +512,12 @@ def cosine_topk_pq(
         .filter(F.col("_rn") <= shortlist)
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    rer = (
+    return _rerank_topk(
         short.join(
             emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
             "neighbor_id",
-        )
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q"), F.col("embedding")), 6).alias("cos"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rnk").cast("bigint").alias("rnk"),
-            "cos",
-        )
+        ).join(F.broadcast(_query_rows(emb, num_queries)), "query_id"),
+        k,
     )
 
 

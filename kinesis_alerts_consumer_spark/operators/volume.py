@@ -104,19 +104,6 @@ def salted_log_volume(parsed: DataFrame, salt_n: int = 16) -> DataFrame:
     )
 
 
-def windowed_log_volume(
-    parsed: DataFrame, window: str = "1 minute", watermark: str = "2 minutes"
-) -> DataFrame:
-    """Streaming/event-time form of :func:`log_volume`: the reference
-    flushes on a 1-minute processing-time ticker (main.go:81-82);
-    the engine's event-time window + watermark is the stated
-    divergence (SURVEY.md §2C streaming notes)."""
-    k = _keys(parsed).withWatermark("timestamp", watermark)
-    return k.groupBy(
-        F.window("timestamp", window).alias("w"), "env", "app", "team"
-    ).agg(F.count("*").alias("cnt"), F.sum("num_bytes").alias("size"))
-
-
 def batch_log_volume(parsed_batch: DataFrame, batch_id: int = 0) -> DataFrame:
     """Processing-time A1 rollup of ONE micro-batch, stamped with its
     batch id.
@@ -126,8 +113,8 @@ def batch_log_volume(parsed_batch: DataFrame, batch_id: int = 0) -> DataFrame:
     a late record lands in the CURRENT tick's bucket, not its
     event-time bucket. A Spark micro-batch IS the tick: aggregate the
     batch's own records and append the deltas; no watermark, no
-    cross-batch state. :func:`windowed_log_volume` is the event-time
-    divergence (late data re-bucketed by record timestamp).
+    cross-batch state. The engine's event-time rollup, which
+    re-buckets late data by record timestamp, is st01.
     """
     return log_volume(parsed_batch).withColumn(
         "batch_id", F.lit(batch_id).cast("bigint")

@@ -304,9 +304,9 @@ ORDER BY query_id, rnk
 
 
 def q_ann_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _tables(spark, sf_dir)
+    emb = _tables(spark, sf_dir)["embeddings"]
     return S.cosine_topk_ivf(
-        t["embeddings"], k=5, num_queries=10, n_centroids=8, nprobe=2
+        emb, S.ivf_assign(emb, 8), k=5, num_queries=10, nprobe=2
     ).orderBy("query_id", "rnk")
 
 
@@ -794,8 +794,11 @@ _PQ = {"k": 5, "num_queries": 10, "m": 8, "codebook_k": 16, "shortlist": 200}
 
 
 def q_ann_cosine_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _tables(spark, sf_dir)
-    return S.cosine_topk_pq(t["embeddings"], **_PQ).orderBy("query_id", "rnk")
+    emb = _tables(spark, sf_dir)["embeddings"]
+    return S.cosine_topk_pq(
+        emb, S.pq_encode(emb, _PQ["m"], _PQ["codebook_k"]), k=_PQ["k"],
+        num_queries=_PQ["num_queries"], shortlist=_PQ["shortlist"],
+    ).orderBy("query_id", "rnk")
 
 
 # l2sq via the three-dot identity — the SAME arithmetic the Spark side

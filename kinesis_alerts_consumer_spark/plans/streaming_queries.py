@@ -856,6 +856,7 @@ def absorbing_dedup_step(
     import os
 
     from ..operators.dedup import (
+        checkpoint_index,
         jaccard_pairs,
         lsh_build_index,
         lsh_candidate_pairs,
@@ -869,10 +870,12 @@ def absorbing_dedup_step(
     idx = spark.read.parquet(idx_path)
     # the batch's band table, computed ONCE and fed to the probe,
     # the within-batch pass, AND the absorb — without this the
-    # lifecycle paid the batch signature pass three times per batch
-    batch_idx = lsh_build_index(
+    # lifecycle paid the batch signature pass three times per batch.
+    # checkpoint_index carries the build-site geometry, so neither
+    # consumer re-reads max(band) from the checkpoint
+    batch_idx = checkpoint_index(lsh_build_index(
         batch_df, bands=bands, rows_per_band=rows_per_band,
-        shingle=shingle).localCheckpoint(eager=True)
+        shingle=shingle))
     if not batch_idx.take(1):
         # a degenerate batch (empty, or every doc shorter than the
         # shingle) has no band rows: nothing can pair, and the

@@ -94,10 +94,10 @@ def volume_rollup_processing_time(
     (metrics.go:79-103): each micro-batch is the 1-minute tick —
     aggregate the batch's own records by (env, app, team) and append
     the per-tick deltas. Accumulate/ship/reset; a late record counts
-    in the tick it ARRIVES in. Contrast
-    :func:`..operators.volume.windowed_log_volume`, which re-buckets
-    by event time under a watermark (the documented divergence,
-    SURVEY.md §2C)."""
+    in the tick it ARRIVES in. Contrast st01
+    (``plans.streaming_queries.q_stream_hourly_rollup``), the
+    engine's event-time rollup, which re-buckets by event time under
+    a watermark (the documented divergence, SURVEY.md §2C)."""
     from ..functions.kayvee import parse_lines
     from ..operators.volume import batch_log_volume
 

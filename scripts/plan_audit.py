@@ -125,9 +125,10 @@ def main() -> None:
         "plan-asserted text-free in tests/test_plans.py — run llm35's",
         "plan at scale, keep dq10 for SQL portability.",
         "",
-        "Prebuilt-index serving (r13): the `cosine_topk_ivf(index=)` /",
-        "`cosine_topk_pq(index=)` levers are plan-asserted in",
-        "tests/test_llm_queries.py::"
+        "Index serving: llm13 (`cosine_topk_ivf`) and llm24",
+        "(`cosine_topk_pq`) serve from the index that `ivf_assign` /",
+        "`pq_encode` builds, the path plan-asserted on written indexes",
+        "in tests/test_llm_queries.py::"
         "test_prebuilt_index_probes_prune_partitioned_tables — a",
         "centroid_id-partitioned assignments table probed through the",
         "IVF index path carries a DynamicPruningExpression in the",

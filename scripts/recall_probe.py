@@ -343,7 +343,9 @@ def run_pairs(spark, a, corpus, batch, d) -> tuple:
 
 
 def run_ann(a, corpus) -> dict:
-    """recall@TOPK of the mode's index against brute-force top-k."""
+    """recall@TOPK of the mode's index against brute-force top-k.
+    ann-ivf and ann-pq build their index inside the timed call, so
+    ``wall_s`` is build plus serve."""
     q = dict(k=TOPK, num_queries=NUM_QUERIES)
     truth_rows, truth_s = _timed(
         lambda: similarity.cosine_topk(corpus, **q).collect())
@@ -351,7 +353,8 @@ def run_ann(a, corpus) -> dict:
         centroids = a.centroids or max(8, math.isqrt(a.n))
         sizing = [centroids, a.nprobe]
         fn = lambda: similarity.cosine_topk_ivf(  # noqa: E731
-            corpus, n_centroids=centroids, nprobe=a.nprobe, **q)
+            corpus, similarity.ivf_assign(corpus, centroids),
+            nprobe=a.nprobe, **q)
     elif a.mode == "ann-lsh":
         sizing = [a.sign_bits or dedup.adaptive_sign_bits(a.n), a.radius]
         fn = lambda: similarity.cosine_topk_lsh(  # noqa: E731
@@ -359,7 +362,8 @@ def run_ann(a, corpus) -> dict:
     else:
         sizing = [8, 16, a.shortlist]
         fn = lambda: similarity.cosine_topk_pq(  # noqa: E731
-            corpus, m=8, codebook_k=16, shortlist=a.shortlist, **q)
+            corpus, similarity.pq_encode(corpus, 8, 16),
+            shortlist=a.shortlist, **q)
     rows, wall = _timed(lambda: fn().collect())
 
     def by_query(rs) -> dict:

@@ -1,6 +1,6 @@
 """The MinHash signature pass, the exact-Jaccard verify and the banded
 incremental probes: values against independent references, and the
-number of Spark jobs one probe costs."""
+number of Spark jobs one probe and one st10 micro-batch cost."""
 
 from __future__ import annotations
 
@@ -176,3 +176,56 @@ def test_incremental_probe_job_count(spark, tmp_path):
     assert (50, 1000) in {(r.a, r.b) for r in hp_probe()}
     assert _count_jobs(spark, lsh_probe) <= 21
     assert _count_jobs(spark, hp_probe) <= 19
+
+
+def test_absorbing_step_job_count(spark, tmp_path):
+    """Jobs for one st10 micro-batch (``absorbing_dedup_step``: probe,
+    within-batch pairs, sink, absorb) against a parquet-read index.
+    The batch's band table is checkpointed through
+    ``checkpoint_index``, which carries the build-site geometry, so
+    neither the probe's ``new_index`` check nor the within-batch
+    ``lsh_candidate_pairs(index=)`` runs a ``max(band)`` aggregate on
+    the checkpoint: 26 jobs here, against 28 with a bare
+    ``localCheckpoint``. The count is a ceiling, like the probe pin
+    above."""
+    import os
+
+    from kinesis_alerts_consumer_spark.operators.dedup import lsh_build_index
+    from kinesis_alerts_consumer_spark.plans.streaming_queries import (
+        absorbing_dedup_step,
+    )
+
+    old = spark.createDataFrame(
+        [(i, f"shared common tokens alpha beta gamma delta doc {i}")
+         for i in range(30)]
+        + [(50, "the quick brown fox jumps over the lazy dog today")],
+        "doc_id long, text string")
+    new = spark.createDataFrame(
+        [(1000, "the quick brown fox jumps over the lazy dog today"),
+         (1001, "novel text that matches nothing in the old corpus"),
+         (1002, "novel text that matches nothing in the old corpus too")],
+        "doc_id long, text string")
+
+    def step(root):
+        idx_path = os.path.join(root, "index")
+        corpus_path = os.path.join(root, "corpus")
+        out = os.path.join(root, "out")
+        lsh_build_index(old, bands=2, rows_per_band=2, shingle=3) \
+            .write.partitionBy("band").parquet(idx_path)
+        old.write.parquet(corpus_path)
+
+        def run():
+            absorbing_dedup_step(
+                spark, new, 0, idx_path, corpus_path, out, bands=2,
+                rows_per_band=2, shingle=3, threshold=0.5, max_bucket=64)
+
+        return run, os.path.join(out, "b0")
+
+    # warm on one copy of the tables, count on a fresh one
+    warm, _ = step(str(tmp_path / "warm"))
+    warm()
+    counted, b0 = step(str(tmp_path / "counted"))
+    jobs = _count_jobs(spark, counted)
+    pairs = {(r.a, r.b) for r in spark.read.parquet(b0).collect()}
+    assert {(50, 1000), (1001, 1002)} <= pairs, pairs
+    assert jobs <= 26, jobs

@@ -150,59 +150,6 @@ def test_lsh_topk_recall_vs_exact(spark):
     assert recall > 0.2, f"LSH recall collapsed: {recall}"
 
 
-def test_ann_scale_apis(spark):
-    """The scale levers on the ANN ladder (certified at 1M by
-    ``scripts/recall_probe.py --mode ann-ivf`` and ``--mode ann-lsh``,
-    BASELINE.md Round 12): a prebuilt
-    (centroids, assignments) index on cosine_topk_ivf must reproduce
-    the inline form exactly (index build is one-time at scale, not
-    per query batch), and sign_bits=None on cosine_topk_lsh must
-    equal the explicit adaptive_sign_bits(n) call. Gated llm07/llm13
-    literals untouched."""
-    from kinesis_alerts_consumer_spark.operators.dedup import (
-        adaptive_sign_bits,
-    )
-    from kinesis_alerts_consumer_spark.operators.similarity import (
-        cosine_topk_ivf,
-        cosine_topk_lsh,
-        ivf_assign,
-    )
-    from kinesis_alerts_consumer_spark.sources import register_tables
-
-    emb = register_tables(spark, SF_SMOKE)["embeddings"]
-
-    inline = cosine_topk_ivf(emb, k=5, num_queries=5,
-                             n_centroids=8, nprobe=2)
-    idx = ivf_assign(emb, n_centroids=8)
-    prebuilt = cosine_topk_ivf(emb, k=5, num_queries=5, nprobe=2,
-                               index=idx)
-    key = lambda r: (r.query_id, r.rnk, r.neighbor_id, r.cos)  # noqa: E731
-    assert sorted(map(key, inline.collect())) == \
-        sorted(map(key, prebuilt.collect()))
-
-    n = emb.count()
-    auto = cosine_topk_lsh(emb, k=5, num_queries=5, sign_bits=None)
-    explicit = cosine_topk_lsh(emb, k=5, num_queries=5,
-                               sign_bits=adaptive_sign_bits(n))
-    assert sorted(map(key, auto.collect())) == \
-        sorted(map(key, explicit.collect()))
-
-    # PQ: same one-time-index lesson — prebuilt (codebooks, codes)
-    # reproduces the inline form exactly
-    from kinesis_alerts_consumer_spark.operators.similarity import (
-        cosine_topk_pq,
-        pq_encode,
-    )
-
-    pq_inline = cosine_topk_pq(emb, k=5, num_queries=5, m=4,
-                               codebook_k=16, shortlist=25)
-    pq_idx = pq_encode(emb, m=4, codebook_k=16)
-    pq_prebuilt = cosine_topk_pq(emb, k=5, num_queries=5, m=4,
-                                 shortlist=25, index=pq_idx)
-    assert sorted(map(key, pq_inline.collect())) == \
-        sorted(map(key, pq_prebuilt.collect()))
-
-
 def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
     """A degenerate band value (many identical docs) must not explode
     the candidate self-join: with max_bucket=8, a 20-doc identical
@@ -707,53 +654,29 @@ def test_hyperplane_dim_inference_skips_empty_and_null(spark):
         empty, bands=2, bits_per_band=2).count() == 0
 
 
-def test_ann_index_build_param_validation(spark):
-    """ADVICE r12: prebuilt-index calls must not silently drop or
-    mistrust build parameters — n_centroids/codebook_k raise when
-    passed alongside index=, and PQ's m is READ from the index
-    (max(subspace)+1), raising on an explicit mismatch instead of
-    ADC-summing the wrong subspace set."""
-    import pytest
-
-    from kinesis_alerts_consumer_spark.operators.similarity import (
-        cosine_topk_ivf,
-        cosine_topk_pq,
-        ivf_assign,
-        pq_encode,
-    )
-    from kinesis_alerts_consumer_spark.sources import register_tables
-
-    emb = register_tables(spark, SF_SMOKE)["embeddings"]
-
-    idx = ivf_assign(emb, n_centroids=8)
-    with pytest.raises(ValueError, match="n_centroids"):
-        cosine_topk_ivf(emb, n_centroids=8, index=idx)
-
-    pq_idx = pq_encode(emb, m=4, codebook_k=16)
-    with pytest.raises(ValueError, match="codebook_k"):
-        cosine_topk_pq(emb, codebook_k=16, index=pq_idx)
-    with pytest.raises(ValueError, match="subspaces"):
-        cosine_topk_pq(emb, m=8, index=pq_idx)
-    # m omitted -> read from the index; equals the explicit-match call
-    k = lambda r: (r.query_id, r.rnk, r.neighbor_id, r.cos)  # noqa: E731
-    derived = cosine_topk_pq(emb, num_queries=5, index=pq_idx)
-    explicit = cosine_topk_pq(emb, num_queries=5, m=4, index=pq_idx)
-    assert sorted(map(k, derived.collect())) == \
-        sorted(map(k, explicit.collect()))
-
-
 def test_prebuilt_index_probes_prune_partitioned_tables(spark, tmp_path):
-    """VERDICT r12 item 5: the r12 claim for cosine_topk_ivf(index=)
-    is 'partition-pruned probes at 100 TB' — prove it on the plan,
-    ext07-style. The assignments table written partitionBy
-    (centroid_id) and probed through the prebuilt-index path must get
-    a DYNAMIC partition-pruning subquery on its scan (the probe
-    centroids are runtime values, so the pruning is DPP, not a static
-    PartitionFilter): only the nprobe cells' files are read, which is
-    the entire IVF serving economics. For PQ the economics are bytes,
-    not partitions: the ADC-phase scan must read ONLY the codes
-    columns (no vector column in any codes-side ReadSchema) — the
-    16x-smaller artifact is the thing being scanned."""
+    """The IVF and PQ operators serve from their index, and a written
+    index is read the way serving at scale needs (BASELINE.md Round
+    12):
+
+    - IVF: an assignments table written ``partitionBy(centroid_id)``
+      gets a dynamic partition-pruning subquery on its scan (the
+      probe centroids are runtime values, so the pruning is DPP, not
+      a static PartitionFilter): only the nprobe cells' files are
+      read.
+    - PQ: every ADC-phase scan of the codes reads code columns only,
+      never a vector column.
+
+    Each returns the same rows as its in-memory index. For PQ that
+    also compares the two ways the geometry ``(m, sub_len)`` is
+    found: the in-memory codebooks carry ``pq_encode``'s cache seed,
+    the parquet-read ones pay the ``books`` aggregate. A codebook
+    table without a subspace-0 codebook raises."""
+    from pyspark.sql import functions as F
+
+    from kinesis_alerts_consumer_spark.operators.dedup import (
+        _INDEX_GEOM_CACHE,
+    )
     from kinesis_alerts_consumer_spark.operators.similarity import (
         cosine_topk_ivf,
         cosine_topk_pq,
@@ -763,6 +686,7 @@ def test_prebuilt_index_probes_prune_partitioned_tables(spark, tmp_path):
     from kinesis_alerts_consumer_spark.sources import register_tables
 
     emb = register_tables(spark, SF_SMOKE)["embeddings"]
+    key = lambda r: (r.query_id, r.rnk, r.neighbor_id, r.cos)  # noqa: E731
 
     cents, assign = ivf_assign(emb, n_centroids=8)
     assign.write.partitionBy("centroid_id").parquet(
@@ -770,7 +694,7 @@ def test_prebuilt_index_probes_prune_partitioned_tables(spark, tmp_path):
     cents.write.parquet(str(tmp_path / "cents"))
     a2 = spark.read.parquet(str(tmp_path / "assign"))
     c2 = spark.read.parquet(str(tmp_path / "cents"))
-    q = cosine_topk_ivf(emb, k=5, num_queries=3, nprobe=2, index=(c2, a2))
+    q = cosine_topk_ivf(emb, (c2, a2), k=5, num_queries=3, nprobe=2)
     rows = q.collect()
     assert rows  # the probe actually served results
     plan = q._jdf.queryExecution().executedPlan().toString()
@@ -787,20 +711,21 @@ def test_prebuilt_index_probes_prune_partitioned_tables(spark, tmp_path):
         and "centroid_id" in ln
     ]
     assert pruned_scans, plan[:2000]
-    # equivalence: pruned probes == the inline build (same fixture)
-    key = lambda r: (r.query_id, r.rnk, r.neighbor_id, r.cos)  # noqa: E731
-    inline = cosine_topk_ivf(emb, k=5, num_queries=3,
-                             n_centroids=8, nprobe=2)
-    assert sorted(map(key, rows)) == sorted(map(key, inline.collect()))
+    # equivalence: pruned probes == the in-memory index
+    in_memory = cosine_topk_ivf(
+        emb, (cents, assign), k=5, num_queries=3, nprobe=2)
+    assert sorted(map(key, rows)) == sorted(map(key, in_memory.collect()))
 
     books, codes = pq_encode(emb, m=4, codebook_k=16)
     codes.write.parquet(str(tmp_path / "codes"))
     books.write.parquet(str(tmp_path / "books"))
     codes2 = spark.read.parquet(str(tmp_path / "codes"))
     books2 = spark.read.parquet(str(tmp_path / "books"))
-    pq = cosine_topk_pq(emb, k=5, num_queries=3, shortlist=25,
-                        index=(books2, codes2))
-    assert pq.collect()
+    assert books2 not in _INDEX_GEOM_CACHE  # a read pays the aggregate
+    pq = cosine_topk_pq(emb, (books2, codes2), k=5, num_queries=3,
+                        shortlist=25)
+    pq_rows = pq.collect()
+    assert pq_rows
     pq_plan = pq._jdf.queryExecution().executedPlan().toString()
     # identify the codes scan by its output column (Location paths
     # truncate, see above): the only scans projecting `code#`
@@ -812,6 +737,15 @@ def test_prebuilt_index_probes_prune_partitioned_tables(spark, tmp_path):
     # the ADC scan reads the compact code columns only — never a
     # vector column
     assert all("embedding" not in ln for ln in code_scans), code_scans
+    # the aggregate reads the geometry pq_encode seeded, and both
+    # indexes serve the same rows
+    assert _INDEX_GEOM_CACHE[books2] == _INDEX_GEOM_CACHE[books]
+    in_memory = cosine_topk_pq(emb, (books, codes), k=5, num_queries=3,
+                               shortlist=25)
+    assert sorted(map(key, pq_rows)) == \
+        sorted(map(key, in_memory.collect()))
+    with pytest.raises(ValueError, match="subspace-0"):
+        cosine_topk_pq(emb, (books2.filter(F.col("subspace") > 0), codes2))
 
 
 def test_lsh_incremental_pairs_semantics(spark):
@@ -1463,8 +1397,8 @@ def test_adaptive_sign_bits_constant_occupancy():
 
 
 def test_pq_topk_recall_vs_exact(spark):
-    """PQ ADC (m=4, 16-entry codebooks) + exact re-rank of a 25-deep
-    shortlist: recall@5 against brute force stays well above chance,
+    """llm24's PQ ADC (m=8, 16-entry codebooks) + exact re-rank of a
+    200-deep shortlist: recall@5 against brute force stays well above chance,
     and every returned cosine is an EXACT cosine (re-ranked), so any
     overlapping (query, neighbor) pair agrees with brute force."""
     exact = {
